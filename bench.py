@@ -639,10 +639,11 @@ def main() -> None:
     try:  # IVF index build (train once / probe many): a serving ANN
         # engine trains its coarse quantizer OFFLINE and answers query
         # batches against the persisted centroids — FAISS's train() vs
-        # search() split. Training here populates the deterministic
-        # per-(corpus, params) centroid cache (operators/similarity.py)
-        # so the timed ann_ivf_topk entry measures the SERVE path
-        # (assign + probed-list join + rerank), not index construction.
+        # search() split. Training here fills the trained-artifact
+        # store (operators/index_store.py, keyed by corpus fingerprint
+        # and params) so the timed ann_ivf_topk entry measures the SERVE
+        # path (assign + probed-list join + rerank), not index
+        # construction.
         from dataengineer_job_scraper_etl_spark.operators.similarity import (
             ivf_topk,
         )
@@ -658,7 +659,7 @@ def main() -> None:
         e, q = _vectors(spark, sf_dir)
         try:
             ivf_topk(
-                e, q, dim=EMBED_DIM, k=10, centroid_cache_key=sf_dir
+                e, q, dim=EMBED_DIM, k=10
             ).write.format("noop").mode("overwrite").save()
         except Exception as exc:  # noqa: BLE001
             print(
@@ -669,7 +670,7 @@ def main() -> None:
         print(f"WARN bench: ANN warm-up setup failed: {exc!r}", file=sys.stderr)
         e = q = None
     try:  # IVF-PQ index build: same train-once/probe-many split — the
-        # coarse quantizer shares the IVF cache tuple (already trained
+        # coarse quantizer shares the IVF store key (already trained
         # above); this trains the m per-subspace PQ codebooks so the
         # timed ann_ivfpq_topk entry measures probe + ADC + rerank.
         from dataengineer_job_scraper_etl_spark.operators.similarity import (
@@ -678,13 +679,14 @@ def main() -> None:
 
         if e is not None:
             ivfpq_topk(
-                e, q, dim=EMBED_DIM, k=10, centroid_cache_key=sf_dir
+                e, q, dim=EMBED_DIM, k=10
             ).write.format("noop").mode("overwrite").save()
     except Exception as exc:  # noqa: BLE001
         print(f"WARN bench: IVF-PQ index build failed: {exc!r}", file=sys.stderr)
     try:  # OPQ index build (round 8): rotation (one Gram pass + driver
-        # eigh), rotated codebooks, and the encoded corpus all memoize
-        # per (sf_dir, params) — the timed ann_recall_opq entry then
+        # eigh), rotated codebooks, and the encoded corpus are all
+        # stored per (corpus fingerprint, params), so they train on the
+        # entry's own frame ``e``; the timed ann_recall_opq entry then
         # measures the serve path (query rotate + ADC + exact rerank),
         # same train/serve split as the IVF blocks above.
         from dataengineer_job_scraper_etl_spark.operators.opq import (
@@ -693,12 +695,9 @@ def main() -> None:
         )
 
         if e is not None:
-            rot = opq_train(
-                e.select("embedding"), "embedding", EMBED_DIM, m=8,
-                cache_key=sf_dir,
-            )
+            rot = opq_train(e, "embedding", EMBED_DIM, m=8)
             pq_rerank_topk(
-                e, q, dim=EMBED_DIM, rotation=rot, cache_key=sf_dir
+                e, q, dim=EMBED_DIM, rotation=rot
             ).write.format("noop").mode("overwrite").save()
     except Exception as exc:  # noqa: BLE001
         print(f"WARN bench: OPQ index build failed: {exc!r}", file=sys.stderr)

@@ -24,9 +24,9 @@ Scale shape: the second moment comes from operators/pca.py's
 batch, a 64x64 driver-side collect (32 KiB) — and the rotation is
 applied in a ``mapInPandas`` matmul (BLAS on dense Arrow batches, the
 same "one place Python belongs" as the Gram stage; batch-linear, no
-shuffle). Train-once / serve-many: rotations memoize under the same
-staleness contract as IVF centroids and register with
-``similarity.clear_trained_indexes``.
+shuffle). Train-once / serve-many: rotations, codebooks and encoded
+corpora live in ``operators/index_store`` under the corpus
+fingerprint, like every other trained index artifact.
 
 Honest measured claim (PLANS.md r8): on the driver fixture — random,
 near-isotropic embeddings — OPQ at the serving operating point
@@ -48,25 +48,19 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dataengineer_job_scraper_etl_spark.operators import index_store
 from dataengineer_job_scraper_etl_spark.operators.pca import (
     gram_triplets,
     half_up,
 )
 from dataengineer_job_scraper_etl_spark.operators.similarity import (
-    _EXTRA_TRAINED_CACHES,
     _as_double,
+    _pq_codebooks,
     pq_encode,
     pq_topk_adc,
-    pq_train,
 )
 from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 from dataengineer_job_scraper_etl_spark.session import ensure_min_parallelism
-
-# (cache_key, dim, m) -> rotation columns; registered with
-# clear_trained_indexes via _EXTRA_TRAINED_CACHES (same staleness
-# contract as _CENTROID_CACHE: the key NAMES a corpus snapshot).
-_ROTATION_CACHE: dict[tuple, list[list[float]]] = {}
-_EXTRA_TRAINED_CACHES.append(_ROTATION_CACHE)
 
 
 def _eig_alloc(eigvals: list[float], m: int) -> list[int]:
@@ -101,7 +95,6 @@ def opq_train(
     dim: int,
     m: int = 8,
     round_decimals: int = 6,
-    cache_key: str | None = None,
 ) -> list[list[float]]:
     """Learn the OPQ rotation: ``dim`` output columns (each a
     dim-length unit vector), eigenvectors of the corpus second moment
@@ -114,18 +107,28 @@ def opq_train(
     function of the quantized matrix; np.linalg.eigh is deterministic
     for a fixed input on a fixed BLAS build (the container pins one).
     Entries of R are half_up-quantized too, costing ~1e-6 orthogonality
-    residual — immaterial for ANN, pinned by tests/test_opq.py."""
-    import numpy as np
+    residual — immaterial for ANN, pinned by tests/test_opq.py.
 
+    Stored in ``index_store`` under the corpus fingerprint and
+    (vec_col, dim, m, round_decimals)."""
     if dim % m != 0:
         # fail BEFORE the corpus Gram pass; without this the greedy
         # allocation dies with an opaque "min() arg is an empty
         # sequence" after paying the full scan (ADVICE r8)
         raise ValueError(f"dim={dim} not divisible by m={m}")
-    ckey = (cache_key, dim, m) if cache_key is not None else None
-    if ckey is not None and ckey in _ROTATION_CACHE:
-        return _ROTATION_CACHE[ckey]
-    dec = round_decimals
+    return index_store.get_or_train(
+        "opq_rotation",
+        index_store.fingerprint(corpus),
+        (vec_col, dim, m, round_decimals),
+        lambda: _train_rotation(corpus, vec_col, dim, m, round_decimals),
+    )
+
+
+def _train_rotation(
+    corpus: DataFrame, vec_col: str, dim: int, m: int, dec: int
+) -> list[list[float]]:
+    import numpy as np
+
     rows = gram_triplets(corpus, vec_col, dim).collect()
     g = {(r["i"], r["j"]): r["g"] for r in rows}
     n = int(g[(-1, -1)])
@@ -144,13 +147,10 @@ def opq_train(
     perm = _eig_alloc([float(x) for x in eigvals], m)
     # eigh returns ascending eigenvalues; _eig_alloc indexes them as
     # given, so pass the raw list and let it sort.
-    rot = [
+    return [
         [half_up(float(eigvecs[r, c]), dec) for r in range(dim)]
         for c in perm
     ]
-    if ckey is not None:
-        _ROTATION_CACHE[ckey] = rot
-    return rot
 
 
 def opq_rotate(
@@ -208,63 +208,47 @@ def pq_rerank_topk(
     shortlist: int = 200,
     seed: int = 42,
     rotation: list[list[float]] | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Whole-corpus PQ ADC shortlist + exact cosine rerank — the
     IVF-free serving path (what FAISS calls IndexPQ, or
     IndexPreTransform(OPQMatrix, IndexPQ) when ``rotation`` is set).
     Shares ivfpq_topk's parameters and rerank contract so the plain
     and OPQ paths differ ONLY by the orthogonal pre-transform —
-    the controlled comparison ann_opq_vs_pq_gain pins."""
+    the controlled comparison ann_opq_vs_pq_gain pins.
+
+    Codebooks and the ENCODED corpus (FAISS add() output) are index
+    artifacts stored under the corpus fingerprint (plus the rotation,
+    when set), so repeated calls measure the serve path — query
+    rotate + ADC + rerank — not a per-call retrain and re-encode."""
     from dataengineer_job_scraper_etl_spark.functions.vector_math import (
         cosine,
     )
 
+    fp = index_store.fingerprint(corpus)
     corpus = ensure_min_parallelism(corpus).localCheckpoint(eager=False)
-    code_col = vec_col
-    qcode_col = qvec_col
+    code_col, qcode_col = vec_col, qvec_col
     cc, qq = corpus, queries
-    tag = "plain"
+    rot_key = None
     if rotation is not None:
-        tag = "opq"
         code_col, qcode_col = "__rot", "__qrot"
         cc = opq_rotate(corpus, rotation, vec_col, code_col)
         qq = opq_rotate(queries, rotation, qvec_col, qcode_col)
-    books = pq_train(
-        cc.select(F.col(code_col)),
-        code_col,
-        dim,
-        m=m,
-        k=k_codes,
-        n_iter=n_iter,
-        seed=seed,
-        cache_key=None if cache_key is None else f"{cache_key}\x00{tag}",
+        rot_key = (vec_col, tuple(map(tuple, rotation)))
+    books = _pq_codebooks(
+        fp,
+        ensure_min_parallelism(cc.select(code_col)).localCheckpoint(
+            eager=False
+        ),
+        code_col, dim, m, k_codes, n_iter, seed, rot_key,
     )
-    # The ENCODED corpus is an index artifact (FAISS add() output):
-    # cache it like ivfpq_topk does, so keyed re-executions measure
-    # the serve path (query rotate + ADC + rerank), not a per-call
-    # re-encode of the whole corpus. Composite key first element keeps
-    # clear_trained_indexes(cache_key) covering it.
-    from dataengineer_job_scraper_etl_spark.operators.similarity import (
-        _CODED_CORPUS_CACHE,
-        _cached_coded,
+    coded = index_store.get_or_train(
+        "pq_coded",
+        fp,
+        (id_col, code_col, dim, m, k_codes, n_iter, seed, rot_key),
+        lambda: pq_encode(cc, books, vec_col=code_col)
+        .select(id_col, "pq_codes")
+        .localCheckpoint(eager=False),
     )
-
-    coded_key = (
-        (f"{cache_key}\x00{tag}", "coded", dim, id_col, vec_col, m,
-         k_codes, n_iter, seed)
-        if cache_key is not None
-        else None
-    )
-    coded = _cached_coded(coded_key) if coded_key is not None else None
-    if coded is None:
-        coded = (
-            pq_encode(cc, books, vec_col=code_col)
-            .select(id_col, "pq_codes")
-            .localCheckpoint(eager=False)
-        )
-        if coded_key is not None:
-            _CODED_CORPUS_CACHE[coded_key] = coded
     short = pq_topk_adc(
         coded,
         qq.select(qid_col, F.col(qcode_col).alias(qcode_col)),

@@ -37,9 +37,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# (n, means, top eigenvector, eigenvalue) keyed by caller tag — same
-# train-once/serve-many contract as similarity._CENTROID_CACHE.
-_PCA_CACHE: dict[object, tuple[int, list[float], list[float], float]] = {}
+from dataengineer_job_scraper_etl_spark.operators import index_store
 
 
 def half_up(x: float, decimals: int) -> float:
@@ -134,7 +132,6 @@ def pca_top_components(
     n_components: int = 1,
     n_iter: int = 8,
     round_decimals: int = 6,
-    cache_key: object = None,
 ) -> tuple[int, list[float], list[list[float]], list[float]]:
     """(n, means, loadings_per_component, eigvals): top principal
     components of the MEAN-CENTERED vector column by quantized power
@@ -152,17 +149,36 @@ def pca_top_components(
     sum(e[i]) while the half-step is 5e-7 (~5x10^6 margin), and a
     quantized mean makes m_i*m_j bit-identical on both engines — so
     the only drift entering the covariance is G/n's, absorbed by the
-    covariance quantization with the same margin."""
-    dec = round_decimals
+    covariance quantization with the same margin.
+
+    Train once / serve many: the result is stored in ``index_store``
+    under the frame's fingerprint and every parameter above."""
+    return index_store.get_or_train(
+        "pca",
+        index_store.fingerprint(vectors),
+        (vec_col, dim, n_components, n_iter, round_decimals),
+        lambda: train_top_components(
+            vectors, vec_col, dim, n_components, n_iter, round_decimals
+        ),
+    )
+
+
+def train_top_components(
+    vectors: DataFrame,
+    vec_col: str,
+    dim: int,
+    n_components: int,
+    n_iter: int,
+    dec: int,
+) -> tuple[int, list[float], list[list[float]], list[float]]:
+    """``pca_top_components`` without the store — for callers that
+    memoize a larger artifact around it (the PC1 drift monitor)."""
     v0 = 1.0 / math.sqrt(dim)
     assert v0 == half_up(v0, dec), (
         f"start vector {v0} not exact at {dec} decimals; pick a dim "
         "whose 1/sqrt(dim) is dyadic (powers of 4) or seed the oracle "
         "with the quantized literal instead"
     )
-    key = None if cache_key is None else (cache_key, n_components)
-    if key is not None and key in _PCA_CACHE:
-        return _PCA_CACHE[key]
     rows = gram_triplets(vectors, vec_col, dim).collect()
     g = {(r["i"], r["j"]): r["g"] for r in rows}
     n = int(g[(-1, -1)])
@@ -190,10 +206,7 @@ def pca_top_components(
             ]
             for i in range(dim)
         ]
-    out = (n, m, comps, lams)
-    if key is not None:
-        _PCA_CACHE[key] = out
-    return out
+    return (n, m, comps, lams)
 
 
 def pca_top_component(
@@ -202,10 +215,9 @@ def pca_top_component(
     dim: int,
     n_iter: int = 8,
     round_decimals: int = 6,
-    cache_key: object = None,
 ) -> tuple[int, list[float], list[float], float]:
     """(n, means, loadings, eigval): the n_components=1 case."""
     n, m, comps, lams = pca_top_components(
-        vectors, vec_col, dim, 1, n_iter, round_decimals, cache_key
+        vectors, vec_col, dim, 1, n_iter, round_decimals
     )
     return n, m, comps[0], lams[0]

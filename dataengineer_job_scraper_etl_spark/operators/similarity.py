@@ -34,6 +34,7 @@ from dataengineer_job_scraper_etl_spark.functions.vector_math import (
     dot,
     l2_norm,
 )
+from dataengineer_job_scraper_etl_spark.operators import index_store
 from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 from dataengineer_job_scraper_etl_spark.session import ensure_min_parallelism
 
@@ -263,7 +264,7 @@ def _kmeans_rounds(
     Quantizing makes the round's OUTPUT bit-identical on both sides
     so assignment argmins can't diverge. (b) It is the same
     centroid-quantization trade serving systems make. None (default)
-    keeps full precision for the IVF/PQ internal-cache paths, whose
+    keeps full precision for the IVF/PQ index paths, whose
     contracts are recall floors, not hash equality.
 
     Rounding-MODE assumption (ADVICE r6): Python round() here is
@@ -400,8 +401,6 @@ def kmeans_corpus_init(
     n_clusters: int,
     n_iter: int = 2,
     round_decimals: int | None = 6,
-    cache_key: str | None = None,
-    slice_tag: str | None = None,
 ) -> list[tuple[int, list[float]]]:
     """Lloyd's k-means with DATA-DERIVED init: cluster ``cid`` starts at
     the vector of the ``cid``-th lowest ``id_col`` row. Unlike the
@@ -417,29 +416,11 @@ def kmeans_corpus_init(
     partial means. Returns the trained (cluster_id, centroid) list —
     feed to ``assign_to_centroid`` for the final assignment.
 
-    ``cache_key`` memoizes the trained list in _CENTROID_CACHE (same
-    staleness contract and ``clear_trained_indexes`` hook as IVF):
-    pass it for FROZEN-index semantics — the incremental/streaming
-    ingest entries, where training once and serving many batches IS
-    the production contract. Batch dedup entries leave it None so
-    each run honestly pays its own training.
-
-    ``cache_key`` must uniquely name the CORPUS; ``slice_tag`` must
-    name the training SUBSET within it (ADVICE r6: the key carries no
-    fingerprint of the frame's contents, so two callers sharing a
-    cache_key but training on different filters of the same corpus
-    would silently share centroids). Callers that train on a slice
-    pass a tag naming the predicate (the incremental/streaming
-    entries use "mod10_lt8" for their vec_id %% 10 < 8 split); None
-    means whole-corpus training."""
-    ckey = (
-        (cache_key, slice_tag, "corpus_init", id_col, vec_col, dim,
-         n_clusters, n_iter, round_decimals)
-        if cache_key is not None
-        else None
-    )
-    if ckey is not None and ckey in _CENTROID_CACHE:
-        return _CENTROID_CACHE[ckey]
+    Cache-free: batch dedup entries honestly pay their own training.
+    FROZEN-index callers — the incremental/streaming ingest entries,
+    where training once and serving many batches IS the production
+    contract — wrap it in ``index_store.get_or_train`` keyed by the
+    training frame's fingerprint."""
     init_rows = (
         corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
         .orderBy(F.col(id_col))
@@ -448,12 +429,9 @@ def kmeans_corpus_init(
     )
     cents = [(cid, list(r["v"])) for cid, r in enumerate(init_rows)]
     corpus = ensure_min_parallelism(corpus).localCheckpoint(eager=False)
-    trained = _kmeans_rounds(
+    return _kmeans_rounds(
         corpus, vec_col, dim, cents, n_iter, round_decimals=round_decimals
     )
-    if ckey is not None:
-        _CENTROID_CACHE[ckey] = trained
-    return trained
 
 
 def semdedup_n_clusters(
@@ -771,8 +749,6 @@ def semdedup_incremental_status(
     n_clusters: int,
     n_iter: int = 2,
     tau: float = 0.4,
-    cache_key: str | None = None,
-    slice_tag: str | None = None,
 ) -> DataFrame:
     """Incremental SemDeDup: classify a NEW batch of vectors against
     the EXISTING corpus WITHOUT retraining or rescanning it
@@ -784,9 +760,11 @@ def semdedup_incremental_status(
     not itself dedup the corpus side).
 
     The cluster index is FROZEN: centroids train on ``existing`` only
-    (in production they'd be loaded from the persisted index; the
-    train-once cache keys apply). Each new row is assigned by
-    literal-argmin and compared only against same-cluster rows:
+    (in production they'd be loaded from the persisted index) and are
+    stored under ``existing``'s fingerprint, so every batch against
+    the same corpus slice is served without retraining. Each new row
+    is assigned by literal-argmin and compared only against
+    same-cluster rows:
 
     - 'dup_existing'  — some existing same-cluster row has dot > tau
     - 'dup_batch'     — else some LOWER-id batch row does (the same
@@ -797,9 +775,13 @@ def semdedup_incremental_status(
     Per-batch cost is |batch| x avg-cluster-occupancy dot products —
     proportional to the batch, never to the corpus squared. Returns
     (id_col, cluster_id, status) for batch rows only."""
-    cents = kmeans_corpus_init(
-        existing, id_col, vec_col, dim, n_clusters, n_iter=n_iter,
-        cache_key=cache_key, slice_tag=slice_tag,
+    cents = index_store.get_or_train(
+        "kmeans_corpus_init",
+        index_store.fingerprint(existing),
+        (id_col, vec_col, dim, n_clusters, n_iter),
+        lambda: kmeans_corpus_init(
+            existing, id_col, vec_col, dim, n_clusters, n_iter=n_iter
+        ),
     )
     ex = normalize_assigned(existing, cents, id_col, vec_col).select(
         F.col(id_col).alias("ex_id"), "cluster_id", F.col("nv").alias("ex_nv")
@@ -847,8 +829,6 @@ def pq_train(
     k: int = 16,
     n_iter: int = 2,
     seed: int = 42,
-    cache_key: str | None = None,
-    pre_staged: bool = False,
 ) -> list[list[tuple[int, list[float]]]]:
     """Product-quantization codebooks: split the vector into ``m``
     subspaces of dim/m and train an independent ``k``-centroid
@@ -859,45 +839,54 @@ def pq_train(
     m=8 one-byte codes (8 B, 32x), and distances are computed against
     codes via lookup tables without ever decoding. Training is a
     build-time artifact like IVF centroids — train once, encode and
-    serve many times: ``cache_key`` names the corpus and memoizes the
-    codebooks under (key, dim, m, k, n_iter, seed), exactly like
-    ``ivf_topk``'s ``centroid_cache_key`` (a hit is bit-identical to
-    retraining; see the staleness contract at _CENTROID_CACHE)."""
+    serve many times: the codebooks are stored under the corpus
+    fingerprint and (vec_col, dim, m, k, n_iter, seed), the same key
+    ``ivfpq_topk`` and plain ``pq_rerank_topk`` use."""
+    return _pq_codebooks(
+        index_store.fingerprint(corpus),
+        ensure_min_parallelism(corpus).localCheckpoint(eager=False),
+        vec_col, dim, m, k, n_iter, seed,
+    )
+
+
+def _pq_codebooks(
+    fp: tuple,
+    staged: DataFrame,
+    vec_col: str,
+    dim: int,
+    m: int,
+    k: int,
+    n_iter: int,
+    seed: int,
+    rotation: tuple | None = None,
+) -> list[list[tuple[int, list[float]]]]:
+    """``pq_train``'s store lookup over an already-staged frame. ``fp``
+    fingerprints the caller's frame BEFORE staging; ``rotation`` names
+    the OPQ pre-transform whose output ``staged[vec_col]`` holds, so
+    rotated and plain codebooks of one corpus never share a key."""
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m}")
-    ckey = (
-        (cache_key, dim, m, k, n_iter, seed)
-        if cache_key is not None
-        else None
-    )
-    if ckey is not None and ckey in _CODEBOOK_CACHE:
-        return _CODEBOOK_CACHE[ckey]
     d_sub = dim // m
-    if not pre_staged:
-        # skipped when the caller (ivfpq_topk) already repartitioned +
-        # checkpointed this exact frame — a second localCheckpoint
-        # would materialize the corpus in the block manager TWICE
-        # (review finding)
-        corpus = ensure_min_parallelism(corpus).localCheckpoint(eager=False)
-    books: list[list[tuple[int, list[float]]]] = []
-    for j in range(m):
-        sub = corpus.select(
-            F.slice(_as_double(F.col(vec_col)), j * d_sub + 1, d_sub).alias(
-                "__sub"
-            )
-        )
-        books.append(
+
+    def train() -> list[list[tuple[int, list[float]]]]:
+        return [
             _kmeans_rounds(
-                sub,
+                staged.select(
+                    F.slice(
+                        _as_double(F.col(vec_col)), j * d_sub + 1, d_sub
+                    ).alias("__sub")
+                ),
                 "__sub",
                 d_sub,
                 _seeded_init(d_sub, k, seed + 7919 * j),
                 n_iter,
             )
-        )
-    if ckey is not None:
-        _CODEBOOK_CACHE[ckey] = books
-    return books
+            for j in range(m)
+        ]
+
+    return index_store.get_or_train(
+        "pq_codebooks", fp, (vec_col, dim, m, k, n_iter, seed, rotation), train
+    )
 
 
 def pq_encode(
@@ -1027,7 +1016,6 @@ def ivfpq_topk(
     n_iter: int = 2,
     shortlist: int = 200,
     seed: int = 42,
-    centroid_cache_key: str | None = None,
 ) -> DataFrame:
     """IVF-PQ serving plan (the FAISS IndexIVFPQ shape), composed from
     the pieces above and fully relational:
@@ -1047,14 +1035,14 @@ def ivfpq_topk(
     vectors again. Everything shuffles at most once per stage on its
     natural key.
 
-    ``centroid_cache_key`` makes this train-once/probe-many like
-    ``ivf_topk``, covering the WHOLE index build: coarse centroids
-    memoize under the SAME cache tuple as plain IVF (one warm-up
-    trains both serving paths), PQ codebooks under their own, and the
-    ENCODED corpus — (id, cluster_id, pq_codes), FAISS's add() output
-    — as a checkpointed frame, so a keyed second call runs zero Lloyd
-    rounds AND zero per-row encodes: probe + ADC + rerank only
-    (pinned by tests/test_similarity.py's poison-pill).
+    Train-once/probe-many over the WHOLE index build, all keyed by the
+    corpus fingerprint in ``index_store``: coarse centroids under the
+    SAME key as plain IVF (one warm-up trains both serving paths), PQ
+    codebooks under ``pq_train``'s, and the ENCODED corpus — (id,
+    cluster_id, pq_codes), FAISS's add() output — as a checkpointed
+    frame, so a second call runs zero Lloyd rounds AND zero per-row
+    encodes: probe + ADC + rerank only (pinned by
+    tests/test_similarity.py's poison-pill).
 
     Recall-vs-scale note (the sf0.1 audit that set these defaults):
     recall@10 degrades with corpus size through TWO knobs, and both
@@ -1066,42 +1054,25 @@ def ivfpq_topk(
     budget stays O(shortlist) rows per query, so the serve cost is
     unchanged. FAISS practice is the same escalation (nbits, then
     the rerank factor) as the index grows."""
+    fp = index_store.fingerprint(corpus)
     corpus = ensure_min_parallelism(corpus).localCheckpoint(eager=False)
-    ivf_key = (
-        (centroid_cache_key, dim, n_clusters, n_iter, seed)
-        if centroid_cache_key is not None
-        else None
-    )
-    cents = _CENTROID_CACHE.get(ivf_key) if ivf_key is not None else None
-    if cents is None:
-        cents = _kmeans_rounds(
-            corpus, vec_col, dim, _seeded_init(dim, n_clusters, seed), n_iter
-        )
-        if ivf_key is not None:
-            _CENTROID_CACHE[ivf_key] = cents
-    books = pq_train(
-        corpus, vec_col, dim, m=m, k=k_codes, n_iter=n_iter, seed=seed,
-        cache_key=centroid_cache_key, pre_staged=True,
-    )
-    coded_key = (
-        (centroid_cache_key, "coded", dim, id_col, vec_col, n_clusters,
-         m, k_codes, n_iter, seed)
-        if centroid_cache_key is not None
-        else None
-    )
+    cents = _ivf_centroids(fp, corpus, vec_col, dim, n_clusters, n_iter, seed)
+    books = _pq_codebooks(fp, corpus, vec_col, dim, m, k_codes, n_iter, seed)
     # NB the ADC stages below intentionally mirror pq_topk_adc's
     # machinery (distance-table build, posexplode+join+sum) rather
     # than calling it: this path interleaves the coarse probe join.
     # Keep the two in sync — tests pin both, but edits must visit both.
-    coded = _cached_coded(coded_key) if coded_key is not None else None
-    if coded is None:
-        coded = pq_encode(
+    coded = index_store.get_or_train(
+        "ivfpq_coded",
+        fp,
+        (id_col, vec_col, dim, n_clusters, m, k_codes, n_iter, seed),
+        lambda: pq_encode(
             assign_to_centroid(corpus, cents, vec_col), books,
             vec_col=vec_col,
-        ).select(id_col, "cluster_id", "pq_codes", vec_col)
-        coded = coded.localCheckpoint(eager=False)
-        if coded_key is not None:
-            _CODED_CORPUS_CACHE[coded_key] = coded
+        )
+        .select(id_col, "cluster_id", "pq_codes", vec_col)
+        .localCheckpoint(eager=False),
+    )
 
     qd = lambda c: F.aggregate(  # noqa: E731
         F.zip_with(
@@ -1176,86 +1147,29 @@ def ivfpq_topk(
     )
 
 
-# Trained index artifacts, keyed by (corpus identity, training params).
-# An IVF index is train-once / probe-many: the coarse quantizer (and
-# for IVF-PQ, the per-subspace codebooks) is a build artifact (FAISS
-# trains it offline; a warehouse materializes it as a tiny table), so
-# re-running Lloyd rounds on every query batch against an unchanged
-# corpus is pure waste. Artifacts are plain Python floats —
-# session-independent, deterministic for a given (corpus, seed), and
-# a few KB per entry.
-#
-# Staleness contract: the caller-supplied key NAMES a corpus snapshot
-# (e.g. its sf_dir). The cache performs NO invalidation of its own —
-# if the data under a key mutates in-process, the caller must either
-# use a new key (include a snapshot version / row count in the name)
-# or call clear_trained_indexes(). Serving stale centroids degrades
-# recall silently; it never affects exact results.
-_CENTROID_CACHE: dict[tuple, list[tuple[int, list[float]]]] = {}
-_CODEBOOK_CACHE: dict[tuple, list[list[tuple[int, list[float]]]]] = {}
-# The ENCODED corpus (id, cluster_id, pq_codes) is an index artifact
-# too — FAISS's add() populates it offline and search() never touches
-# raw vectors for it. Cached as a checkpointed DataFrame: its RDD
-# blocks persist in the block manager, so a hit skips the per-row
-# centroid-assign + m-subspace argmin encode entirely. Session-scoped
-# BY VALIDATION: a cached frame is bound to the SparkSession that
-# built it, so hits are checked against the live session and stale
-# entries retrain instead of raising Py4J errors from a dead JVM
-# (review finding — the old comment claimed this without implementing
-# it).
-_CODED_CORPUS_CACHE: dict[tuple, DataFrame] = {}
-# Trained-artifact caches owned by OTHER modules (e.g. operators/
-# opq.py's rotations) append themselves here so clear_trained_indexes
-# covers them under the same staleness contract. Convention: keys are
-# tuples whose first element is the caller cache_key.
-_EXTRA_TRAINED_CACHES: list[dict] = []
-
-
-def _cached_coded(key):
-    """Session-validated _CODED_CORPUS_CACHE lookup: a frame built by
-    a stopped SparkSession is dropped and treated as a miss."""
-    df = _CODED_CORPUS_CACHE.get(key)
-    if df is None:
-        return None
-    try:
-        alive = not df.sparkSession._sc._jsc.sc().isStopped()
-    except Exception:  # noqa: BLE001 — any introspection failure = dead
-        alive = False
-    if not alive:
-        del _CODED_CORPUS_CACHE[key]
-        return None
-    return df
-
-
-def clear_trained_indexes(cache_key: str | None = None) -> None:
-    """Drop memoized IVF centroids / PQ codebooks / encoded corpora —
-    all of them, or only entries trained under ``cache_key`` (any
-    params). Call when the corpus a key names has changed in this
-    process."""
-    for cache in (
-        _CENTROID_CACHE,
-        _CODEBOOK_CACHE,
-        _CODED_CORPUS_CACHE,
-        *_EXTRA_TRAINED_CACHES,
-    ):
-        if cache_key is None:
-            cache.clear()
-        else:
-            # composite first elements ("<key>\x00opq", "<key>\x00plain")
-            # belong to the same corpus snapshot as <key>. The NUL
-            # separator can't appear in sf_dir-style caller keys, so a
-            # key like "a" never clears a DISTINCT corpus "a:b"
-            # (ADVICE r8: ':' collided with plausible caller keys).
-            for k in [
-                k
-                for k in cache
-                if k[0] == cache_key
-                or (
-                    isinstance(k[0], str)
-                    and k[0].startswith(f"{cache_key}\x00")
-                )
-            ]:
-                del cache[k]
+def _ivf_centroids(
+    fp: tuple,
+    staged: DataFrame,
+    vec_col: str,
+    dim: int,
+    n_clusters: int,
+    n_iter: int,
+    seed: int,
+) -> list[tuple[int, list[float]]]:
+    """The IVF coarse quantizer shared by ``ivf_topk`` and
+    ``ivfpq_topk``: stored under the caller frame's fingerprint ``fp``
+    (taken before ``staged`` was checkpointed). An IVF index is
+    train-once / probe-many — FAISS trains the quantizer offline — so
+    re-running Lloyd rounds per query batch on an unchanged corpus is
+    pure waste."""
+    return index_store.get_or_train(
+        "ivf_centroids",
+        fp,
+        (vec_col, dim, n_clusters, n_iter, seed),
+        lambda: _kmeans_rounds(
+            staged, vec_col, dim, _seeded_init(dim, n_clusters, seed), n_iter
+        ),
+    )
 
 
 def ivf_topk(
@@ -1271,7 +1185,6 @@ def ivf_topk(
     n_probe: int = 4,
     n_iter: int = 2,
     seed: int = 42,
-    centroid_cache_key: str | None = None,
 ) -> DataFrame:
     """IVF ANN: build centroids, invert the corpus by nearest centroid,
     and for each query score only the ``n_probe`` nearest lists.
@@ -1283,25 +1196,15 @@ def ivf_topk(
     inverted corpus is written bucketed by cluster_id so repeated
     query batches prune to the probed lists at scan time.
 
-    ``centroid_cache_key`` names the corpus (e.g. its sf_dir): when
-    set, the trained centroids are memoized under (key, dim,
-    n_clusters, n_iter, seed) and later calls skip the Lloyd rounds
-    entirely — the train-once / probe-many split every serving IVF
-    index makes. Training is deterministic (seeded init, fixed corpus)
-    so a cache hit is bit-identical to retraining."""
+    The trained centroids are stored under the corpus fingerprint and
+    (vec_col, dim, n_clusters, n_iter, seed), so later calls on the
+    same corpus skip the Lloyd rounds entirely — the train-once /
+    probe-many split every serving IVF index makes. Training is
+    deterministic (seeded init, fixed corpus) so a hit is
+    bit-identical to retraining."""
+    fp = index_store.fingerprint(corpus)
     corpus = ensure_min_parallelism(corpus).localCheckpoint(eager=False)
-    ckey = (
-        (centroid_cache_key, dim, n_clusters, n_iter, seed)
-        if centroid_cache_key is not None
-        else None
-    )
-    cents = _CENTROID_CACHE.get(ckey) if ckey is not None else None
-    if cents is None:
-        cents = _kmeans_rounds(
-            corpus, vec_col, dim, _seeded_init(dim, n_clusters, seed), n_iter
-        )
-        if ckey is not None:
-            _CENTROID_CACHE[ckey] = cents
+    cents = _ivf_centroids(fp, corpus, vec_col, dim, n_clusters, n_iter, seed)
     inverted = assign_to_centroid(corpus, cents, vec_col)
 
     qd = lambda c: F.aggregate(  # noqa: E731

@@ -75,10 +75,7 @@ def ann_ivf_probe_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = vec_cosine_topk(spark, sf_dir).select("qid", "vec_id")
     rows = []
     for probes in PROBE_LADDER:
-        ann = ivf_topk(
-            e, q, dim=EMBED_DIM, k=10, n_probe=probes,
-            centroid_cache_key=sf_dir,
-        )
+        ann = ivf_topk(e, q, dim=EMBED_DIM, k=10, n_probe=probes)
         total = (
             ann.join(exact, ["qid", "vec_id"], "left_semi")
             .agg(F.count(F.lit(1)).alias("hits"))

@@ -403,7 +403,7 @@ def vec_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = e.filter(F.col("vec_id") % 10 >= 8)
     return semdedup_incremental_status(
         existing, batch, "vec_id", "embedding", DIM, N_CLUSTERS,
-        n_iter=N_ITER, tau=TAU, cache_key=sf_dir, slice_tag="mod10_lt8",
+        n_iter=N_ITER, tau=TAU,
     )
 
 

@@ -469,7 +469,7 @@ def ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.queries.vectors import vec_cosine_topk
 
     e, q = _vectors(spark, sf_dir)
-    ann = ivf_topk(e, q, dim=EMBED_DIM, k=10, centroid_cache_key=sf_dir)
+    ann = ivf_topk(e, q, dim=EMBED_DIM, k=10)
     exact = vec_cosine_topk(spark, sf_dir)
     return _recall_contract(ann, exact, min_hits=2)
 
@@ -483,16 +483,17 @@ def ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ranks ordered by score, every returned cos_sim re-verified as "
     "the true cosine, >= 2 of the exact top-10 recovered (the same "
     "floor ann_recall_ivf pins; measured 3-9 across rungs). "
-    "Train-once/probe-many: centroids are memoized per (sf_dir, "
-    "params) — see _CENTROID_CACHE in operators/similarity.py — so "
-    "repeated executions (and the bench after its warm-up index "
-    "build) measure the SERVE path only; a cache hit is bit-identical "
-    "to retraining (seeded determinism, pinned by "
+    "Train-once/probe-many: centroids are stored per (corpus "
+    "fingerprint, params) in operators/index_store.py — the key is "
+    "the plan's semanticHash plus every input file's length and "
+    "mtime — so repeated executions (and the bench after its warm-up "
+    "index build) measure the SERVE path only; a store hit is "
+    "bit-identical to retraining (seeded determinism, pinned by "
     "tests/test_similarity.py).",
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e, q = _vectors(spark, sf_dir)
-    ann = ivf_topk(e, q, dim=EMBED_DIM, k=10, centroid_cache_key=sf_dir)
+    ann = ivf_topk(e, q, dim=EMBED_DIM, k=10)
     return _ann_serving_contract(spark, sf_dir, ann, min_hits=2)
 
 
@@ -504,7 +505,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the exact cosine top-10 must survive — the same floor as plain "
     "IVF, because the exact rerank restores within-shortlist order "
     "(operators/similarity.py:ivfpq_topk; deterministic seeded "
-    "centroids AND codebooks, train-once cached per sf_dir).",
+    "centroids AND codebooks, trained once per corpus fingerprint).",
 )
 def ann_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.operators.similarity import (
@@ -513,9 +514,7 @@ def ann_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.queries.vectors import vec_cosine_topk
 
     e, q = _vectors(spark, sf_dir)
-    ann = ivfpq_topk(
-        e, q, dim=EMBED_DIM, k=10, centroid_cache_key=sf_dir
-    )
+    ann = ivfpq_topk(e, q, dim=EMBED_DIM, k=10)
     exact = vec_cosine_topk(spark, sf_dir)
     return _recall_contract(ann, exact, min_hits=2)
 
@@ -532,9 +531,9 @@ def ann_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(the exact rerank's whole point — an un-reranked ADC score "
     "would fail this), >= 2 of the exact top-10 recovered (the "
     "ann_recall_ivfpq floor). Train-once/probe-many: coarse "
-    "centroids share ivf_topk's cache tuple and codebooks memoize "
-    "per (sf_dir, params), so repeated executions measure the SERVE "
-    "path only.",
+    "centroids share ivf_topk's store key and codebooks are stored "
+    "per (corpus fingerprint, params), so repeated executions measure "
+    "the SERVE path only.",
 )
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.operators.similarity import (
@@ -542,7 +541,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e, q = _vectors(spark, sf_dir)
-    ann = ivfpq_topk(e, q, dim=EMBED_DIM, k=10, centroid_cache_key=sf_dir)
+    ann = ivfpq_topk(e, q, dim=EMBED_DIM, k=10)
     return _ann_serving_contract(spark, sf_dir, ann, min_hits=2)
 
 
@@ -690,9 +689,9 @@ def neardup_minhash_precision_contract(
     "codes, exact cosine rerank): per query vector, >=2 of the exact "
     "cosine top-10 must survive (measured min-per-query 4 at "
     "sf0.001/0.01/0.1 and sf1; deterministic seeded codebooks, "
-    "train-once cached per sf_dir). The controlled baseline the OPQ "
-    "entries compare against — operators/opq.py:pq_rerank_topk with "
-    "rotation=None.",
+    "trained once per corpus fingerprint). The controlled baseline "
+    "the OPQ entries compare against — operators/opq.py:pq_rerank_topk "
+    "with rotation=None.",
 )
 def ann_recall_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.operators.opq import (
@@ -703,7 +702,7 @@ def ann_recall_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e, q = _vectors(spark, sf_dir)
-    ann = pq_rerank_topk(e, q, dim=EMBED_DIM, cache_key=sf_dir)
+    ann = pq_rerank_topk(e, q, dim=EMBED_DIM)
     exact = vec_cosine_topk(spark, sf_dir)
     return _recall_contract(ann, exact, min_hits=2)
 
@@ -734,10 +733,8 @@ def ann_recall_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e, q = _vectors(spark, sf_dir)
-    rot = opq_train(e, "embedding", EMBED_DIM, m=8, cache_key=sf_dir)
-    ann = pq_rerank_topk(
-        e, q, dim=EMBED_DIM, rotation=rot, cache_key=sf_dir
-    )
+    rot = opq_train(e, "embedding", EMBED_DIM, m=8)
+    ann = pq_rerank_topk(e, q, dim=EMBED_DIM, rotation=rot)
     exact = vec_cosine_topk(spark, sf_dir)
     return _recall_contract(ann, exact, min_hits=3)
 
@@ -757,8 +754,9 @@ FROM embeddings WHERE vec_id < 5
     "near-isotropic fixture (PLANS.md r8: rotation pays on "
     "correlated/anisotropic data; at starved budgets like k=16 it "
     "does not pay at all, which is why the operating point matters). "
-    "Both paths share one trained cache per sf_dir, so the entry "
-    "times the serve paths, not 2x training.",
+    "Both paths share one trained rotation and codebook set per "
+    "corpus fingerprint, so the entry times the serve paths, not 2x "
+    "training.",
 )
 def ann_opq_vs_pq_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.operators.opq import (
@@ -771,11 +769,9 @@ def ann_opq_vs_pq_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e, q = _vectors(spark, sf_dir)
     exact = vec_cosine_topk(spark, sf_dir).select("qid", "vec_id")
-    rot = opq_train(e, "embedding", EMBED_DIM, m=8, cache_key=sf_dir)
-    plain = pq_rerank_topk(e, q, dim=EMBED_DIM, cache_key=sf_dir)
-    opq = pq_rerank_topk(
-        e, q, dim=EMBED_DIM, rotation=rot, cache_key=sf_dir
-    )
+    rot = opq_train(e, "embedding", EMBED_DIM, m=8)
+    plain = pq_rerank_topk(e, q, dim=EMBED_DIM)
+    opq = pq_rerank_topk(e, q, dim=EMBED_DIM, rotation=rot)
     p = plain.join(exact, ["qid", "vec_id"], "left_semi").agg(
         F.count(F.lit(1)).alias("__p")
     )
@@ -834,8 +830,8 @@ FROM embeddings WHERE vec_id < 5
     "there), OPQ must beat plain PQ on summed exact-top-10 hits by a "
     "STRICT margin >= 2 (measured opq/plain: 38/34 at sf0.001, 41/30 "
     "at sf0.01, 33/14 at sf0.1 — gains 4/11/19, deterministic per "
-    "fixture). Trained artifacts cache under a dedicated '#aniso' "
-    "corpus key.",
+    "fixture). The remixed corpus is its own training frame, so its "
+    "trained artifacts get their own fingerprint key.",
 )
 def ann_opq_anisotropic_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.operators.opq import (
@@ -851,20 +847,11 @@ def ann_opq_anisotropic_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", _anisotropic_mix(F.col("embedding")).alias("embedding")
     )
     mq = q.select("qid", _anisotropic_mix(F.col("qe")).alias("qe"))
-    key = f"{sf_dir}#aniso"
     exact = brute_force_topk(me, mq, k=10).select("qid", "vec_id")
-    rot = opq_train(me, "embedding", EMBED_DIM, m=8, cache_key=key)
-    plain = pq_rerank_topk(
-        me, mq, dim=EMBED_DIM, k_codes=16, shortlist=50, cache_key=key
-    )
+    rot = opq_train(me, "embedding", EMBED_DIM, m=8)
+    plain = pq_rerank_topk(me, mq, dim=EMBED_DIM, k_codes=16, shortlist=50)
     opq = pq_rerank_topk(
-        me,
-        mq,
-        dim=EMBED_DIM,
-        k_codes=16,
-        shortlist=50,
-        rotation=rot,
-        cache_key=key,
+        me, mq, dim=EMBED_DIM, k_codes=16, shortlist=50, rotation=rot
     )
     p = plain.join(exact, ["qid", "vec_id"], "left_semi").agg(
         F.count(F.lit(1)).alias("__p")

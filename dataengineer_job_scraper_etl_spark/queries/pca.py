@@ -26,8 +26,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.operators import index_store
 from dataengineer_job_scraper_etl_spark.operators.pca import (
     pca_top_component,
+    train_top_components,
 )
 
 DIM = 64
@@ -341,13 +343,6 @@ def rank_exact_edges_n(
     return [row[f"e{k}"] for k in range(1, n_buckets)], n
 
 
-# (means, loadings, edges, n_ref) keyed by sf_dir: the frozen monitor
-# is trained once on the reference slice and served to both the batch
-# and the streaming entry (same train-once contract as the centroid
-# caches; the key names the corpus AND the slice convention).
-_MONITOR_CACHE: dict[object, tuple] = {}
-
-
 def frozen_pc1_monitor(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[float], list[float], list[float], int]:
@@ -358,39 +353,42 @@ def frozen_pc1_monitor(
     over the COMPRESSED histogram (distinct quantized scores), and
     becomes a two-stage parallel prefix at real scale; the 9-edge
     collect is bounded."""
-    key = ("pc1-monitor", sf_dir)
-    if key in _MONITOR_CACHE:
-        return _MONITOR_CACHE[key]
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    ref_rows = e.filter(~F.expr(_CUR_PRED))
-    out = train_pc1_monitor(ref_rows, pca_key=("pca-ref", sf_dir))
-    _MONITOR_CACHE[key] = out
-    return out
+    return train_pc1_monitor(e.filter(~F.expr(_CUR_PRED)))
 
 
 def train_pc1_monitor(
-    ref_rows: DataFrame, pca_key: object = None, stage_ref: bool = True
+    ref_rows: DataFrame
 ) -> tuple[list[float], list[float], list[float], int]:
     """Freeze a PC1 drift monitor on a reference frame: (means,
     loadings, rank-exact decile edges, n_ref). The reusable core of
-    ``frozen_pc1_monitor`` — the retrain path re-freezes through this
-    with a NEW pca_key (slice tag) so stale cache entries can never
-    shadow the new axes.
-
-    ``stage_ref`` (r14, VERDICT r13 ask #5): the reference slice feeds
-    TWO corpus-scale consumers — the Gram pass and the edge-scoring
-    histogram — so by default it is staged once and the second
-    consumer reads the checkpoint instead of re-running the scan +
-    filter. Callers whose ref frame is ALREADY checkpointed (the
-    refreeze entry's shifted slice) pass False — a second checkpoint
-    of the same rows would only add a redundant block-manager copy."""
-    if stage_ref:
-        ref_rows = ref_rows.localCheckpoint(eager=False)
-    _, m, v, _ = pca_top_component(
-        ref_rows, "embedding", DIM, n_iter=N_ITER, cache_key=pca_key
+    ``frozen_pc1_monitor`` and of the retrain path's re-freeze. The
+    monitor is stored in ``index_store`` under ``ref_rows``'s
+    fingerprint, so the batch and streaming entries share one frozen
+    monitor per reference slice, and a re-freeze on a new slice can
+    never be shadowed by the old one."""
+    return index_store.get_or_train(
+        "pc1_monitor",
+        index_store.fingerprint(ref_rows),
+        (),
+        lambda: _freeze_pc1_monitor(ref_rows),
     )
+
+
+def _freeze_pc1_monitor(
+    ref_rows: DataFrame
+) -> tuple[list[float], list[float], list[float], int]:
+    # r14 (VERDICT r13 ask #5): the reference slice feeds TWO
+    # corpus-scale consumers — the Gram pass and the edge-scoring
+    # histogram — so it is staged once and the second consumer reads
+    # the checkpoint instead of re-running the scan + filter.
+    ref_rows = ref_rows.localCheckpoint(eager=False)
+    _, m, comps, _ = train_top_components(
+        ref_rows, "embedding", DIM, n_components=1, n_iter=N_ITER, dec=6
+    )
+    v = comps[0]
     # No checkpoint on the scored frame (r14): after rank_exact_edges_n
     # folded the count() into the edge collect, the scored projection
     # has exactly ONE consumer — the edge histogram — and global_prefix
@@ -471,11 +469,7 @@ def serve_and_maybe_retrain(
     cur_rows: DataFrame,
     new_ref_rows: DataFrame,
     threshold_ppm: int = PSI_RETRAIN_THRESHOLD_PPM,
-    new_pca_key: object = None,
-    stale_monitor_keys: tuple = (),
-    stale_index_key: str | None = None,
     counts: dict[int, int] | None = None,
-    stage_new_ref: bool = True,
 ) -> tuple[tuple, int, bool]:
     """The detect -> retrain -> re-freeze lifecycle (VERDICT r7 #6):
 
@@ -484,15 +478,12 @@ def serve_and_maybe_retrain(
        the swap below returns; monitors are immutable tuples, so
        in-flight readers are never torn).
     2. below threshold: keep the monitor, report (monitor, psi, False).
-    3. above threshold: drop the stale trained artifacts —
-       ``stale_monitor_keys`` out of _MONITOR_CACHE and, when the
-       corpus key also names ANN indexes, ``stale_index_key`` via
-       similarity.clear_trained_indexes (IVF centroids / PQ codebooks
-       / OPQ rotations trained on the pre-shift corpus degrade recall
-       silently, the staleness contract at _CENTROID_CACHE) — then
-       RE-FREEZE on ``new_ref_rows`` under ``new_pca_key`` (a NEW
-       slice tag: the r6 advisory — never reuse a cache key across
-       retrains) and return the new monitor.
+    3. above threshold: RE-FREEZE on ``new_ref_rows`` and return the
+       new monitor. Nothing is invalidated by hand: every trained
+       artifact (this monitor, IVF centroids, PQ codebooks, OPQ
+       rotations) is keyed by its training frame's fingerprint in
+       ``index_store``, so the shifted rows get their own entries and
+       an artifact trained on the pre-shift rows can never serve them.
 
     Returns (serving_monitor, psi_ppm, retrained). ``counts`` feeds
     precomputed ``monitor_bucket_counts`` through to the PSI decision
@@ -500,18 +491,7 @@ def serve_and_maybe_retrain(
     psi = monitor_psi_ppm(monitor, cur_rows, counts=counts)
     if psi <= threshold_ppm:
         return monitor, psi, False
-    from dataengineer_job_scraper_etl_spark.operators.similarity import (
-        clear_trained_indexes,
-    )
-
-    for k in stale_monitor_keys:
-        _MONITOR_CACHE.pop(k, None)
-    if stale_index_key is not None:
-        clear_trained_indexes(stale_index_key)
-    fresh = train_pc1_monitor(
-        new_ref_rows, pca_key=new_pca_key, stage_ref=stage_new_ref
-    )
-    return fresh, psi, True
+    return train_pc1_monitor(new_ref_rows), psi, True
 
 
 # Planted distribution shift for the retrain-lifecycle entry: +0.25 on
@@ -607,8 +587,8 @@ FROM edges1 e1 JOIN edges2 e2 ON e1.k = e2.k
     "pinned only by pytest): monitor v1 freezes on the reference "
     "slice, the arriving slice carries a planted +0.25 mean shift "
     "(~5M ppm PSI, 25x the retrain threshold), the lifecycle helper "
-    "detects the breach, drops stale monitor/ANN cache keys, and "
-    "RE-FREEZES on the shifted slice under a new slice tag. The hash "
+    "detects the breach and RE-FREEZES on the shifted slice (a new "
+    "training-frame fingerprint, so a new trained-artifact key). The hash "
     "pins the SERVING monitor's rank-exact decile edges after the "
     "swap (the v2 train replayed in SQL via _pca_common's second, "
     "s-prefixed CTE instantiation), the breach statistic in integer "
@@ -625,18 +605,20 @@ def vec_drift_retrain_refreeze(
         "vec_id", "embedding"
     )
     ref = e.filter(~F.expr(_CUR_PRED))
-    # Staged once (r14 optimization): the shifted slice feeds THREE
-    # consumers — the v1 bucket-count scoring pass, the v2 Gram pass,
-    # and the v2 edge-scoring pass — each of which re-ran the parquet
-    # scan + filter + 64-term shift projection without it.
+    # NOT checkpointed here: the v2 re-freeze fingerprints this frame,
+    # and a checkpoint is a fresh plan on every call, so the v2 monitor
+    # would retrain every time. The re-freeze stages it for its own
+    # two passes; a warm call only runs the v1 scoring pass below.
     shifted = e.filter(F.expr(_CUR_PRED)).select(
         "vec_id",
         F.transform(
             F.col("embedding").cast("array<double>"),
             lambda x: x + F.lit(_SHIFT),
         ).alias("embedding"),
-    ).localCheckpoint(eager=False)
-    mon1 = train_pc1_monitor(ref, pca_key=("drift-v1", sf_dir))
+    )
+    # the same reference slice as frozen_pc1_monitor, so v1 IS the
+    # batch/streaming monitor (one stored artifact)
+    mon1 = train_pc1_monitor(ref)
     # Score + bucket the shifted slice ONCE (r13 optimization): the
     # bounded 10-row counts feed BOTH the PSI decision inside
     # serve_and_maybe_retrain and the hashed per-bucket statistic
@@ -644,13 +626,7 @@ def vec_drift_retrain_refreeze(
     # a second time to rebuild the identical counts as a DataFrame.
     counts_map = monitor_bucket_counts(mon1, shifted)
     serving, _psi_dec, retrained = serve_and_maybe_retrain(
-        mon1,
-        shifted,
-        new_ref_rows=shifted,
-        new_pca_key=("drift-v2", sf_dir),
-        stale_monitor_keys=(("pc1-monitor", sf_dir),),
-        counts=counts_map,
-        stage_new_ref=False,  # shifted is already checkpointed above
+        mon1, shifted, new_ref_rows=shifted, counts=counts_map
     )
     m1, v1, edges1, n_ref = mon1
     n_cur = serving[3] if retrained else sum(counts_map.values())
@@ -769,9 +745,7 @@ def vec_pca_pc1_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    _, m, v, _ = pca_top_component(
-        e, "embedding", DIM, n_iter=N_ITER, cache_key=("pca", sf_dir)
-    )
+    _, m, v, _ = pca_top_component(e, "embedding", DIM, n_iter=N_ITER)
     return e.select("vec_id", pc1_score_expr(m, v).alias("pc1"))
 
 
@@ -798,8 +772,7 @@ def vec_pca_top2_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     _, m, comps, _ = pca_top_components(
-        e, "embedding", DIM, n_components=2, n_iter=N_ITER,
-        cache_key=("pca", sf_dir),
+        e, "embedding", DIM, n_components=2, n_iter=N_ITER
     )
     return e.select(
         "vec_id",
@@ -880,8 +853,7 @@ def vec_pca_grid_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     _, m, comps, _ = pca_top_components(
-        e, "embedding", DIM, n_components=2, n_iter=N_ITER,
-        cache_key=("pca", sf_dir),
+        e, "embedding", DIM, n_components=2, n_iter=N_ITER
     )
     scored = e.select(
         "vec_id",

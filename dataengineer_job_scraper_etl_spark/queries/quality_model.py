@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.operators import index_store
 
 _Q = 1_000_000
 N_ITER = 8
@@ -103,11 +104,6 @@ def _features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-# trained weights keyed by (corpus tag): train once / score many —
-# the same serve contract as the PCA/centroid caches.
-_WEIGHT_CACHE: dict[object, list[float]] = {}
-
-
 def _z(w: list[float]):
     """The logit in FIXED textual order — written identically in the
     SQL so IEEE evaluation order matches:
@@ -125,15 +121,23 @@ def _z(w: list[float]):
 
 
 def train_quality_logreg(
-    feats: DataFrame, n_iter: int = N_ITER, lr: float = LR,
-    cache_key: object = None,
+    feats: DataFrame, n_iter: int = N_ITER, lr: float = LR
 ) -> list[float]:
     """[w0..w4] after ``n_iter`` quantized full-batch GD steps from
     zero init. Each step: one corpus pass -> 5 partial sums + count
     (bounded collect), driver-side update w_j <- quantize(w_j +
-    lr * g_j / n) with g_j = sum((y - sigmoid(z)) * x_j)."""
-    if cache_key is not None and cache_key in _WEIGHT_CACHE:
-        return _WEIGHT_CACHE[cache_key]
+    lr * g_j / n) with g_j = sum((y - sigmoid(z)) * x_j). Train once /
+    score many: the weights are stored in ``index_store`` under the
+    feature frame's fingerprint and (n_iter, lr)."""
+    return index_store.get_or_train(
+        "quality_logreg",
+        index_store.fingerprint(feats),
+        (n_iter, lr),
+        lambda: _logreg_gd(feats, n_iter, lr),
+    )
+
+
+def _logreg_gd(feats: DataFrame, n_iter: int, lr: float) -> list[float]:
     w = [0.0] * 5
     staged = feats.localCheckpoint(eager=False)
     for _ in range(n_iter):
@@ -151,8 +155,6 @@ def train_quality_logreg(
         w = [
             _half_up(w[j] + lr * row[f"g{j}"] / n) for j in range(5)
         ]
-    if cache_key is not None:
-        _WEIGHT_CACHE[cache_key] = w
     return w
 
 
@@ -258,9 +260,7 @@ def docs_quality_logreg_weights(
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    w = train_quality_logreg(
-        _features(d), cache_key=("qlr", sf_dir)
-    )
+    w = train_quality_logreg(_features(d))
     return spark.createDataFrame(
         [(j, wj) for j, wj in enumerate(w)], "j long, w double"
     )
@@ -347,15 +347,24 @@ def train_quality_logreg_momentum(
     n_iter: int = CONV_STEPS,
     lr: float = CONV_LR,
     beta: float = CONV_BETA,
-    cache_key: object = None,
 ) -> list[float]:
     """[w0..w5] after ``n_iter`` quantized heavy-ball GD steps from
     zero init over standardized features. Per step: one corpus pass ->
     6 partial sums + count; driver update v_j <- q(beta*v_j + g_j/n),
     w_j <- q(w_j + lr*v_j) — both written in the oracle's exact
-    textual order."""
-    if cache_key is not None and cache_key in _WEIGHT_CACHE:
-        return _WEIGHT_CACHE[cache_key]
+    textual order. Stored like ``train_quality_logreg``'s weights,
+    keyed by (n_iter, lr, beta)."""
+    return index_store.get_or_train(
+        "quality_logreg_momentum",
+        index_store.fingerprint(feats_std),
+        (n_iter, lr, beta),
+        lambda: _logreg_momentum_gd(feats_std, n_iter, lr, beta),
+    )
+
+
+def _logreg_momentum_gd(
+    feats_std: DataFrame, n_iter: int, lr: float, beta: float
+) -> list[float]:
     w = [0.0] * 6
     v = [0.0] * 6
     staged = feats_std.localCheckpoint(eager=False)
@@ -375,8 +384,6 @@ def train_quality_logreg_momentum(
             _half_up(beta * v[j] + row[f"g{j}"] / n) for j in range(6)
         ]
         w = [_half_up(w[j] + lr * v[j]) for j in range(6)]
-    if cache_key is not None:
-        _WEIGHT_CACHE[cache_key] = w
     return w
 
 
@@ -497,9 +504,7 @@ def docs_quality_logreg_converged(
         F.col("doc_id") % _HOLD_MOD != _HOLD_EQ
     )
     fstd_train, mu, sd = standardize_features(train)
-    w = train_quality_logreg_momentum(
-        fstd_train, cache_key=("qlr_conv", sf_dir)
-    )
+    w = train_quality_logreg_momentum(fstd_train)
     hold = feats.filter(F.col("doc_id") % _HOLD_MOD == _HOLD_EQ)
     hold_std = hold.select(
         "doc_id",
@@ -540,7 +545,7 @@ def docs_quality_logreg_scores(
         "doc_id", "text"
     )
     feats = _features(d)
-    w = train_quality_logreg(feats, cache_key=("qlr", sf_dir))
+    w = train_quality_logreg(feats)
     sig = F.lit(1.0) / (F.lit(1.0) + F.exp(-_z(w)))
     return feats.select(
         "doc_id",

@@ -578,6 +578,7 @@ GROUP BY 1, 2
     "the batch oracle.",
 )
 def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from dataengineer_job_scraper_etl_spark.operators import index_store
     from dataengineer_job_scraper_etl_spark.operators.similarity import (
         assign_to_centroid,
         kmeans_corpus_init,
@@ -593,10 +594,15 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     existing = e.filter(F.col("vec_id") % 10 < 8).select("vec_id", "embedding")
-    cents = kmeans_corpus_init(
-        existing, "vec_id", "embedding", DIM, N_CLUSTERS, n_iter=N_ITER,
-        cache_key=sf_dir,  # FROZEN index: train once, serve every batch
-        slice_tag="mod10_lt8",  # names the vec_id % 10 < 8 training slice
+    # FROZEN index: train once per training-slice fingerprint, serve
+    # every batch
+    cents = index_store.get_or_train(
+        "kmeans_corpus_init",
+        index_store.fingerprint(existing),
+        ("vec_id", "embedding", DIM, N_CLUSTERS, N_ITER),
+        lambda: kmeans_corpus_init(
+            existing, "vec_id", "embedding", DIM, N_CLUSTERS, n_iter=N_ITER
+        ),
     )
     index = normalize_assigned(existing, cents, "vec_id", "embedding").select(
         "cluster_id", F.col("nv").alias("ex_nv")

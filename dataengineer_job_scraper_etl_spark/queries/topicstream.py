@@ -91,6 +91,7 @@ FROM ab GROUP BY cid
 def streaming_topic_assignment(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    from dataengineer_job_scraper_etl_spark.operators import index_store
     from dataengineer_job_scraper_etl_spark.operators.similarity import (
         assign_to_centroid,
         kmeans_corpus_init,
@@ -106,15 +107,14 @@ def streaming_topic_assignment(
         .filter(F.col("doc_id") < _DOC_BOUND)
         .select("doc_id", "text")
     )
-    cents = kmeans_corpus_init(
-        hashtf_unit_embeddings(train),
-        id_col="doc_id",
-        vec_col="e",
-        dim=_DIM,
-        n_clusters=_K,
-        n_iter=2,
-        cache_key=sf_dir,  # FROZEN index: train once, serve every batch
-        slice_tag=f"hashtf_lt{_DOC_BOUND}",
+    emb = hashtf_unit_embeddings(train)
+    # FROZEN index: train once per training-slice fingerprint, serve
+    # every batch
+    cents = index_store.get_or_train(
+        "kmeans_corpus_init",
+        index_store.fingerprint(emb),
+        ("doc_id", "e", _DIM, _K, 2),
+        lambda: kmeans_corpus_init(emb, "doc_id", "e", _DIM, _K, n_iter=2),
     )
     d = _stage_docs_ingest_dir(spark, sf_dir)
     stream = (

@@ -130,109 +130,86 @@ def test_every_registered_entry_evidenced_or_scheduled():
     assert unevidenced_not_scheduled() == []
 
 
-# The 43 changed-tier seats of the FINAL r13 window, regenerated after
-# the r13 OPTIMIZATION pass: the optimization edits moved the v3
-# source hash of 77 oracle-bearing entries (shared-operator fan-out —
-# operators/dedup shingles+signature, operators/similarity topk paths,
-# the topics/pipeline_ops featurizer, spans/exsubverify staging, the
-# pca monitor chain, graphrank, lm/streaming_lm, prf, basket), so the
-# changed tier outgrew the window and plan_window's within-tier order
-# (last-audit round, then registration) seated the 43 with the OLDEST
-# driver evidence. Frozen HERE because the ledger re-snapshots at
-# install time — the changed set is only recomputable before
-# installation.
-_R13_CHANGED = {
-    "ann_ivf_probe_tradeoff",
-    "ann_ivf_topk",
-    "ann_ivfpq_topk",
-    "ann_opq_anisotropic_gain",
-    "ann_opq_vs_pq_gain",
-    "ann_recall_ivf",
-    "ann_recall_ivfpq",
-    "ann_recall_opq",
-    "ann_recall_pq_adc",
-    "ann_recall_rhp_lsh",
-    "ann_rhp_lsh_topk",
-    "corpus_dataset_card",
-    "corpus_pipeline_decontaminated",
-    "corpus_pipeline_full",
-    "corpus_pipeline_intake",
-    "corpus_pipeline_survivors",
-    "corpus_pipeline_survivors_stripped",
-    "docs_bigram_perplexity",
-    "docs_decontaminate_trim",
-    "docs_exact_substring_ingest",
-    "docs_exact_substring_trim",
-    "docs_incremental_ingest",
-    "docs_remove_boilerplate_spans",
-    "docs_repeated_ngram_coverage",
-    "docs_snapshot_diff",
-    "neardup_minhash_lsh",
-    "neardup_minhash_planted_recall",
-    "neardup_minhash_precision_contract",
-    "neardup_simhash",
-    "neardup_simhash_fingerprints",
-    "neardup_simhash_planted_recall",
-    "streaming_bigram_ppl_ingest",
-    "vec_cosine_topk",
-    "vec_drift_retrain_refreeze",
-    "vec_knn_pagerank_centrality",
-    "vec_label_centroid_norms",
-    "vec_neardup_cosine_pairs",
-    "vec_neardup_lsh_pairs",
-    "vec_neardup_lsh_planted_recall",
-    "vec_quantize_int8_calibrated",
-    "vec_quantize_int8_stats",
-    "vec_semdedup_centroid_survivors",
-    "vec_semdedup_incremental",
+# The 50 seats of the r14 window, regenerated after the
+# trained-artifact store refactor: every one is changed-tier (83
+# oracle-bearing entries moved their source hash across the r14
+# optimization commits and the refactor). Frozen HERE because the
+# changed set is only recomputable until the driver's evidence for
+# this window lands and promotes the audited baselines.
+_R14_CHANGED = {
+    "agg_approx_percentile_tol",
+    "agg_freq_items_contract",
+    "corpus_pipeline_allsource_mixture",
+    "docs_chunk_hashtf_retrieval",
+    "docs_chunk_sliding_udtf",
+    "docs_cluster_safe_split",
+    "docs_dedup_canonical",
+    "docs_dedup_clusters",
+    "docs_hashtf_kmeans_topics",
+    "docs_pack_sequences",
+    "docs_pretrain_filter",
+    "docs_quality_logreg_converged",
+    "docs_quality_logreg_scores",
+    "docs_quality_logreg_weights",
+    "events_funnel_conversion",
+    "events_hourly_daily_rollup",
+    "events_purchase_views_within_15m",
+    "events_user_daily_gapfill",
+    "events_user_rfm_segments",
+    "events_user_zscore",
+    "events_user_zscore_grouped_udf",
+    "lineitem_copurchase_lift",
+    "retrieval_prf_expansion",
+    "streaming_append_finalized_windows",
+    "streaming_attribution_join",
+    "streaming_dedup_redelivery",
+    "streaming_exact_substring_ingest",
+    "streaming_hopping_window",
+    "streaming_ingest_dedup_status",
+    "streaming_latest_per_user",
+    "streaming_pc1_drift_monitor",
+    "streaming_semdedup_ingest",
+    "streaming_session_counts",
+    "streaming_session_dynamic_gap",
+    "streaming_static_enrich",
+    "streaming_tumbling_hourly",
+    "text_bpe_token_count",
+    "vec_centroid_outlier_flags",
+    "vec_cluster_balanced_sample",
+    "vec_cluster_label_purity",
+    "vec_hard_negative_mining",
+    "vec_kmeans_profile",
+    "vec_knn_pagerank_ivf",
+    "vec_knn_pagerank_ivf_deep",
+    "vec_pc1_drift_psi",
+    "vec_pca_grid_sample",
+    "vec_pca_pc1_scores",
+    "vec_pca_top2_scores",
+    "vec_semdedup_presplit",
+    "vec_semdedup_survivors",
 }
 
 
-def test_r13_head_leads_changed_reproves_tail_drains_oldest():
-    """FINAL r13 window (post-optimization regeneration): the 7
-    never-audited r13 registrations lead (3 from build session 1 —
-    verified ExactSubstr, salted basket, streaming topic twin — plus
-    session 2's MRL dimension ladder, graded-IR-eval, kNN-triangle,
-    and CUPED entries); the other 43 seats are ALL changed-tier — the
-    optimization pass edited shared operators under 77 entries, so
-    the changed tier outgrew the window and the within-tier order
-    seated the 43 with the oldest driver evidence (a changed entry's
-    old green evidence is VOID for the current code, which is why the
-    tier outranks plain staleness). Consequence, documented here
-    deliberately: the 3 r7-stale UNCHANGED entries
-    (agg_distinct_counts, streaming_pc1_drift_monitor,
-    tpch_q1_pricing_summary — VERDICT r12 ask #1's deferrals, all
-    three re-verified green by the r12 judge personally and green in
-    every local sf0.01 sweep this round) carry valid-but-old evidence
-    and wait for r14, where they lead the staleness tier unless
-    crowded again."""
-    never_audited = {
-        "lineitem_copurchase_lift_salted",
-        "docs_exact_substring_verified",
-        "streaming_topic_assignment",
-        "ann_dim_truncation_tradeoff",
-        "retrieval_mlt_eval_metrics",
-        "vec_knn_clustering_coefficient",
-        "events_cuped_ab_adjustment",
-    }
-    n_new = len(never_audited)
-    head = catalog.AUDIT_SCHEDULE[:n_new]
-    assert set(head) == never_audited
-    assert set(catalog.AUDIT_SCHEDULE[n_new:]) == _R13_CHANGED
-    # the changed tier drains its own oldest evidence first: last-audit
-    # rounds are non-decreasing across the tier
+def test_r14_window_seats_oldest_changed_tier():
+    """Round-14 window: no entry failed its latest audit and every
+    registration has driver evidence, so there is no head — all 50
+    seats are changed-tier, and the changed tier (83 entries) outgrew
+    the window, so the within-tier order seats the OLDEST driver
+    evidence first. ROADMAP open item 1's named entries (changed in r13
+    and r14 with no driver hash since) hold seats."""
+    assert set(catalog.AUDIT_SCHEDULE) == _R14_CHANGED
     gen = catalog.AUDIT_SCHEDULE_META["generated_after_round"]
     last = _last_rounds(upto=gen)
-    tier = [last.get(n) for n in catalog.AUDIT_SCHEDULE[n_new:]]
+    tier = [last.get(n) for n in catalog.AUDIT_SCHEDULE]
+    assert None not in tier  # no never-audited head
     assert tier == sorted(tier), tier
-    # ask #1's five former rows-only seats re-prove under their NEW
-    # contract oracles in this window (their modules changed)
     for n in (
-        "neardup_minhash_lsh",
-        "neardup_simhash",
-        "neardup_simhash_fingerprints",
-        "ann_rhp_lsh_topk",
-        "ann_ivf_topk",
+        "docs_dedup_clusters",
+        "events_user_rfm_segments",
+        "vec_pca_grid_sample",
+        "docs_hashtf_kmeans_topics",
+        "vec_semdedup_presplit",
+        "vec_semdedup_survivors",
     ):
         assert n in catalog.AUDIT_SCHEDULE, n
 

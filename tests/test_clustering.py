@@ -99,27 +99,31 @@ def test_kmeans_corpus_init_deterministic(planted):
     assert all(x == round(x, 6) for _, v in c1 for x in v)
 
 
-def test_kmeans_corpus_init_cache_key_trains_once(planted):
-    """Frozen-index semantics: with cache_key the trained list is
-    memoized (same object back) and clear_trained_indexes drops it;
-    without cache_key every call retrains."""
-    from dataengineer_job_scraper_etl_spark.operators.similarity import (
-        clear_trained_indexes,
-    )
+def test_kmeans_corpus_init_is_cache_free_frozen_callers_use_store(planted):
+    """kmeans_corpus_init itself never memoizes (batch callers pay
+    their own training); frozen-index callers wrap it in the store,
+    where the same frame hits and clear() forces a retrain."""
+    from dataengineer_job_scraper_etl_spark.operators import index_store
 
-    key = "test_kci_cache"
-    clear_trained_indexes(key)
-    a = kmeans_corpus_init(planted, "vec_id", "embedding", DIM, 2, cache_key=key)
-    b = kmeans_corpus_init(planted, "vec_id", "embedding", DIM, 2, cache_key=key)
-    assert a is b  # hit, not retrain
-    clear_trained_indexes(key)
-    c = kmeans_corpus_init(planted, "vec_id", "embedding", DIM, 2, cache_key=key)
-    assert c is not a and c == a  # retrained to the same values
-    clear_trained_indexes(key)
-    # no key -> no memoization
     d = kmeans_corpus_init(planted, "vec_id", "embedding", DIM, 2)
     e = kmeans_corpus_init(planted, "vec_id", "embedding", DIM, 2)
     assert d is not e and d == e
+
+    def frozen():
+        return index_store.get_or_train(
+            "kmeans_corpus_init",
+            index_store.fingerprint(planted),
+            ("vec_id", "embedding", DIM, 2, 2),
+            lambda: kmeans_corpus_init(planted, "vec_id", "embedding", DIM, 2),
+        )
+
+    index_store.clear()
+    a = frozen()
+    assert frozen() is a  # hit, not retrain
+    index_store.clear()
+    c = frozen()
+    assert c is not a and c == a  # retrained to the same values
+    index_store.clear()
 
 
 def test_kmeans_empty_cluster_keeps_init_position(spark):

@@ -1,9 +1,10 @@
 """The drift -> retrain -> re-freeze lifecycle (queries/pca.py:
 serve_and_maybe_retrain): a planted-shift queue drives the monitor
-through detect (PSI vs frozen deciles), retrain trigger (stale caches
-cleared, new slice tag), and re-freeze (new monitor stable on the
-shifted distribution), with the old monitor serving untouched until
-the swap."""
+through detect (PSI vs frozen deciles), retrain trigger, and re-freeze
+(new monitor stable on the shifted distribution), with the old monitor
+serving untouched until the swap. Every trained artifact is keyed by
+its training frame's fingerprint, so the shifted rows get their own
+entries and nothing is invalidated by hand."""
 
 from __future__ import annotations
 
@@ -12,7 +13,6 @@ import copy
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.queries.pca import (
-    _MONITOR_CACHE,
     PSI_RETRAIN_THRESHOLD_PPM,
     monitor_psi_ppm,
     serve_and_maybe_retrain,
@@ -52,10 +52,7 @@ def _shift_along_pc1(df, v, scale=3.0):
 
 
 def test_planted_shift_queue_detect_retrain_refreeze(spark, sf_dir):
-    pca_key_v1 = ("test-retrain-pca", "v1")
-    monitor = train_pc1_monitor(_ref(spark, sf_dir), pca_key=pca_key_v1)
-    mon_key = ("pc1-monitor", "test-retrain")
-    _MONITOR_CACHE[mon_key] = monitor
+    monitor = train_pc1_monitor(_ref(spark, sf_dir))
     snapshot = copy.deepcopy(monitor)
 
     # --- batch 1: in-distribution -> serve, no retrain ---
@@ -70,23 +67,19 @@ def test_planted_shift_queue_detect_retrain_refreeze(spark, sf_dir):
     # --- batch 2: planted shift -> detect + retrain + re-freeze ---
     v = monitor[1]
     b2 = _shift_along_pc1(_cur(spark, sf_dir), v)
-    pca_key_v2 = ("test-retrain-pca", "v2")  # NEW slice tag
     fresh, psi2, retrained = serve_and_maybe_retrain(
-        monitor,
-        b2,
-        new_ref_rows=b2,
-        new_pca_key=pca_key_v2,
-        stale_monitor_keys=(mon_key,),
+        monitor, b2, new_ref_rows=b2
     )
     assert retrained
     assert psi2 > PSI_RETRAIN_THRESHOLD_PPM
     # the old monitor served the detecting batch and was never torn:
     assert monitor == snapshot
-    # stale frozen state is gone; the new monitor is a re-freeze, not
-    # a mutation of the old one
-    assert mon_key not in _MONITOR_CACHE
+    # the new monitor is a re-freeze on the shifted rows' own key, not
+    # a mutation of the old one — which still serves its own slice
     assert fresh is not monitor
     assert fresh[2] != monitor[2]  # new decile edges
+    assert train_pc1_monitor(b2) is fresh
+    assert train_pc1_monitor(_ref(spark, sf_dir)) is monitor
 
     # --- batch 3: post-swap serving — the shifted distribution is the
     # new normal, PSI against the re-frozen monitor is back under the
@@ -99,27 +92,25 @@ def test_planted_shift_queue_detect_retrain_refreeze(spark, sf_dir):
     assert psi3 <= PSI_RETRAIN_THRESHOLD_PPM
 
 
-def test_retrain_clears_stale_ann_indexes(spark, sf_dir):
-    """A drift-triggered retrain must also drop ANN index artifacts
-    trained on the pre-shift corpus (IVF centroids / PQ codebooks /
-    OPQ rotations) — serving them degrades recall silently."""
-    from dataengineer_job_scraper_etl_spark.operators.opq import (
-        _ROTATION_CACHE,
-        opq_train,
-    )
+def test_retrain_never_serves_stale_ann_indexes(spark, sf_dir):
+    """After a drift-triggered retrain, ANN index artifacts trained on
+    the pre-shift corpus (IVF centroids / PQ codebooks / OPQ
+    rotations) must never serve the shifted rows — serving them
+    degrades recall silently. The shifted frame has its own
+    fingerprint, so it trains its own index; the unchanged reference
+    corpus keeps serving its own (no needless eviction)."""
+    from dataengineer_job_scraper_etl_spark.operators.opq import opq_train
 
-    key = "test-retrain-index"
     ref = _ref(spark, sf_dir)
-    opq_train(ref, "embedding", 64, m=8, cache_key=key)
-    assert (key, 64, 8) in _ROTATION_CACHE
+    rot_ref = opq_train(ref, "embedding", 64, m=8)
 
     monitor = train_pc1_monitor(ref)
     b = _shift_along_pc1(_cur(spark, sf_dir), monitor[1])
-    _, _, retrained = serve_and_maybe_retrain(
-        monitor, b, new_ref_rows=b, stale_index_key=key
-    )
+    _, _, retrained = serve_and_maybe_retrain(monitor, b, new_ref_rows=b)
     assert retrained
-    assert (key, 64, 8) not in _ROTATION_CACHE
+    rot_b = opq_train(b, "embedding", 64, m=8)
+    assert rot_b is not rot_ref and rot_b != rot_ref
+    assert opq_train(ref, "embedding", 64, m=8) is rot_ref
 
 
 def test_streaming_lifecycle_detect_retrain_refreeze(spark, sf_dir, tmp_path):
@@ -127,30 +118,16 @@ def test_streaming_lifecycle_detect_retrain_refreeze(spark, sf_dir, tmp_path):
     micro-batch stream. A 3-file queue (in-distribution, planted
     shift, shifted again) drains through foreachBatch with
     maxFilesPerTrigger=1: batch 0 serves clean, batch 1 breaches PSI
-    and triggers retrain + re-freeze + stale-cache invalidation (incl.
-    an OPQ rotation trained on the pre-shift corpus), batch 2 is
+    and triggers retrain + re-freeze on its own rows, batch 2 is
     served by the SWAPPED monitor and stays under the bar — proving
     the re-frozen monitor, not the stale one, serves subsequent
     batches."""
-    from dataengineer_job_scraper_etl_spark.operators.opq import (
-        _ROTATION_CACHE,
-        opq_train,
-    )
-    from dataengineer_job_scraper_etl_spark.queries.pca import (
-        _MONITOR_CACHE,
-        PSI_RETRAIN_THRESHOLD_PPM,
-    )
     from dataengineer_job_scraper_etl_spark.streaming.jobs import (
         streaming_drift_lifecycle,
     )
 
     ref = _ref(spark, sf_dir)
-    monitor = train_pc1_monitor(ref, pca_key=("stream-test-pca", "v1"))
-    mon_key = ("pc1-monitor", "stream-test")
-    _MONITOR_CACHE[mon_key] = monitor
-    idx_key = "stream-test-index"
-    opq_train(ref, "embedding", 64, m=8, cache_key=idx_key)
-    assert (idx_key, 64, 8) in _ROTATION_CACHE
+    monitor = train_pc1_monitor(ref)
 
     # stage the ordered queue: lexicographic file order = batch order
     cur = _cur(spark, sf_dir).select(
@@ -172,9 +149,6 @@ def test_streaming_lifecycle_detect_retrain_refreeze(spark, sf_dir, tmp_path):
         stream,
         monitor,
         checkpoint=str(tmp_path / "cp"),
-        pca_key_tag=("stream-test-pca", "retrain"),
-        stale_monitor_keys=(mon_key,),
-        stale_index_key=idx_key,
     )
 
     assert [h["retrained"] for h in history] == [False, True, False]
@@ -183,9 +157,9 @@ def test_streaming_lifecycle_detect_retrain_refreeze(spark, sf_dir, tmp_path):
     # post-swap: the re-frozen monitor serves batch 2 under the bar
     assert history[2]["psi_ppm"] <= PSI_RETRAIN_THRESHOLD_PPM
     assert final is not monitor
-    # stale artifacts dropped during the in-stream retrain
-    assert mon_key not in _MONITOR_CACHE
-    assert (idx_key, 64, 8) not in _ROTATION_CACHE
+    # the reference slice's monitor is still the stored one: the
+    # in-stream retrain keyed its re-freeze on the detecting batch
+    assert train_pc1_monitor(ref) is monitor
 
 
 def test_refreeze_entry_statistics_and_branch_agree(spark, sf_dir):
@@ -202,12 +176,11 @@ def test_refreeze_entry_statistics_and_branch_agree(spark, sf_dir):
     )
 
     ref = _ref(spark, sf_dir)
-    mon1 = train_pc1_monitor(ref, pca_key=("t-refreeze-v1", sf_dir))
+    mon1 = train_pc1_monitor(ref)
 
     # no shift -> no retrain -> serving IS mon1
     serving, psi, retrained = serve_and_maybe_retrain(
-        mon1, _cur(spark, sf_dir), new_ref_rows=_cur(spark, sf_dir),
-        new_pca_key=("t-refreeze-nope", sf_dir),
+        mon1, _cur(spark, sf_dir), new_ref_rows=_cur(spark, sf_dir)
     )
     assert not retrained and serving is mon1
 
@@ -220,8 +193,7 @@ def test_refreeze_entry_statistics_and_branch_agree(spark, sf_dir):
         ).alias("embedding"),
     )
     serving2, psi2, retrained2 = serve_and_maybe_retrain(
-        mon1, shifted, new_ref_rows=shifted,
-        new_pca_key=("t-refreeze-v2", sf_dir),
+        mon1, shifted, new_ref_rows=shifted
     )
     assert retrained2 and serving2 is not mon1
     assert psi2 > PSI_RETRAIN_THRESHOLD_PPM

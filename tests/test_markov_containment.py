@@ -292,10 +292,7 @@ def test_ivf_probe_ladder_measured_totals(spark, sf_dir):
     exact = vec_cosine_topk(spark, sf_dir).select("qid", "vec_id")
     totals = []
     for probes in PROBE_LADDER:
-        ann = ivf_topk(
-            e, q, dim=EMBED_DIM, k=10, n_probe=probes,
-            centroid_cache_key=sf_dir,
-        )
+        ann = ivf_topk(e, q, dim=EMBED_DIM, k=10, n_probe=probes)
         totals.append(
             ann.join(exact, ["qid", "vec_id"], "left_semi").count()
         )

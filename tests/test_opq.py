@@ -1,7 +1,7 @@
 """OPQ pre-rotation (operators/opq.py): the mechanism contracts the
 recall entries rest on — the learned transform is orthogonal (metric-
 preserving), decorrelates the corpus, balances per-subspace variance,
-caches under the shared staleness contract, and the rotate stage
+is stored under the training frame's fingerprint, and the rotate stage
 reproduces a driver-side matmul exactly."""
 
 from __future__ import annotations
@@ -13,8 +13,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from dataengineer_job_scraper_etl_spark.operators import index_store
 from dataengineer_job_scraper_etl_spark.operators.opq import (
-    _ROTATION_CACHE,
     _eig_alloc,
     opq_rotate,
     opq_train,
@@ -116,23 +116,22 @@ def test_opq_rotate_matches_numpy_and_keeps_columns(spark):
 
 
 def test_rotation_cache_is_keyed_and_cleared(spark):
-    from dataengineer_job_scraper_etl_spark.operators.similarity import (
-        clear_trained_indexes,
-    )
-
     mat = _corr_data(n=60)
     df = _emb(spark, mat)
-    key = "test-opq-cache"
-    clear_trained_indexes(key)
-    first = opq_train(df, "embedding", DIM, m=M, cache_key=key)
-    assert (key, DIM, M) in _ROTATION_CACHE
-    # cache hit: same object, the second frame is never scanned
-    other = _emb(spark, [[9.0] * DIM] * 3)
-    assert opq_train(other, "embedding", DIM, m=M, cache_key=key) is first
-    # key-scoped clear drops it (and would drop "<key>\x00opq"
-    # composites)
-    clear_trained_indexes(key)
-    assert (key, DIM, M) not in _ROTATION_CACHE
+    index_store.clear()
+    first = opq_train(df, "embedding", DIM, m=M)
+    # store hit on the same frame: same object, no second Gram pass
+    assert opq_train(df, "embedding", DIM, m=M) is first
+    # a DIFFERENT frame is a different key: it trains its own rotation
+    # instead of being served the first frame's
+    other = _emb(spark, _corr_data(n=60, seed=11))
+    again = opq_train(other, "embedding", DIM, m=M)
+    assert again is not first and again != first
+    # clear() drops everything; retraining reproduces the values
+    index_store.clear()
+    retrained = opq_train(df, "embedding", DIM, m=M)
+    assert retrained is not first and retrained == first
+    index_store.clear()
 
 
 def test_opq_train_rejects_indivisible_m(spark):

@@ -16,8 +16,8 @@ import math
 
 import numpy as np
 
+from dataengineer_job_scraper_etl_spark.operators import index_store
 from dataengineer_job_scraper_etl_spark.operators.pca import (
-    _PCA_CACHE,
     gram_triplets,
     half_up,
     pca_top_component,
@@ -160,17 +160,22 @@ def test_cache_serves_and_is_keyed(spark):
     # (correctly) raises as degenerate; plant variance along x0 instead.
     mat = [[float(3 * i + j == 0) + i for j in range(DIM)] for i in range(DIM)]
     df = _emb(spark, mat)
-    key = ("test-pca-cache", DIM)
-    _PCA_CACHE.pop((key, 1), None)
-    first = pca_top_components(df, "embedding", DIM, 1, cache_key=key)
-    assert (key, 1) in _PCA_CACHE  # keyed by (caller key, n_components)
-    # Served from cache: same object, no recompute of a different frame.
-    other = _emb(spark, [[9.0] * DIM] * 3)
-    again = pca_top_components(other, "embedding", DIM, 1, cache_key=key)
-    assert again is first
-    # A different component count is a DIFFERENT cache slot.
-    assert (key, 2) not in _PCA_CACHE
-    _PCA_CACHE.pop((key, 1), None)
+    index_store.clear()
+    first = pca_top_components(df, "embedding", DIM, 1)
+    # Served from the store: same object for the same frame and params.
+    assert pca_top_components(df, "embedding", DIM, 1) is first
+    # A DIFFERENT frame is a different key: it is trained, not served
+    # the first frame's components.
+    other = _emb(spark, [row[::-1] for row in mat])
+    again = pca_top_components(other, "embedding", DIM, 1)
+    assert again is not first and again != first
+    # A different component count or iteration budget is a DIFFERENT
+    # slot too, and n_iter changes the quantized trajectory.
+    assert pca_top_components(df, "embedding", DIM, 2) is not first
+    fewer = pca_top_components(df, "embedding", DIM, 1, n_iter=1)
+    assert fewer[2] != first[2]
+    assert len(index_store._STORE) == 4
+    index_store.clear()
 
 
 def test_deflation_recovers_second_axis(spark):

@@ -5,8 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from dataengineer_job_scraper_etl_spark.operators import index_store
 from dataengineer_job_scraper_etl_spark.queries.quality_model import (
-    _WEIGHT_CACHE,
     _features,
     _half_up,
     _z,
@@ -43,7 +43,9 @@ def test_features_are_exact_ratios(spark):
 def test_training_is_deterministic_and_quantized(spark):
     feats = _features(_toy(spark))
     w1 = train_quality_logreg(feats, n_iter=4, lr=1.0)
+    index_store.clear()  # train twice, not a store hit vs itself
     w2 = train_quality_logreg(feats, n_iter=4, lr=1.0)
+    assert w2 is not w1
     assert w1 == w2
     # every iterate lands on the 1e-6 grid
     assert all(wj == _half_up(wj) for wj in w1)
@@ -53,14 +55,17 @@ def test_training_is_deterministic_and_quantized(spark):
 
 def test_weight_cache_trains_once_per_key(spark):
     feats = _features(_toy(spark))
-    key = ("qlr-test", id(feats))
-    _WEIGHT_CACHE.pop(key, None)
-    w1 = train_quality_logreg(feats, n_iter=2, cache_key=key)
-    # a DIFFERENT frame under the same key must return the cached fit
+    index_store.clear()
+    w1 = train_quality_logreg(feats, n_iter=2)
+    assert train_quality_logreg(feats, n_iter=2) is w1  # store hit
+    # a DIFFERENT frame is a different key: it trains its own fit
     other = _features(_toy(spark).limit(2))
-    w2 = train_quality_logreg(other, n_iter=2, cache_key=key)
-    assert w1 == w2
-    _WEIGHT_CACHE.pop(key, None)
+    assert train_quality_logreg(other, n_iter=2) != w1
+    # the training parameters are part of the key: the same frame at
+    # the default n_iter is NOT served the 2-step weights
+    assert train_quality_logreg(feats) != w1
+    assert train_quality_logreg(feats, n_iter=2, lr=1.0) != w1
+    index_store.clear()
 
 
 def test_gradient_moves_toward_labels(spark):
@@ -139,7 +144,12 @@ def test_momentum_training_cache_and_determinism(spark, sf_dir):
     )
     assert all(s > 0 for s in sd)
     w1 = train_quality_logreg_momentum(fstd, n_iter=6)
+    assert train_quality_logreg_momentum(fstd, n_iter=6) is w1  # store hit
+    # beta is part of the key
+    assert train_quality_logreg_momentum(fstd, n_iter=6, beta=0.5) != w1
+    index_store.clear()  # train twice, not a store hit vs itself
     w2 = train_quality_logreg_momentum(fstd, n_iter=6)
+    assert w2 is not w1
     assert w1 == w2
     assert len(w1) == 6
     for wj in w1:

@@ -83,35 +83,35 @@ def test_ivf_recall_on_clusters(spark):
 
 
 def test_ivf_centroid_cache_hit_is_identical(spark):
-    """Train-once/probe-many: a cache-keyed second call must skip the
-    Lloyd rounds AND return bit-identical results (training is seeded-
-    deterministic, so serving from cached centroids cannot change any
-    answer)."""
-    from dataengineer_job_scraper_etl_spark.operators import similarity
+    """Train-once/probe-many: a second call on the same corpus must
+    skip the Lloyd rounds AND return bit-identical results (training
+    is seeded-deterministic, so serving stored centroids cannot change
+    any answer)."""
+    from dataengineer_job_scraper_etl_spark.operators import (
+        index_store,
+        similarity,
+    )
 
     vecs = _clustered_vectors()
     corpus, queries = _frames(spark, vecs)
-    key = "test-cache://corpus-a"
-    similarity._CENTROID_CACHE.clear()
+    index_store.clear()
     cold = ivf_topk(
-        corpus, queries, dim=DIM, k=5, n_clusters=4, n_probe=2,
-        centroid_cache_key=key,
+        corpus, queries, dim=DIM, k=5, n_clusters=4, n_probe=2
     ).collect()
-    assert len(similarity._CENTROID_CACHE) == 1
-    cached = next(iter(similarity._CENTROID_CACHE.values()))
-    # poison-pill the trainer: a cache hit must never retrain
+    assert len(index_store._STORE) == 1
+    cached = next(iter(index_store._STORE.values()))
+    # poison-pill the trainer: a store hit must never retrain
     orig = similarity._kmeans_rounds
     similarity._kmeans_rounds = lambda *a, **k: (_ for _ in ()).throw(
         AssertionError("cache hit retrained")
     )
     try:
         warm = ivf_topk(
-            corpus, queries, dim=DIM, k=5, n_clusters=4, n_probe=2,
-            centroid_cache_key=key,
+            corpus, queries, dim=DIM, k=5, n_clusters=4, n_probe=2
         ).collect()
     finally:
         similarity._kmeans_rounds = orig
-        similarity._CENTROID_CACHE.clear()
+        index_store.clear()
     assert sorted(map(str, warm)) == sorted(map(str, cold))
     assert cached  # trained centroids were actually stored
 
@@ -129,6 +129,7 @@ def test_pq_encode_and_adc_topk(spark):
     are valid, the relational ADC distance equals the NumPy lookup-table
     sum computed from the SAME codebooks and codes, and ADC top-k
     recovers most of the exact top-5 on clustered data."""
+    from dataengineer_job_scraper_etl_spark.operators import index_store
     from dataengineer_job_scraper_etl_spark.operators.similarity import (
         pq_encode,
         pq_topk_adc,
@@ -138,7 +139,9 @@ def test_pq_encode_and_adc_topk(spark):
     vecs = _clustered_vectors()
     corpus, queries = _frames(spark, vecs)
     books = pq_train(corpus, "embedding", DIM, m=4, k=8, n_iter=2)
+    index_store.clear()  # train twice, not a store hit vs itself
     books2 = pq_train(corpus, "embedding", DIM, m=4, k=8, n_iter=2)
+    assert books2 is not books
     assert books == books2  # seeded training is deterministic
     assert len(books) == 4 and all(len(b) == 8 for b in books)
 
@@ -222,26 +225,32 @@ def test_ivfpq_topk_recall_after_rerank(spark):
 
 def test_ivfpq_cache_hit_runs_zero_lloyd_rounds(spark):
     """Train-once/probe-many for IVF-PQ (round-4 gap: ivfpq_topk
-    retrained coarse centroids + m codebooks per call): a cache-keyed
-    second call must consult both caches and never invoke the trainer
-    — and return bit-identical results (seeded determinism)."""
-    from dataengineer_job_scraper_etl_spark.operators import similarity
+    retrained coarse centroids + m codebooks per call): a second call
+    on the same corpus must be served from the store and never invoke
+    the trainer — and return bit-identical results (seeded
+    determinism)."""
+    from dataengineer_job_scraper_etl_spark.operators import (
+        index_store,
+        similarity,
+    )
     from dataengineer_job_scraper_etl_spark.operators.similarity import (
         ivfpq_topk,
     )
 
     vecs = _clustered_vectors()
     corpus, queries = _frames(spark, vecs)
-    key = "test-cache://ivfpq-corpus"
-    similarity.clear_trained_indexes()
+    index_store.clear()
     kw = dict(
         dim=DIM, k=5, n_clusters=4, n_probe=2, m=4, k_codes=8,
-        shortlist=10, centroid_cache_key=key,
+        shortlist=10,
     )
     cold = ivfpq_topk(corpus, queries, **kw).collect()
-    assert len(similarity._CENTROID_CACHE) == 1
-    assert len(similarity._CODEBOOK_CACHE) == 1
-    assert len(similarity._CODED_CORPUS_CACHE) == 1
+    # centroids, codebooks and the encoded corpus, all under ONE
+    # fingerprint (taken before the operator's own checkpoint)
+    assert sorted(k[0] for k in index_store._STORE) == [
+        "ivf_centroids", "ivfpq_coded", "pq_codebooks",
+    ]
+    assert len({k[2] for k in index_store._STORE}) == 1
     orig = similarity._kmeans_rounds
     orig_encode = similarity.pq_encode
     similarity._kmeans_rounds = lambda *a, **k: (_ for _ in ()).throw(
@@ -258,37 +267,18 @@ def test_ivfpq_cache_hit_runs_zero_lloyd_rounds(spark):
         similarity._kmeans_rounds = orig
         similarity.pq_encode = orig_encode
     assert sorted(map(str, warm)) == sorted(map(str, cold))
-    # coarse centroids share plain IVF's cache tuple: a warmed IVF-PQ
+    # coarse centroids share plain IVF's store key: a warmed IVF-PQ
     # index also serves ivf_topk without retraining
     similarity._kmeans_rounds = lambda *a, **k: (_ for _ in ()).throw(
         AssertionError("ivf probe after ivfpq warm-up retrained")
     )
     try:
         ivf_topk(
-            corpus, queries, dim=DIM, k=5, n_clusters=4, n_probe=2,
-            centroid_cache_key=key,
+            corpus, queries, dim=DIM, k=5, n_clusters=4, n_probe=2
         ).collect()
     finally:
         similarity._kmeans_rounds = orig
-        similarity.clear_trained_indexes()
-
-
-def test_clear_trained_indexes_scopes_by_key(spark):
-    from dataengineer_job_scraper_etl_spark.operators import similarity
-
-    similarity._CENTROID_CACHE[("a", 1)] = [(0, [0.0])]
-    similarity._CENTROID_CACHE[("b", 1)] = [(0, [0.0])]
-    similarity._CODEBOOK_CACHE[("a", 2)] = [[(0, [0.0])]]
-    # NUL-separated composite belongs to corpus "a"; "a:b" is a
-    # DISTINCT corpus whose key merely shares a prefix (ADVICE r8:
-    # the ':'-separator rule over-cleared it)
-    similarity._CODEBOOK_CACHE[("a\x00opq", 2)] = [[(0, [0.0])]]
-    similarity._CENTROID_CACHE[("a:b", 1)] = [(0, [1.0])]
-    similarity.clear_trained_indexes("a")
-    assert list(similarity._CENTROID_CACHE) == [("b", 1), ("a:b", 1)]
-    assert not similarity._CODEBOOK_CACHE
-    similarity.clear_trained_indexes()
-    assert not similarity._CENTROID_CACHE
+        index_store.clear()
 
 
 def test_embedding_neardup_lsh_pairs_finds_parallel_copies(spark):
