@@ -8,6 +8,14 @@ Covers the reference's I/O surface (SURVEY.md §2.1/§2.2) Spark-first:
 - S6 JSONL pattern scan: skill patterns as a DataFrame for inspection,
   and as a driver-side list for broadcasting into UDFs.
 - S7 in-memory rows -> typed frame (reference main.py:114).
+- Parquet scan: ``read_parquet`` is the engine's one table reader. A
+  plain ``spark.read.parquet`` starts a Spark job that reads file
+  footers to infer the schema on every call; ``read_parquet`` infers
+  once per file listing and then supplies the schema, so a repeated
+  read of unchanged files starts no job. The key is the path plus
+  each file's (path, length, mtime) under it, listed through the
+  Hadoop FileSystem API; a rewritten, added or removed file changes
+  it, and a hit builds the same frame a miss does.
 - K1 parquet sink: real ``partitionBy`` columns replace the reference's
   filename-encoded partitioning (reference main.py:181-185 writes
   ``transformed/{title}_jobs_{ddmmyyyy}.parquet``).
@@ -25,6 +33,8 @@ from __future__ import annotations
 import json
 from collections.abc import Iterable, Mapping
 
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -43,13 +53,65 @@ TABLE_NAMES = (
 )
 
 
+def file_stamps(
+    spark: SparkSession, paths: Iterable[str]
+) -> tuple[tuple[str, int, int], ...]:
+    """Sorted (path, length, mtime) of every file at or under ``paths``
+    (directories are listed recursively) through the Hadoop FileSystem
+    API, so any scheme Spark reads works. A file named in ``paths``
+    keeps that name. Each file costs about six py4j round trips; the
+    Path class is bound directly because looking it up through the JVM
+    view costs as much as stamping a file. A missing path raises
+    ``Py4JJavaError``."""
+    path_cls = JavaClass("org.apache.hadoop.fs.Path", spark._jvm._gateway_client)
+    conf = spark._jsc.hadoopConfiguration()
+    stamps, todo = [], []
+    for path in paths:
+        p = path_cls(path)
+        fs = p.getFileSystem(conf)
+        todo.append((path, fs, fs.getFileStatus(p)))
+    while todo:
+        name, fs, st = todo.pop()
+        if st.isDirectory():
+            for child in fs.listStatus(st.getPath()):
+                todo.append((child.getPath().toString(), fs, child))
+        else:
+            stamps.append((name, st.getLen(), st.getModificationTime()))
+    return tuple(sorted(stamps))
+
+
+# path -> (file_stamps of the path, schema inferred from those files)
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    file listing. A hit (the listing's stamps match the stored ones)
+    supplies the stored schema, so Spark skips the footer-inference
+    job; a miss infers, stores and then makes the same schema-supplied
+    read, so hits and misses build identical frames. A path that
+    cannot be listed (missing, a glob) is inferred every time, which
+    raises exactly what ``spark.read.parquet`` raises. A stored schema
+    serves every session; the confs that steer parquet inference
+    (``spark.sql.parquet.binaryAsString`` and kin) are not in the key,
+    so they must keep one value per process."""
+    try:
+        stamps = file_stamps(spark, [path])
+    except Py4JJavaError:
+        stamps = None
+    stored = _SCHEMAS.get(path)
+    if stamps is not None and stored is not None and stored[0] == stamps:
+        schema = stored[1]
+    else:
+        schema = spark.read.parquet(path).schema
+        if stamps is not None:
+            _SCHEMAS[path] = (stamps, schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: Iterable[str] = TABLE_NAMES) -> dict[str, DataFrame]:
     """Load the driver's testdata tables for one scale factor."""
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}
+    return {name: read_parquet(spark, f"{sf_dir}/{name}.parquet") for name in names}
 
 
 def read_csv(
@@ -250,7 +312,7 @@ def compact_parquet(
             raise IOError(
                 f"compact_parquet: recovery rename {old} -> {base} failed"
             )
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     n = df.count()
     df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
     if fs.exists(hold):  # leftover from a crashed prior run

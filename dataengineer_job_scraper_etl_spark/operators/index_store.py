@@ -33,6 +33,8 @@ from typing import TypeVar
 
 from pyspark.sql import DataFrame
 
+from dataengineer_job_scraper_etl_spark.io import file_stamps
+
 T = TypeVar("T")
 
 _STORE: dict[tuple, object] = {}
@@ -40,15 +42,7 @@ _STORE: dict[tuple, object] = {}
 
 def fingerprint(df: DataFrame) -> tuple:
     """(plan semanticHash, ((path, length, mtime), ...)) of ``df``."""
-    spark = df.sparkSession
-    conf = spark._jsc.hadoopConfiguration()
-    path_cls = spark._jvm.org.apache.hadoop.fs.Path
-    files = []
-    for f in sorted(df.inputFiles()):
-        p = path_cls(f)
-        st = p.getFileSystem(conf).getFileStatus(p)
-        files.append((f, st.getLen(), st.getModificationTime()))
-    return (df.semanticHash(), tuple(files))
+    return (df.semanticHash(), file_stamps(df.sparkSession, df.inputFiles()))
 
 
 def _alive(df: DataFrame) -> bool:

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dataengineer_job_scraper_etl_spark.io import read_parquet
+
 # decoder: payload bytes -> dict of extracted features, or None on
 # undecodable input (nulls propagate, matching the reference's
 # fetch-failure -> null convention).
@@ -65,7 +67,7 @@ def documents_as_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build a multimodal asset table from the documents fixture: text
     payload as utf-8 bytes + metadata struct. Stands in for an
     image/audio corpus with identical plumbing."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet")
     payload = F.encode(F.col("text"), "utf-8")
     return d.select(
         F.col("doc_id").alias("asset_id"),

@@ -29,6 +29,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.operators.components import (
     connected_components,
 )
@@ -257,7 +258,7 @@ def write_pretraining_corpus(
     layout shard consumers scan — and return the surviving doc count."""
     out = build_pretraining_corpus(docs, **kwargs)
     out.write.mode("overwrite").partitionBy("split", "source").parquet(path)
-    return spark.read.parquet(path).count()
+    return read_parquet(spark, path).count()
 
 
 def incremental_intake(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.io import (
+    read_parquet,
     write_if_nonempty,
     write_parquet_partitioned,
 )
@@ -114,7 +115,7 @@ def run_pipeline(
         if wrote_bronze:
             # re-read the checkpoint so transform consumes the persisted
             # bronze (EP3->EP2 staging), not a re-scrape.
-            raw = spark.read.parquet(bronze_path)
+            raw = read_parquet(spark, bronze_path)
 
     silver = transform_postings(raw, phrases, text_phrases).withColumn(
         "ingest_date", F.date_format(F.current_date(), "yyyy-MM-dd")

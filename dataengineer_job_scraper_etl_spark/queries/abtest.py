@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 PERIOD_SPLIT = "2024-01-16"  # pre: ts < split; experiment: ts >= split
 METRIC_EVENT = "purchase"
@@ -322,7 +323,7 @@ def cuped_readout(per_user: DataFrame) -> DataFrame:
 def events_cuped_ab_adjustment(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
+    e = read_parquet(spark, f"{sf_dir}/events.parquet").filter(
         F.col("event_type") == METRIC_EVENT
     )
     cents = F.round(F.col("value") * 100, 0).cast("long")

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 _LOOKBACK_H = 24
 _TAU_S = 6 * 3600.0
@@ -75,7 +76,7 @@ FROM touch
 def events_multitouch_attribution(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "user_id", "event_type",
     ).localCheckpoint(eager=False)  # both join sides read it
@@ -168,7 +169,7 @@ def _stage_purchase_stream_dir(spark: SparkSession, sf_dir: str) -> str:
 
     def build(staged: str) -> None:
         d = (
-            spark.read.parquet(src)
+            read_parquet(spark, src)
             .filter(
                 (F.col("event_type") == "purchase")
                 & (F.col("event_id") % _STREAM_MOD >= _STREAM_GE)
@@ -206,7 +207,7 @@ def streaming_multitouch_attribution(
     )
 
     views = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        read_parquet(spark, f"{sf_dir}/events.parquet")
         .filter(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 _MIN_CO = 3  # pair support floor (absolute co-order count)
 _MAX_BASKET = 64  # drop baskets above this many distinct parts
@@ -109,7 +110,7 @@ def basket_cap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (on every shipped fixture n_capped is 0 and the entry is the
     uncapped formulation bit-for-bit)."""
     sizes = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        read_parquet(spark, f"{sf_dir}/lineitem.parquet")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
         .groupBy("o")
@@ -144,7 +145,7 @@ def lineitem_copurchase_lift(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     op = _capped_baskets(
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     ).localCheckpoint(eager=False)  # shared by counts + both join sides
     n = op.agg(F.countDistinct("o").cast("bigint").alias("n_orders"))
     # pc feeds the support prune AND both marginal joins — staged once
@@ -304,7 +305,7 @@ def lineitem_copurchase_lift_salted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     op = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        read_parquet(spark, f"{sf_dir}/lineitem.parquet")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
         .localCheckpoint(eager=False)  # shared by counts + join sides

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.operators.similarity import (
     _as_double,
     _sq_dist,
@@ -139,7 +140,7 @@ GROUP BY a2.cid
     "size + mean member distance to the final centroid.",
 )
 def vec_kmeans_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     cents = kmeans_corpus_init(
@@ -184,7 +185,7 @@ FROM a2 LEFT JOIN pairs p ON a2.vec_id = p.vec_id
     "unpruned by design (the documented SemDeDup miss mode).",
 )
 def vec_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     return semdedup_survivors(
         e, "vec_id", "embedding", DIM, N_CLUSTERS, n_iter=N_ITER, tau=TAU
     )
@@ -218,7 +219,7 @@ FROM a2 LEFT JOIN pairs p ON a2.vec_id = p.vec_id
     "clusters exceed the bound, so the split path genuinely engages.",
 )
 def vec_semdedup_presplit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     return semdedup_survivors(
         e,
         "vec_id",
@@ -285,7 +286,7 @@ def vec_semdedup_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
         semdedup_centroid_survivors,
     )
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     return semdedup_centroid_survivors(
         e, "vec_id", "embedding", DIM, N_CLUSTERS, n_iter=N_ITER, tau=TAU
     )
@@ -320,7 +321,7 @@ FROM ranked WHERE rn <= {_BALANCED_PER_CLUSTER} GROUP BY cid
 def vec_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     cents = kmeans_corpus_init(
@@ -398,7 +399,7 @@ def vec_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         semdedup_incremental_status,
     )
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     existing = e.filter(F.col("vec_id") % 10 < 8)
     batch = e.filter(F.col("vec_id") % 10 >= 8)
     return semdedup_incremental_status(
@@ -436,7 +437,7 @@ FROM d JOIN st ON d.cid = st.cid
     "broadcasts back — no second shuffle of the corpus.",
 )
 def vec_centroid_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     cents = kmeans_corpus_init(
@@ -515,7 +516,7 @@ def vec_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         normalize_assigned,
     )
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     cents = kmeans_corpus_init(
         e.select("vec_id", "embedding"), "vec_id", "embedding",
         DIM, N_CLUSTERS, n_iter=N_ITER,
@@ -596,7 +597,7 @@ FROM win JOIN tot ON win.cid = tot.cid
 def vec_cluster_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     cents = kmeans_corpus_init(
         e.select("vec_id", "embedding"), "vec_id", "embedding",
         DIM, N_CLUSTERS, n_iter=N_ITER,

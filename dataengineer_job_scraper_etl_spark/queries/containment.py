@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.text import _trigrams
 
 _DOC_BOUND = 150
@@ -88,7 +89,7 @@ WHERE i.i * 1.0 / sa.n >= {_THRESHOLD}
 def _corpus_with_excerpts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """doc_id < 150 token arrays plus planted excerpt docs."""
     base = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") < _DOC_BOUND)
         .select("doc_id", F.split("text", " ").alias("t"))
     )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.corpusq import (
     _PIPE_CONTEXT,
     _PIPE_ORACLE,
@@ -122,7 +123,7 @@ def corpus_pipeline_ppl_filtered(
     )
 
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") < 500)
         .select("doc_id", "source", "text")
     )

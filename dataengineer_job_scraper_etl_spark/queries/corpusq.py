@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 # NB: plans.corpus imports queries.sampling, whose parent package
 # imports this module — import it lazily inside the entries to break
@@ -194,7 +195,7 @@ def corpus_pipeline_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") < 500)
         .select("doc_id", "source", "text")
     )
@@ -327,7 +328,7 @@ def corpus_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_pretraining_corpus,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "source", "text"
     )
     weights = {f"src{i}": 0.05 for i in range(20)}
@@ -399,7 +400,7 @@ def corpus_pipeline_allsource_mixture(
     )
 
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") < 500)
         .select("doc_id", "source", "text")
     )
@@ -532,7 +533,7 @@ def docs_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_ingest_status,
     )
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     idx = d.filter(F.col("doc_id") < 400)
@@ -595,7 +596,7 @@ def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         _tokens,
     )
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet")
     toks = _tokens(F.col("text"))
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     n = F.size(toks).cast("long")
@@ -699,7 +700,7 @@ def corpus_pipeline_survivors_stripped(
     )
 
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") < 500)
         .select(
             "doc_id",
@@ -779,7 +780,7 @@ FROM d GROUP BY source, change
     "counts out.",
 )
 def docs_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "source", "text"
     )
     a = d.select("doc_id", "source", F.md5("text").alias("dg"))
@@ -907,7 +908,7 @@ def corpus_pipeline_decontaminated(
     )
 
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") < 500)
         .select("doc_id", "source", "text")
     )

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 
 def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -74,7 +75,7 @@ SELECT 'o_custkey', n, null_ck, dist_ck, min_ck, max_ck FROM w
     "ingest-side stats a catalog or optimizer wants, with one scan.",
 )
 def dq_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = read_parquet(spark, f"{sf_dir}/orders.parquet")
     return profile_columns(o, ["o_totalprice", "o_custkey"])
 
 
@@ -104,8 +105,8 @@ SELECT 'orders_totalprice_nonnegative',
     "oracle proves the CHECKS agree, not just the happy counts.",
 )
 def dq_constraint_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    o = read_parquet(spark, f"{sf_dir}/orders.parquet")
+    l = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
 
     dup_pk = (
         o.groupBy("o_orderkey")
@@ -161,7 +162,7 @@ FROM orders GROUP BY o_orderpriority
 def orders_incremental_rollup_refresh(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = read_parquet(spark, f"{sf_dir}/orders.parquet")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
 
     def agg(df: DataFrame) -> DataFrame:
@@ -217,7 +218,7 @@ SELECT CAST((SELECT count(*) FROM dels) AS BIGINT) AS n_requests,
     "is one pushed-filter scan.",
 )
 def docs_erasure_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet")
     dels = d.filter(F.col("doc_id") % 97 == 0).select("doc_id")
     docs2 = d.join(F.broadcast(dels), "doc_id", "left_anti")
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))

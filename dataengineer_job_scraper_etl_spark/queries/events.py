@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -26,7 +27,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle side) observes. ``div`` is integer division: a
     double roundtrip would lose precision on 1.7e18-scale nanos."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = read_parquet(spark, f"{sf_dir}/events.parquet")
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df

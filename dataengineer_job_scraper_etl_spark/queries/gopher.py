@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
 from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 _STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
 _Q = 1_000_000
@@ -135,7 +136,7 @@ FROM r
     "shuffle, no UDF.",
 )
 def docs_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet")
     did = F.col("doc_id")
     blank = F.lit("")
     seeded = F.concat(

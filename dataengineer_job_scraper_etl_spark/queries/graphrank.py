@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 N_NODES = 500  # vec_id < 500 — constant at every sf (min fixture size)
 KNN_K = 5
@@ -125,7 +126,7 @@ def vec_knn_pagerank_centrality(
         ensure_min_parallelism,
     )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") < N_NODES
     )
     ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -371,7 +372,7 @@ def _ivf_pagerank_frame(
     )
 
     emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        read_parquet(spark, f"{sf_dir}/embeddings.parquet")
         .filter(F.col("vec_id") < N_NODES)
         .select("vec_id", "embedding")
     )

@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.graphrank import (
     KNN_K,
     N_NODES,
@@ -238,7 +239,7 @@ def vec_knn_clustering_coefficient(
         ensure_min_parallelism,
     )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") < N_NODES
     )
     ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 WINDOW_MINUTES = 360  # the 6-hour opening window
 BUCKET_SECONDS = 3600  # 1-hour buckets: <= 7 buckets per interval
@@ -85,7 +86,7 @@ WHERE p.event_type = 'purchase'
 def events_interval_containment_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "user_id", "event_type",
     )
@@ -156,7 +157,7 @@ def _stage_interval_stream_dir(spark: SparkSession, sf_dir: str) -> str:
 
     def build(staged: str) -> None:
         d = (
-            spark.read.parquet(src)
+            read_parquet(spark, src)
             .filter(
                 (F.col("event_type") == "purchase")
                 & (F.col("event_id") % _STREAM_PROBE_MOD >= _STREAM_PROBE_GE)
@@ -189,7 +190,7 @@ def _stage_interval_stream_dir(spark: SparkSession, sf_dir: str) -> str:
 def streaming_interval_containment_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         F.col("ts").cast("timestamp").alias("ts"), "user_id"
     )
     win = (
@@ -346,7 +347,7 @@ def _tiered_windows(ev: DataFrame) -> DataFrame:
 def events_interval_join_multiscale(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "user_id", "event_type",
     )
@@ -435,7 +436,7 @@ FROM promo p JOIN win w
 def events_interval_overlap_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "user_id", "event_type",
     )
@@ -542,7 +543,7 @@ WHERE p.event_type = 'purchase'
 def streaming_interval_join_multiscale(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         F.col("ts").cast("timestamp").alias("ts"), "user_id"
     )
     wexp = _tiered_windows(ev).localCheckpoint(eager=False)

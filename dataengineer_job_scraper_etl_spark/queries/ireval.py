@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.text import (
     _BM25_B,
     _BM25_K1,
@@ -284,7 +285,7 @@ def retrieval_mlt_eval_metrics(
         grouped_topk,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     score = mlt_bm25_scores(docs)
@@ -292,7 +293,7 @@ def retrieval_mlt_eval_metrics(
         score, ["qid"], [F.desc("score_ppb"), F.asc("doc_id")], SYS_K
     ).select("qid", "doc_id", "rnk")
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     q = e.filter(F.col("vec_id") < N_QUERY_DOCS).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )

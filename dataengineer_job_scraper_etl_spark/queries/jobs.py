@@ -20,7 +20,10 @@ from dataengineer_job_scraper_etl_spark.functions.strings import (
     jobid_from_urn,
     not_containing,
 )
-from dataengineer_job_scraper_etl_spark.io import load_jsonl_driver_side
+from dataengineer_job_scraper_etl_spark.io import (
+    load_jsonl_driver_side,
+    read_parquet,
+)
 from dataengineer_job_scraper_etl_spark.operators.skills import (
     extract_skills_native,
     phrases_from_patterns,
@@ -63,7 +66,7 @@ FROM prep"""
 
 
 def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return derive_postings(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return derive_postings(read_parquet(spark, f"{sf_dir}/documents.parquet"))
 
 
 @register(

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.operators.bloomjoin import (
     _OFFSETS,
     bloom_pass_flag,
@@ -86,8 +87,8 @@ FROM flags GROUP BY o_orderpriority
     "min(3*|build|, m) positions — filter-sized, never data-sized.",
 )
 def bloom_semi_prune_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    cust = read_parquet(spark, f"{sf_dir}/customer.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
     build = (
         cust.filter(F.col("c_mktsegment") == _SEGMENT)
         .select("c_custkey")
@@ -165,7 +166,7 @@ def part_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         symdelete_pairs,
     )
 
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_parquet(spark, f"{sf_dir}/part.parquet")
     counts = part.groupBy("p_name").agg(F.count(F.lit(1)).alias("cnt"))
     pairs = symdelete_pairs(part, "p_name")
     return (

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.operators.zorder import (
     zorder_key,
     zorder_key_sql,
@@ -55,7 +56,7 @@ FROM keyed GROUP BY 1
     "shape). Pure integer bit arithmetic — exact cross-engine.",
 )
 def lineitem_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     keyed = li.select(
         "l_orderkey",
         "l_partkey",

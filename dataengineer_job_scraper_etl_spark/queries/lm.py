@@ -73,6 +73,7 @@ from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
 from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 # Rendered as EXACT decimal literals in both engine texts.
 _LAM_BIGRAM = "0.7"
@@ -358,7 +359,7 @@ def bigram_neg_logprob(
     "assignment.",
 )
 def docs_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet")
     ref = d.filter(F.col("doc_id") % REF_MOD == 0)
     scored = bigram_neg_logprob(d, reference=ref)
     # Exact PER-SOURCE terciles (the CCNet per-language unit; windows

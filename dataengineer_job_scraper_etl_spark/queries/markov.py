@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 _MARKOV_ORACLE = """
 WITH ev AS (
@@ -76,7 +77,7 @@ def _normalized_model(counts: DataFrame) -> DataFrame:
 def events_type_markov_transitions(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "user_id", "event_type",
     )
@@ -136,7 +137,7 @@ def _stage_markov_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     src = os.path.join(sf_dir, "events.parquet")
 
     def build(staged: str) -> None:
-        d = spark.read.parquet(src).select(
+        d = read_parquet(spark, src).select(
             "event_id", F.col("ts").cast("timestamp").alias("ts"),
             "user_id", "event_type",
         )
@@ -306,7 +307,7 @@ FROM scored GROUP BY user_id
 def events_user_markov_anomaly(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "user_id", "event_type",
     )
@@ -378,7 +379,7 @@ def events_user_markov_anomaly(
 def events_markov_incremental_update(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "user_id", "event_type",
     )

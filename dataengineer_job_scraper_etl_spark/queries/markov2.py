@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.markov import (
     _SPLIT_DAYS_IN,
     _split_cutoff,
@@ -74,7 +75,7 @@ GROUP BY prev2_type, prev1_type, next_type
 
 
 def _triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "user_id", "event_type",
     )
@@ -177,7 +178,7 @@ FROM scored GROUP BY user_id
 def events_user_markov2_anomaly(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         F.col("ts").cast("timestamp").alias("ts")
     )
     tr = _triples(spark, sf_dir).crossJoin(

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.operators.dedup import (
     minhash_lsh_pairs,
     minhash_verified_pairs,
@@ -90,7 +91,7 @@ def _docs_with_planted_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents plus planted near-duplicates: for doc_id % 10 == 0,
     a copy with id+1000000 and the first word changed — guarantees the
     near-dup operators have true positives to find at every sf."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
     rest = F.array_join(
         F.slice(F.split(F.col("text"), " "), 2, 1_000_000), " "
     )  # drop the first word
@@ -180,7 +181,7 @@ def neardup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % 10 == 0)
         .select("doc_id")
     )
@@ -227,7 +228,7 @@ FROM documents
 )
 def neardup_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_min_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+        read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
     )
     fp = simhash64(F.col("text"))
     noisy = F.concat(F.lit("  \t"), F.upper(F.col("text")), F.lit(" \t "))
@@ -259,7 +260,7 @@ def neardup_minhash_planted_recall(
 ) -> DataFrame:
     pairs = neardup_minhash_lsh(spark, sf_dir)
     planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % 10 == 0)
         .select("doc_id")
     )
@@ -288,7 +289,7 @@ def neardup_simhash_planted_recall(
 ) -> DataFrame:
     pairs = _simhash_pairs(spark, sf_dir)
     planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % 10 == 0)
         .select("doc_id")
     )
@@ -309,7 +310,7 @@ def neardup_simhash_planted_recall(
 
 
 def _vectors(spark: SparkSession, sf_dir: str):
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
@@ -353,7 +354,7 @@ def _ann_serving_contract(
         vec_cosine_topk,
     )
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     vd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     corp = e.select("vec_id", vd.alias("__cv"))
     qv = e.filter(F.col("vec_id") < 5).select(
@@ -572,7 +573,7 @@ def vec_neardup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         embedding_neardup_lsh_pairs,
     )
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     copies = e.filter(F.col("vec_id") % 10 == 0).select(
@@ -605,7 +606,7 @@ def vec_neardup_lsh_planted_recall(
         embedding_neardup_lsh_pairs,
     )
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     planted = e.filter(F.col("vec_id") % 10 == 0)
@@ -672,7 +673,7 @@ def neardup_minhash_precision_contract(
         )
     )
     planted = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % 10 == 0)
         .agg(F.count(F.lit(1)).cast("long").alias("n_planted"))
     )

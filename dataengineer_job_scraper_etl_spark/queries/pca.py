@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.operators import index_store
 from dataengineer_job_scraper_etl_spark.operators.pca import (
     pca_top_component,
@@ -353,7 +354,7 @@ def frozen_pc1_monitor(
     over the COMPRESSED histogram (distinct quantized scores), and
     becomes a two-stage parallel prefix at real scale; the 9-edge
     collect is bounded."""
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     return train_pc1_monitor(e.filter(~F.expr(_CUR_PRED)))
@@ -601,7 +602,7 @@ FROM edges1 e1 JOIN edges2 e2 ON e1.k = e2.k
 def vec_drift_retrain_refreeze(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     ref = e.filter(~F.expr(_CUR_PRED))
@@ -682,7 +683,7 @@ def vec_drift_retrain_refreeze(
 )
 def vec_pc1_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     m, v, edges, n_ref = frozen_pc1_monitor(spark, sf_dir)
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     scored = e.select(
@@ -742,7 +743,7 @@ def vec_pc1_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     "PC1 (the embedding-drift monitor statistic / OPQ rotation seed).",
 )
 def vec_pca_pc1_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     _, m, v, _ = pca_top_component(e, "embedding", DIM, n_iter=N_ITER)
@@ -768,7 +769,7 @@ def vec_pca_top2_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         pca_top_components,
     )
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     _, m, comps, _ = pca_top_components(
@@ -849,7 +850,7 @@ def vec_pca_grid_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         pca_top_components,
     )
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     _, m, comps, _ = pca_top_components(

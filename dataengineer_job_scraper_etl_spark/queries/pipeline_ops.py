@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.events import _events
 
 # BPE-ish pre-tokenizer: letter runs, single digits, single
@@ -34,7 +35,7 @@ _WS_SQL = "string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return read_parquet(spark, f"{sf_dir}/documents.parquet")
 
 
 from dataengineer_job_scraper_etl_spark.functions.strings import (  # noqa: E402

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.text import (
     _BM25_B,
     _BM25_K1,
@@ -149,7 +150,7 @@ def retrieval_prf_expansion(
         bm25_scores,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     # pass 1: static-column BM25 (terms are literals), bounded top-10

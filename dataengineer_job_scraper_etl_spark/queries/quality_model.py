@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.operators import index_store
 
 _Q = 1_000_000
@@ -257,7 +258,7 @@ FROM feats f CROSS JOIN w{N_ITER} w
 def docs_quality_logreg_weights(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     w = train_quality_logreg(_features(d))
@@ -496,7 +497,7 @@ WHERE NOT f.is_train
 def docs_quality_logreg_converged(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     feats = _features_ext(d)
@@ -541,7 +542,7 @@ def docs_quality_logreg_converged(
 def docs_quality_logreg_scores(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     feats = _features(d)

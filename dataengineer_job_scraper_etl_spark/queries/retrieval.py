@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.text import (
     _BM25_B,
     _BM25_K1,
@@ -161,7 +162,7 @@ def ann_recall_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.functions.vector_math import cosine
     from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     v = emb.select("vec_id", ed.alias("e"))
     cal = v.select(F.explode("e").alias("x")).agg(
@@ -302,7 +303,7 @@ def ann_sq_bits_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.functions.vector_math import cosine
     from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     v = emb.select("vec_id", ed.alias("e"))
     cal = v.select(F.explode("e").alias("x")).agg(
@@ -400,7 +401,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.functions.vector_math import cosine
     from dataengineer_job_scraper_etl_spark.operators.ranking import bm25_scores
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     bm = bm25_scores(docs, BM25_QUERY_TERMS, k1=_BM25_K1, b=_BM25_B).select(
@@ -409,7 +410,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bm_ranked = _ranked_topk(bm, "bm25_ppm", "rank_bm25")
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     qv = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qe")
     )

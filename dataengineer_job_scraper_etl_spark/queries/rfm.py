@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 _N_BUCKETS = 4
 
@@ -111,7 +112,7 @@ def events_user_rfm_segments(
         rank_exact_edges,
     )
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         F.col("ts").cast("timestamp").alias("ts"),
         "user_id", "event_type", "value",
     )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 
 def hash_split(
@@ -96,7 +97,7 @@ FROM documents GROUP BY fold
     "pipeline needs).",
 )
 def docs_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
     return (
         kfold_assign(d, "doc_id", _KFOLD_K)
         .groupBy("fold")
@@ -211,7 +212,7 @@ FROM tagged GROUP BY split
     "training splits.",
 )
 def docs_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
     return (
         hash_split(d, "doc_id")
         .groupBy("split")
@@ -238,7 +239,7 @@ WHERE substring(md5(CAST(l_orderkey * 10 + l_linenumber AS VARCHAR)), 1, 1)
     "primitive for data audits. Checksums pin exact membership.",
 )
 def lineitem_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    l = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     key = (F.col("l_orderkey") * 10 + F.col("l_linenumber")).cast("string")
     keep = F.substring(F.md5(key), 1, 1).isin("0", "1", "2")
     return l.filter(keep).agg(
@@ -325,7 +326,7 @@ GROUP BY nib.source
     "hash_split's digit 1 (see deterministic_source_sample).",
 )
 def docs_mixture_sample_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "source"
     )
     half = {s: r / 2 for s, r in _MIX_RATES.items()}
@@ -445,7 +446,7 @@ def docs_quality_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame
         text_quality_score,
     )
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "source", "text"
     )
     q = text_quality_score(spark, sf_dir)
@@ -535,7 +536,7 @@ LIMIT {_ES_K}
 def docs_weighted_sample_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.queries.text import _tokens
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id",
         F.size(_tokens(F.col("text"))).cast("long").alias("w_toks"),
     )
@@ -648,7 +649,7 @@ LIMIT {_DSIR_K}
     "the rounded scores on both engines.",
 )
 def docs_dsir_importance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet")
     return dsir_importance_topk(
         d, F.col("source") == _DSIR_TARGET_SOURCE, _DSIR_K
     )
@@ -690,7 +691,7 @@ GROUP BY source
     "cannot guarantee. id_checksum pins exact membership per stratum.",
 )
 def docs_balanced_eval_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "source", "doc_id"
     )
     w = Window.partitionBy("source").orderBy(
@@ -746,7 +747,7 @@ FROM sharded
     "order). Hash equality pins the ENTIRE permutation, not a sample.",
 )
 def docs_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
     k = F.md5(
         F.concat(F.lit(_ORDER_SEED + ":"), F.col("doc_id").cast("string"))
     )
@@ -797,7 +798,7 @@ FROM sig GROUP BY source
 def docs_token_budget_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_parquet(spark, f"{sf_dir}/documents.parquet")
     n = F.size(ws_tokens(F.col("text"))).cast("long")
     kept = F.least(n, F.lit(_CLIP_BUDGET))
     sig = d.select(

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 _LAGS = (1, 24, 168)
 
@@ -72,7 +73,7 @@ WITH hourly AS (
 def events_hourly_autocorrelation(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         F.col("ts").cast("timestamp").alias("ts")
     )
     hourly = (
@@ -157,7 +158,7 @@ FROM w GROUP BY w_start
 def events_hopping_window_volume(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
         F.col("ts").cast("timestamp").alias("ts"), "user_id"
     )
     return (

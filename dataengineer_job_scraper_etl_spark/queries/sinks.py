@@ -27,7 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
-from dataengineer_job_scraper_etl_spark.io import write_parquet_partitioned
+from dataengineer_job_scraper_etl_spark.io import (
+    read_parquet,
+    write_parquet_partitioned,
+)
 from dataengineer_job_scraper_etl_spark.queries.events import _events
 from dataengineer_job_scraper_etl_spark.staging import stage_once
 
@@ -70,7 +73,7 @@ def io_partitioned_sink_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     root = _staged_sink_dir(spark, sf_dir)
-    back = spark.read.parquet(root)
+    back = read_parquet(spark, root)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("event_id").cast("long").alias("id_checksum"),
@@ -183,7 +186,7 @@ def io_foreachbatch_sink_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     root = _staged_foreachbatch_dir(spark, sf_dir)
-    back = spark.read.parquet(root)
+    back = read_parquet(spark, root)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("event_id").cast("long").alias("id_checksum"),
@@ -199,7 +202,7 @@ def _staged_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
         src,
         "jsonlrt",
         lambda staged: (
-            spark.read.parquet(src)
+            read_parquet(spark, src)
             .select("doc_id", "source", "lang", "text")
             .write.option("compression", "gzip")
             .json(staged)

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
 from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.lm import (
     REF_MOD,
     _LAM_BIGRAM,
@@ -65,7 +66,7 @@ def _stage_lmserve_dir(spark: SparkSession, sf_dir: str) -> str:
 
     def build(staged: str) -> None:
         d = (
-            spark.read.parquet(src)
+            read_parquet(spark, src)
             .filter(F.col("doc_id") % _CORPUS_MOD >= _CORPUS_LT)
             .select("doc_id", "source", "text")
         )
@@ -172,7 +173,7 @@ FROM ba_scored b LEFT JOIN cuts k USING (source)
 def streaming_bigram_ppl_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "source", "text"
     )
     corpus = docs.filter(F.col("doc_id") % _CORPUS_MOD < _CORPUS_LT)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.staging import (
     stage_once,
     write_ordered_batches,
@@ -290,7 +291,7 @@ def streaming_static_enrich_entry(spark: SparkSession, sf_dir: str) -> DataFrame
 
     d = _stage_stream_dir(spark, sf_dir)
     dim = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        read_parquet(spark, f"{sf_dir}/customer.parquet")
         .select(
             (F.col("c_custkey") - 1).alias("user_id"),
             F.col("c_mktsegment").alias("segment"),
@@ -412,7 +413,7 @@ def _stage_docs_ingest_dir(spark: SparkSession, sf_dir: str) -> str:
     src = os.path.join(sf_dir, "documents.parquet")
 
     def build(staged: str) -> None:
-        d = spark.read.parquet(src).select("doc_id", "source", "text")
+        d = read_parquet(spark, src).select("doc_id", "source", "text")
         incoming = d.filter(F.col("doc_id") % 3 == 0)
         planted = (
             d.filter(F.col("doc_id") % 3 != 0)
@@ -464,7 +465,7 @@ def streaming_ingest_dedup_status(
 ) -> DataFrame:
     d = _stage_docs_ingest_dir(spark, sf_dir)
     index = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % 3 != 0)
         .select(F.md5("text").alias("dg"))
         .distinct()
@@ -505,7 +506,7 @@ def _stage_vec_ingest_dir(spark: SparkSession, sf_dir: str) -> str:
     src = os.path.join(sf_dir, "embeddings.parquet")
 
     def build(staged: str) -> None:
-        e = spark.read.parquet(src).select("vec_id", "embedding")
+        e = read_parquet(spark, src).select("vec_id", "embedding")
         batch = e.filter(F.col("vec_id") % 10 >= 8)
         planted = (
             e.filter((F.col("vec_id") % 10 < 8) & (F.col("vec_id") % 25 == 3))
@@ -592,7 +593,7 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         TAU,
     )
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     existing = e.filter(F.col("vec_id") % 10 < 8).select("vec_id", "embedding")
     # FROZEN index: train once per training-slice fingerprint, serve
     # every batch
@@ -894,7 +895,7 @@ def streaming_exact_substring_ingest(
         ).alias("cp"),
     )
     rows = _drain(cov, spark, output_mode="append")
-    base = spark.read.parquet(d).select(
+    base = read_parquet(spark, d).select(
         "doc_id", _tokens(F.col("text")).alias("t")
     )
     out = _trim_covered_runs(base, rows.distinct(), EXSUB_MIN_RUN)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 # Stopword profiles for the language-ID heuristic; deterministic and
 # tiny so both engines inline them. (A real pipeline would plug fasttext
@@ -31,7 +32,7 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return read_parquet(spark, f"{sf_dir}/documents.parquet")
 
 
 from dataengineer_job_scraper_etl_spark.functions.strings import (  # noqa: E402

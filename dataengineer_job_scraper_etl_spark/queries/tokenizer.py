@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.operators.bpe import (
     pair_counts,
     word_counts,
@@ -58,7 +59,7 @@ LIMIT {_TOP}
     "in tests/test_bpe.py.",
 )
 def text_bpe_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
     vocab = word_symbols(word_counts(docs))
     return (
         pair_counts(vocab)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 _DIM = 16
 _K = 4
@@ -140,7 +141,7 @@ def docs_hashtf_kmeans_topics(
     )
 
     d = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") < _DOC_BOUND)
         .select("doc_id", "text")
     )

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.topics import (
     _DIM,
     _DOC_BOUND,
@@ -103,7 +104,7 @@ def streaming_topic_assignment(
     )
 
     train = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") < _DOC_BOUND)
         .select("doc_id", "text")
     )

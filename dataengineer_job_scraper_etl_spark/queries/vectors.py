@@ -19,6 +19,7 @@ from dataengineer_job_scraper_etl_spark.functions.vector_math import (  # noqa: 
     dot,
     l2_norm,
 )
+from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 N_QUERY_VECS = 5  # queries are vec_id < 5; bounds the oracle's work
 TOP_K = 10
@@ -48,7 +49,7 @@ SELECT qid, vec_id, cos_sim, rnk FROM scored WHERE rnk <= {TOP_K}
     "can be pushed into a partial TakeOrdered per partition.",
 )
 def vec_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     q = (
         e.filter(F.col("vec_id") < N_QUERY_VECS)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"))
@@ -101,7 +102,7 @@ FROM per_dim GROUP BY label
     "Aggregates arrays JVM-side; one shuffle on label.",
 )
 def vec_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     # posexplode -> per-(label, dim) partial means: fully distributed,
     # no per-group vector materialization (collect_list would hold all
@@ -134,7 +135,7 @@ WHERE list_cosine_similarity(a.embedding, b.embedding) > 0.4
     "operators/similarity.py, rows-only checked).",
 )
 def vec_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") < 500
     )
     a = e.select(
@@ -178,7 +179,7 @@ FROM scaled WHERE maxabs > 0
     "canonicalizer-hashable, the checksum pins every code value.",
 )
 def vec_quantize_int8_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") < 500
     )
     ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -233,7 +234,7 @@ FROM q
     "events_value_percentiles.",
 )
 def vec_quantize_int8_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+    e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") < 500
     )
     ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))

@@ -130,13 +130,70 @@ def test_every_registered_entry_evidenced_or_scheduled():
     assert unevidenced_not_scheduled() == []
 
 
-# The 50 seats of the r14 window, regenerated after the
-# trained-artifact store refactor: every one is changed-tier (83
-# oracle-bearing entries moved their source hash across the r14
-# optimization commits and the refactor). Frozen HERE because the
-# changed set is only recomputable until the driver's evidence for
-# this window lands and promotes the audited baselines.
-_R14_CHANGED = {
+# The 50 seats of the r14 window, regenerated after the one-table-reader
+# change: every one is changed-tier. 242 oracle-bearing entries moved
+# their source hash (the r14 optimization commits, the trained-artifact
+# store refactor, and the table reader's call sites across the queries
+# modules), so the window seats the oldest driver evidence (r7-r9).
+# Frozen HERE because the changed set is only recomputable until the
+# driver's evidence for this window lands and promotes the audited
+# baselines.
+_R14_WINDOW = {
+    "agg_approx_distinct_tol",
+    "agg_distinct_counts",
+    "docs_exact_dedup",
+    "docs_global_token_offsets",
+    "docs_quality_terciles",
+    "docs_shard_assignment",
+    "events_value_equidepth_histogram",
+    "events_value_mad_outliers",
+    "events_value_percentiles",
+    "events_value_shape_robust",
+    "events_value_trend_regression",
+    "grouping_sets_orders",
+    "pivot_status_by_priority",
+    "set_except_customers",
+    "set_intersect_customers",
+    "streaming_pc1_drift_monitor",
+    "text_bm25_ranking",
+    "text_clean_markup",
+    "text_fingerprint",
+    "text_langid_heuristic",
+    "text_quality_score",
+    "text_term_frequencies",
+    "text_token_stats",
+    "text_vocab_coverage_curve",
+    "tpch_q10_returned_items",
+    "tpch_q11_important_stock",
+    "tpch_q12_late_shipment_priority",
+    "tpch_q13_customer_order_distribution",
+    "tpch_q14_promo_revenue",
+    "tpch_q15_top_supplier",
+    "tpch_q16_supplier_part_variety",
+    "tpch_q17_small_quantity_revenue",
+    "tpch_q18_large_orders",
+    "tpch_q19_discounted_revenue",
+    "tpch_q1_pricing_summary",
+    "tpch_q20_excess_stock_suppliers",
+    "tpch_q21_waiting_suppliers",
+    "tpch_q22_global_sales_opportunity",
+    "tpch_q2_min_cost_supplier",
+    "tpch_q4_order_priority_exists",
+    "tpch_q6_forecast_revenue",
+    "tpch_q7_volume_shipping",
+    "tpch_q8_market_share",
+    "tpch_q9_product_profit",
+    "unpivot_lineitem_measures",
+    "vec_kmeans_profile",
+    "vec_semdedup_survivors",
+    "window_ntile_customer_quartiles",
+    "window_percentrank_event_values",
+    "window_rolling_30day_spend",
+}
+
+# The seats of the window it replaced (generated after the
+# trained-artifact store refactor, before any driver audited it).
+_R14_STORE_WINDOW = {
     "agg_approx_percentile_tol",
     "agg_freq_items_contract",
     "corpus_pipeline_allsource_mixture",
@@ -193,25 +250,18 @@ _R14_CHANGED = {
 def test_r14_window_seats_oldest_changed_tier():
     """Round-14 window: no entry failed its latest audit and every
     registration has driver evidence, so there is no head — all 50
-    seats are changed-tier, and the changed tier (83 entries) outgrew
+    seats are changed-tier, and the changed tier (242 entries) outgrew
     the window, so the within-tier order seats the OLDEST driver
-    evidence first. ROADMAP open item 1's named entries (changed in r13
-    and r14 with no driver hash since) hold seats."""
-    assert set(catalog.AUDIT_SCHEDULE) == _R14_CHANGED
+    evidence first. The replaced window's seats that lost out all
+    carry evidence no older than the newest seat."""
+    assert set(catalog.AUDIT_SCHEDULE) == _R14_WINDOW
     gen = catalog.AUDIT_SCHEDULE_META["generated_after_round"]
     last = _last_rounds(upto=gen)
     tier = [last.get(n) for n in catalog.AUDIT_SCHEDULE]
     assert None not in tier  # no never-audited head
     assert tier == sorted(tier), tier
-    for n in (
-        "docs_dedup_clusters",
-        "events_user_rfm_segments",
-        "vec_pca_grid_sample",
-        "docs_hashtf_kmeans_topics",
-        "vec_semdedup_presplit",
-        "vec_semdedup_survivors",
-    ):
-        assert n in catalog.AUDIT_SCHEDULE, n
+    for n in _R14_STORE_WINDOW - _R14_WINDOW:
+        assert last[n] >= tier[-1], n
 
 
 def test_rows_only_class_retired():

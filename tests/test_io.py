@@ -2,10 +2,17 @@
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+import dataengineer_job_scraper_etl_spark as pkg
 from dataengineer_job_scraper_etl_spark.io import (
     read_csv,
+    read_parquet,
     rows_to_df,
     write_csv,
     write_if_nonempty,
@@ -241,3 +248,140 @@ def test_compact_parquet_recovers_mid_swap_crash(spark, tmp_path):
     assert os.path.exists(d) and not os.path.exists(d + "__old")
     back = spark.read.parquet(d)
     assert back.count() == 100
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_read_parquet_hit_starts_no_job(spark, tmp_path):
+    """The second read of an unchanged table supplies the stored schema:
+    no footer-inference job, same schema, same rows. The raw reader's
+    job on the same path shows the counter sees inference."""
+    path = str(tmp_path / "t")
+    spark.range(20).withColumn("s", F.col("id").cast("string")).write.parquet(
+        path
+    )
+    first = read_parquet(spark, path)
+    before = _jobs(spark)
+    second = read_parquet(spark, path)
+    assert _jobs(spark) == before
+    spark.read.parquet(path)
+    assert _jobs(spark) > before
+    assert second.schema == first.schema == spark.read.parquet(path).schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_read_parquet_rewritten_file_is_inferred_again(spark, tmp_path):
+    """A file rewritten under the same name with an extra column changes
+    its stamp, so the new column is visible."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({"id": [1, 2]}), path)
+    assert read_parquet(spark, path).columns == ["id"]
+    assert read_parquet(spark, path).columns == ["id"]
+    pq.write_table(pa.table({"id": [1, 2], "extra": ["a", "b"]}), path)
+    back = read_parquet(spark, path)
+    assert back.columns == ["id", "extra"]
+    assert sorted(tuple(r) for r in back.collect()) == [(1, "a"), (2, "b")]
+
+
+def test_read_parquet_partitioned_miss_equals_hit(spark, tmp_path):
+    """Partition columns keep their inferred types and trailing position
+    when the schema is supplied, and a dynamic overwrite of one
+    partition is seen by the next read."""
+    path = str(tmp_path / "out")
+    df = _postings(spark)
+    write_parquet_partitioned(df, path)
+    raw = spark.read.parquet(path)
+    miss = read_parquet(spark, path)
+    before = _jobs(spark)
+    hit = read_parquet(spark, path)
+    assert _jobs(spark) == before
+    assert hit.columns == miss.columns == raw.columns
+    assert hit.schema == miss.schema == raw.schema
+    assert sorted(hit.collect()) == sorted(miss.collect()) == sorted(raw.collect())
+
+    write_parquet_partitioned(
+        df.filter(F.col("job_type") == "DE").withColumn("title", F.lit("A2")),
+        path,
+    )
+    titles = {
+        r["job_type"]: r["title"] for r in read_parquet(spark, path).collect()
+    }
+    assert titles == {"DE": "A2", "DS": "B"}
+
+
+def test_read_parquet_missing_path_raises_like_spark(spark, tmp_path):
+    missing = str(tmp_path / "nope")
+    with pytest.raises(AnalysisException) as raw:
+        spark.read.parquet(missing)
+    with pytest.raises(AnalysisException) as ours:
+        read_parquet(spark, missing)
+    assert type(ours.value) is type(raw.value)
+    assert ours.value.getCondition() == raw.value.getCondition()
+
+
+def test_read_parquet_keeps_index_store_fingerprints(spark, tmp_path):
+    """A frame built on a miss, one built on a hit and the raw inferred
+    read all fingerprint alike, so trained artifacts keyed before the
+    reader existed stay keyed the same."""
+    from dataengineer_job_scraper_etl_spark.operators.index_store import (
+        fingerprint,
+    )
+
+    path = str(tmp_path / "fp")
+    spark.range(50).repartition(3).write.parquet(path)
+    miss = read_parquet(spark, path).filter(F.col("id") > 5)
+    hit = read_parquet(spark, path).filter(F.col("id") > 5)
+    raw = spark.read.parquet(path).filter(F.col("id") > 5)
+    assert fingerprint(miss) == fingerprint(hit) == fingerprint(raw)
+
+
+# Reads that need reader options keep the raw reader: (module, function).
+_RAW_PARQUET_READS = {
+    # mergeSchema + recursiveFileLookup over an evolving directory
+    ("queries/sinks.py", "io_mergeschema_evolution_read"),
+}
+
+
+def _raw_parquet_reads() -> set[tuple[str, str]]:
+    """(module, enclosing function) of every ``<x>.read ... .parquet(``
+    call in the package outside io.py."""
+    root = pathlib.Path(pkg.__file__).parent
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "io.py":
+            continue
+
+        class Finder(ast.NodeVisitor):
+            scope = "<module>"
+
+            def visit_FunctionDef(self, node):
+                outer, self.scope = self.scope, node.name
+                self.generic_visit(node)
+                self.scope = outer
+
+            def visit_Call(self, node):
+                f = node.func
+                if isinstance(f, ast.Attribute) and f.attr == "parquet":
+                    recv = f.value
+                    while isinstance(recv, (ast.Attribute, ast.Call)):
+                        if isinstance(recv, ast.Attribute) and recv.attr == "read":
+                            found.add((rel, self.scope))
+                            break
+                        recv = recv.func if isinstance(recv, ast.Call) else recv.value
+                self.generic_visit(node)
+
+        Finder().visit(ast.parse(path.read_text(encoding="utf-8")))
+    return found
+
+
+def test_parquet_tables_are_read_through_one_reader():
+    """Every parquet table read in the package goes through
+    ``io.read_parquet``; only option-bearing reads keep the raw reader,
+    and each of those is named here."""
+    assert _raw_parquet_reads() == _RAW_PARQUET_READS
