@@ -10,8 +10,10 @@ last ~2000 chars of stdout and r9's line outgrew it):
    "runs_file": "bench_runs.json", "n_run": <total entries run>,
    "stall_n": <flagged>, "stall_clean": <clean-bracketed reruns>,
    "uniform_inflation": {...slim...}}
-FULL per-entry medians, raw reps, spreads, sentinels, rerun detail and
-the uniform-inflation baseline live in bench_runs.json.
+FULL per-entry medians, raw reps, spreads, sentinels, rerun detail,
+per-rep generated-class compile counts (``codegen_compiles``: a warm
+entry whose count is not 0 rebuilds codegen'd classes on every call)
+and the uniform-inflation baseline live in bench_runs.json.
 
 Each query is forced end-to-end with the noop sink (full computation,
 no result serialization / driver collect in the timing), after one
@@ -583,7 +585,10 @@ def main() -> None:
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
     from dataengineer_job_scraper_etl_spark.catalog import all_queries
-    from dataengineer_job_scraper_etl_spark.session import get_spark
+    from dataengineer_job_scraper_etl_spark.session import (
+        codegen_compiles,
+        get_spark,
+    )
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -780,6 +785,7 @@ def main() -> None:
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     runs: dict[str, list[float]] = {}
+    compiles: dict[str, list[int]] = {}
 
     # Host-stall sentinel (round 8, VERDICT r7 ask #8): the r6/r7
     # outlier mechanism — a host-level stall inflating whatever
@@ -833,9 +839,11 @@ def main() -> None:
             q = qs.get(name)
             if q is None:
                 continue
+            c0 = codegen_compiles(spark)
             t0 = time.time()
             _force(q.spark_fn(spark, sf_dir))
             runs.setdefault(name, []).append(round(time.time() - t0, 3))
+            compiles.setdefault(name, []).append(codegen_compiles(spark) - c0)
             # Release this query's Python-side DataFrame refs so the JVM
             # ContextCleaner can drop localCheckpoint blocks / broadcasts
             # between queries — otherwise iterative queries' blocks pile
@@ -920,6 +928,7 @@ def main() -> None:
                     "medians": timings,
                     "runs": runs,
                     "spread": spread,
+                    "codegen_compiles": compiles,
                     "reps": reps,
                     "sf": sf_val,
                     "warmup_version": WARMUP_VERSION,

@@ -16,9 +16,12 @@ Scale posture:
 - state is one (node, label) row per node; each round is one join
   edges><labels + one min-agg + one labels><labels shortcut join —
   all keyed shuffles, no collect().
-- the convergence check is an AGGREGATE (count of changed labels),
-  i.e. one tiny action per round on an intermediate the round already
-  computed — not a full result comparison.
+- the convergence check is an emptiness probe on the changed labels
+  (``isEmpty``: one tiny action per round on an intermediate the round
+  already computed, not a full result comparison). It is spelled
+  without ``limit``: Spark names a whole-stage-codegen'd limit's
+  counter from a process-wide id, so ``limit(1).count()`` compiled
+  fresh classes on every call, whatever the codegen cache size.
 - labels are localCheckpoint'ed per round: truncates the lineage that
   would otherwise double per iteration (the classic iterative-Spark
   trap).
@@ -90,7 +93,7 @@ def connected_components(
     if max_iter == 1:
         # the fused init consumed the whole budget: converged iff no
         # off-diagonal edge exists (the free round-1 probe above)
-        if sym.filter(F.col("a") != F.col("b")).limit(1).count() == 0:
+        if sym.filter(F.col("a") != F.col("b")).isEmpty():
             return labels
         raise RuntimeError(
             f"connected_components did not converge within "
@@ -146,9 +149,9 @@ def connected_components(
                 F.col("c1").alias("component"),
                 (F.col("c1") != F.col("c_prev")).alias("__changed"),
             )
-        changed = new_labels.filter(F.col("__changed")).limit(1).count()
+        converged = new_labels.filter(F.col("__changed")).isEmpty()
         labels = new_labels.drop("__changed")
-        if changed == 0:
+        if converged:
             return labels
         if rnd + 1 >= _PLAIN_ROUNDS:
             doubling = True

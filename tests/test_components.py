@@ -7,6 +7,7 @@ from __future__ import annotations
 from dataengineer_job_scraper_etl_spark.operators.components import (
     connected_components,
 )
+from dataengineer_job_scraper_etl_spark.session import codegen_compiles
 
 
 def _cc(spark, edges, max_iter=10):
@@ -44,3 +45,28 @@ def test_raises_on_non_convergence(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(chain, max_iter=3)
+
+
+def test_warm_second_call_compiles_nothing(spark):
+    """Both convergence probes (the fused-round-1 one at max_iter=1 and
+    the per-round one, through plain and doubling rounds) must reuse
+    cached generated classes. Spark names a whole-stage-codegen'd
+    limit's counter from a process-wide id, so a ``limit(1).count()``
+    probe compiled fresh classes on every call."""
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 7)] + [(10, 11)], "src long, dst long"
+    )
+    loops = spark.createDataFrame([(1, 1), (2, 2)], "src long, dst long")
+
+    def run():
+        return (
+            sorted(connected_components(chain).collect()),
+            sorted(connected_components(loops, max_iter=1).collect()),
+        )
+
+    first = run()
+    c0 = codegen_compiles(spark)
+    second = run()
+    assert codegen_compiles(spark) - c0 == 0
+    assert second == first
+    assert {r["component"] for r in first[0]} == {1, 10}
