@@ -1,13 +1,26 @@
-"""String scalar ops (SURVEY §2.7 C4-C9, §2.4 F3).
+r"""String scalar ops (SURVEY §2.7 C4-C9, §2.4 F3).
 
 All native expressions; each documents the reference semantics it
 preserves.
+
+The only module that knows what whitespace is: collapse runs to one
+space, trim spaces, split on single spaces, each with a Spark, a
+DuckDB and a Python twin. Spark (Java) ``\s`` is ``[ \t\n\x0B\f\r]``.
+RE2 ``\s`` lacks ``\x0B``, hence ``[\s\v]+``; one-argument DuckDB
+``trim`` also strips NBSP, U+2000-U+200A and U+3000, hence ``trim(x,
+' ')``. Python uses ``re.ASCII`` and names the space in strip/split:
+Unicode ``\s``, ``str.strip()`` and ``str.split()`` also match NBSP,
+``\x85``, ``\x1c``-``\x1f``, U+2028 and U+3000, which neither engine does.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+_WS_RUN_PY = re.compile(r"\s+", re.ASCII)
 
 
 def jobid_from_urn(urn: Column) -> Column:
@@ -27,19 +40,54 @@ def not_containing(col: Column, pattern: str) -> Column:
     return ~col.rlike(pattern)
 
 
+def ws_collapse(col: Column) -> Column:
+    """Collapse whitespace runs to one space and trim (C5/C6)."""
+    return F.trim(F.regexp_replace(col, r"\s+", " "))
+
+
+def ws_split(col: Column) -> Column:
+    """``ws_collapse`` split on single spaces."""
+    return F.split(ws_collapse(col), " ")
+
+
 def normalize_ws_lower(col: Column) -> Column:
-    """Canonical text normalization used by dedup/fingerprint ops:
-    lowercase, collapse whitespace runs, trim (C5/C6 generalized)."""
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+    """Dedup/fingerprint normalization: lowercased ``ws_collapse``."""
+    return ws_collapse(F.lower(col))
 
 
 def ws_tokens(col: Column) -> Column:
-    r"""THE corpus-wide whitespace tokenization contract (lowercase,
-    collapse whitespace runs, trim, split on single space) — shared by
-    every tokenizing operator so the cross-engine oracle parity the
-    catalog depends on cannot drift copy-by-copy. DuckDB twin:
-    ``string_split(trim(regexp_replace(lower(x), '\s+', ' ', 'g')), ' ')``."""
-    return F.split(normalize_ws_lower(col), " ")
+    """THE corpus-wide tokenization contract: lowercased ``ws_split``."""
+    return ws_split(F.lower(col))
+
+
+def ws_collapse_sql(expr: str) -> str:
+    """DuckDB twin of ``ws_collapse`` over the SQL text ``expr``."""
+    return f"trim(regexp_replace({expr}, '[\\s\\v]+', ' ', 'g'), ' ')"
+
+
+def ws_split_sql(expr: str) -> str:
+    """DuckDB twin of ``ws_split``."""
+    return f"string_split({ws_collapse_sql(expr)}, ' ')"
+
+
+def ws_norm_sql(expr: str) -> str:
+    """DuckDB twin of ``normalize_ws_lower``."""
+    return ws_collapse_sql(f"lower({expr})")
+
+
+def ws_tokens_sql(expr: str) -> str:
+    """DuckDB twin of ``ws_tokens``."""
+    return ws_split_sql(f"lower({expr})")
+
+
+def ws_collapse_py(s: str) -> str:
+    """Python twin of ``ws_collapse``, for worker code."""
+    return _WS_RUN_PY.sub(" ", s).strip(" ")
+
+
+def ws_split_py(s: str) -> list[str]:
+    """Python twin of ``ws_split``."""
+    return ws_collapse_py(s).split(" ")
 
 
 def ddmmyyyy(col: Column | None = None) -> Column:

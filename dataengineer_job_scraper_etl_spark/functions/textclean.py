@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from dataengineer_job_scraper_etl_spark.functions.strings import ws_collapse
+
 _BLOCK_RE = r"(?is)<(script|style)\b[^>]*>.*?</\1>"
 _TAG_RE = r"(?s)<[^>]+>"
 _CTRL_RE = r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]"
@@ -54,7 +56,7 @@ def strip_markup(col: Column) -> Column:
 
 def normalize_ws(col: Column) -> Column:
     out = F.regexp_replace(col, _CTRL_RE, " ")
-    return F.trim(F.regexp_replace(out, r"\s+", " "))
+    return ws_collapse(out)
 
 
 def drop_boilerplate_lines(col: Column) -> Column:

@@ -37,19 +37,16 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens
+
 END_OF_WORD = "</w>"
-
-
-from dataengineer_job_scraper_etl_spark.functions.strings import (
-    ws_tokens as _ws_tokens,
-)
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, c): the ONE corpus-sized pass. Map-side partial counts
     make the shuffle vocabulary-sized."""
     return (
-        docs.select(F.explode(_ws_tokens(F.col(text_col))).alias("word"))
+        docs.select(F.explode(ws_tokens(F.col(text_col))).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -219,7 +216,7 @@ def bpe_token_counts(
     driver-bounded (n_merges entries) by construction."""
     flat = docs.select(
         F.col(id_col).alias("__id"),
-        F.explode(_ws_tokens(F.col(text_col))).alias("word"),
+        F.explode(ws_tokens(F.col(text_col))).alias("word"),
     ).filter(F.col("word") != "")
     # materialize the exploded words ONCE: `flat` feeds both the
     # distinct-word segmenter and the join-back, and those are

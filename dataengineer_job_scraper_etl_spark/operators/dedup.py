@@ -16,11 +16,13 @@ docs_near_dup_jaccard), and unit tests assert the sketch properties
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-
-from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    normalize_ws_lower,
+    ws_tokens,
+)
 from dataengineer_job_scraper_etl_spark.session import ensure_min_parallelism
 
 # ---------------------------------------------------------------- exact
@@ -38,7 +40,7 @@ def dedup_exact_by_digest(
 ) -> DataFrame:
     """Keep min(id) per normalized-text digest; only (digest, id) pairs
     move through the shuffle."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = normalize_ws_lower(F.col(text_col))
     keep = (
         df.select(F.md5(norm).alias("__fp"), F.col(id_col))
         .groupBy("__fp")
@@ -586,7 +588,7 @@ def incremental_ingest_status(
     SQL-checkable. Precedence exact > near mirrors the pipeline's
     stage order (digests are authoritative; sketches are candidates).
     """
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = normalize_ws_lower(F.col(text_col))
     b_fp = batch.select(F.col(id_col), F.md5(norm).alias("__fp"))
     i_fp = index.select(F.md5(norm).alias("__fp")).distinct()
     exact = (

@@ -36,10 +36,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-from dataengineer_job_scraper_etl_spark.functions.strings import (
-    ws_tokens as _ws_tokens,
-)
+from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens
 
 
 def _count_term(toks: Column, term: str) -> Column:
@@ -67,7 +64,7 @@ def bm25_scores(
     if not terms:
         raise ValueError("bm25_scores needs at least one query term")
 
-    toks = _ws_tokens(F.col(text_col))
+    toks = ws_tokens(F.col(text_col))
     per_doc = docs.select(
         F.col(id_col).alias("__id"),
         F.size(toks).alias("dl"),

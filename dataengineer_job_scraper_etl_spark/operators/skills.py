@@ -64,6 +64,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    ws_collapse,
+    ws_collapse_py,
+    ws_collapse_sql,
+    ws_split,
+)
+
 DEFAULT_PATTERNS_PATH = "assets/skill_patterns.jsonl"
 
 # Separator punctuation treated as a token boundary — mirrors the
@@ -78,13 +85,12 @@ DEFAULT_PATTERNS_PATH = "assets/skill_patterns.jsonl"
 # regex (Spark), RE2 (DuckDB), and Python re.
 PUNCT_CLASS = "[,.;:!?()\\[\\]{}<>\"'`/\\\\|=*^%$@~-]"
 _PUNCT_RE = re.compile(PUNCT_CLASS)
-_WS_RE = re.compile(r"\s+")
 
 
 def normalize_text_py(text: str) -> str:
     """Driver/worker-side twin of ``_normalized`` (unpadded): lower,
     punctuation -> space, collapse whitespace, trim."""
-    return _WS_RE.sub(" ", _PUNCT_RE.sub(" ", text.lower())).strip()
+    return ws_collapse_py(_PUNCT_RE.sub(" ", text.lower()))
 
 
 def phrases_from_patterns(patterns: list[dict]) -> list[str]:
@@ -124,13 +130,9 @@ def text_phrases_from_patterns(patterns: list[dict]) -> list[str]:
         toks = row.get("pattern", [])
         if not toks or not any("TEXT" in tok for tok in toks):
             continue
-        phrase = _WS_RE.sub(
-            " ",
-            " ".join(
-                str(tok.get("TEXT") or tok.get("LOWER") or "").strip()
-                for tok in toks
-            ),
-        ).strip()
+        phrase = ws_collapse_py(
+            " ".join(str(tok.get("TEXT") or tok.get("LOWER") or "") for tok in toks)
+        )
         if phrase:
             out.append(phrase)
     return sorted(set(out))
@@ -165,7 +167,7 @@ def _escape_regex_token(tok: str) -> str:
 def text_pattern_regex(phrase: str) -> str:
     """Search regex (no anchors beyond the boundary groups) for one
     case-sensitive TEXT phrase; engine-portable (see block comment)."""
-    body = "(?:\\s+)".join(_escape_regex_token(t) for t in phrase.split())
+    body = "(?:\\s+)".join(_escape_regex_token(t) for t in phrase.split(" "))
     return TEXT_LEFT_BOUND + body + TEXT_RIGHT_BOUND
 
 
@@ -208,9 +210,7 @@ def _normalized(text: Column) -> Column:
     # every token boundary is a single space — makes phrase containment
     # == token-subsequence, including tokens followed by punctuation.
     depunct = F.regexp_replace(F.lower(text), PUNCT_CLASS, " ")
-    return F.concat(
-        F.lit(" "), F.trim(F.regexp_replace(depunct, r"\s+", " ")), F.lit(" ")
-    )
+    return F.concat(F.lit(" "), ws_collapse(depunct), F.lit(" "))
 
 
 def extract_skills_native(
@@ -244,7 +244,7 @@ def skills_oracle_padded_sql(text_expr: str) -> str:
     seconds with the projection materialized."""
     punct_sql = PUNCT_CLASS.replace("'", "''")
     depunct = f"regexp_replace(lower({text_expr}), '{punct_sql}', ' ', 'g')"
-    return f"(' ' || trim(regexp_replace({depunct}, '\\s+', ' ', 'g')) || ' ')"
+    return f"(' ' || {ws_collapse_sql(depunct)} || ' ')"
 
 
 def skills_oracle_sql(
@@ -302,10 +302,10 @@ def skill_match_pairs(
     The case-sensitive TEXT stratum (bounded small — 52 rows in the
     reference) rides along as a per-row codegen'd rlike channel
     unioned below the same dedup: no extra shuffle, no join."""
-    lens = sorted({len(p.split()) for p in phrases})
+    lens = sorted({len(p.split(" ")) for p in phrases})
     phrase_df = spark.createDataFrame([(p,) for p in phrases], "phrase string")
     depunct = F.regexp_replace(F.lower(F.col(text_col)), PUNCT_CLASS, " ")
-    toks = F.split(F.trim(F.regexp_replace(depunct, r"\s+", " ")), " ")
+    toks = ws_split(depunct)
 
     def grams_of(n: int):
         n_g = F.size(F.col("__toks")) - F.lit(n - 1)
@@ -391,12 +391,12 @@ class _TokenTrie:
         self.root: dict = {}
         for phrase in phrases:
             node = self.root
-            for tok in phrase.split():
+            for tok in phrase.split(" "):
                 node = node.setdefault(tok, {})
             node[""] = phrase  # terminal
 
     def match(self, text: str) -> list[str]:
-        toks = normalize_text_py(text).split()
+        toks = normalize_text_py(text).split(" ")
         found: set[str] = set()
         active: list[dict] = []
         for tok in toks:
@@ -419,13 +419,13 @@ class _TokenTrie:
 class _TextRegexMatcher:
     """Case-sensitive TEXT-stratum matcher for the Python path: the
     SAME engine-portable pattern strings as the Spark/DuckDB channels,
-    compiled once per worker."""
+    compiled once per worker (``re.ASCII``: Java's ``\\s``, not NBSP)."""
 
     __slots__ = ("compiled",)
 
     def __init__(self, text_phrases: list[str]):
         self.compiled = [
-            (re.compile(text_pattern_regex(p)), p.lower())
+            (re.compile(text_pattern_regex(p), re.ASCII), p.lower())
             for p in text_phrases
         ]
 

@@ -29,6 +29,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    normalize_ws_lower,
+    ws_tokens,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.operators.components import (
     connected_components,
@@ -41,10 +45,6 @@ from dataengineer_job_scraper_etl_spark.queries.sampling import (
     deterministic_source_sample,
     hash_split,
     mixture_rates,
-)
-
-from dataengineer_job_scraper_etl_spark.functions.strings import (  # noqa: E402
-    ws_tokens as _toks,
 )
 
 
@@ -140,7 +140,7 @@ def build_pretraining_corpus(
         base = decontaminate_text(base, decontaminate_against)
 
     # 1. quality gate (same rules as docs_pretrain_filter)
-    toks = _toks(F.col("text"))
+    toks = ws_tokens(F.col("text"))
     sig = base.withColumn("n_toks", F.size(toks)).withColumn(
         "d_toks", F.size(F.array_distinct(toks))
     )
@@ -308,7 +308,7 @@ def incremental_intake(
         exact_substring_ingest_trim,
     )
 
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    norm = normalize_ws_lower(F.col("text"))
     b_norm = batch.select("doc_id", norm.alias("text")).localCheckpoint(
         eager=False
     )  # staged once: digest classify, near-dup posting, decon shingles

@@ -32,6 +32,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    normalize_ws_lower,
+    ws_norm_sql,
+    ws_tokens,
+    ws_tokens_sql,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 # NB: plans.corpus imports queries.sampling, whose parent package
@@ -59,9 +65,7 @@ def exact_jaccard_pair_fn(df: DataFrame) -> DataFrame:
     the SQL-expressible pair generator the oracle entry injects. Same
     inverted-index + df-pruning shape as queries/text._jaccard_pairs,
     over an arbitrary (doc_id, text) frame."""
-    toks = F.split(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " "
-    )
+    toks = ws_tokens(F.col("text"))
     posting = df.select(
         "doc_id", F.explode(F.array_distinct(toks)).alias("term")
     )
@@ -107,8 +111,8 @@ sig AS (
          len(list_distinct(toks)) AS d_toks,
          md5(norm) AS fp, list_distinct(toks) AS dtoks
   FROM (SELECT doc_id, source,
-               string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks,
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
+               {ws_tokens_sql('text')} AS toks,
+               {ws_norm_sql('text')} AS norm
         FROM documents WHERE doc_id < 500)),
 gated AS (
   SELECT * FROM sig
@@ -232,8 +236,8 @@ sig AS (
   SELECT doc_id, source, toks, len(toks) AS n_toks,
          len(list_distinct(toks)) AS d_toks, md5(norm) AS fp
   FROM (SELECT doc_id, source,
-               string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks,
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
+               {ws_tokens_sql('text')} AS toks,
+               {ws_norm_sql('text')} AS norm
         FROM documents)),
 gated AS (
   SELECT * FROM sig
@@ -426,9 +430,7 @@ def exact_jaccard_cross_pairs(batch: DataFrame, index: DataFrame) -> DataFrame:
     frequencies are computed over the two-sided union (so pruning is
     identical to what a combined corpus would see); only cross-side
     pairs are scored."""
-    toks = F.split(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " "
-    )
+    toks = ws_tokens(F.col("text"))
     tagged = (
         batch.select("doc_id", "text").withColumn("__side", F.lit("b"))
         .unionByName(
@@ -477,17 +479,17 @@ batch AS (
   SELECT doc_id + 20000,
          'XX ' || array_to_string(string_split(text, ' ')[2:], ' ')
   FROM idx WHERE doc_id % 9 = 0),
-ifp AS (SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+ifp AS (SELECT DISTINCT md5({ws_norm_sql('text')}) AS fp
         FROM idx),
 exact AS (
   SELECT b.doc_id FROM batch b
-  JOIN ifp ON md5(trim(regexp_replace(lower(b.text), '\\s+', ' ', 'g'))) = ifp.fp),
+  JOIN ifp ON md5({ws_norm_sql('b.text')}) = ifp.fp),
 tagged AS (
   SELECT doc_id, text, 'b' AS side FROM batch
   UNION ALL SELECT doc_id, text, 'i' FROM idx),
 posting AS (
   SELECT doc_id, side, unnest(list_distinct(
-    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))) AS term
+    {ws_tokens_sql('text')})) AS term
   FROM tagged),
 tdf AS (SELECT term, count(*) AS df FROM posting GROUP BY term),
 kept AS (SELECT p.doc_id, p.side, p.term FROM posting p
@@ -554,7 +556,7 @@ def docs_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CARD_ORACLE = """
+_CARD_ORACLE = f"""
 WITH sig AS (
   SELECT source,
          len(toks) AS n_toks,
@@ -564,8 +566,8 @@ WITH sig AS (
                  + 600 * len(list_filter(toks, t -> t IN ('the', 'a', 'of', 'and', 'to')))))
            // len(toks) AS q
   FROM (SELECT source,
-               string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks,
-               trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
+               {ws_tokens_sql('text')} AS toks,
+               {ws_norm_sql('text')} AS norm
         FROM documents))
 SELECT source,
        CAST(count(*) AS BIGINT) AS n_docs,
@@ -593,12 +595,11 @@ FROM sig GROUP BY source
 def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.queries.text import (
         LANG_STOPWORDS,
-        _tokens,
     )
 
     d = read_parquet(spark, f"{sf_dir}/documents.parquet")
-    toks = _tokens(F.col("text"))
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    toks = ws_tokens(F.col("text"))
+    norm = normalize_ws_lower(F.col("text"))
     n = F.size(toks).cast("long")
     l_chars = F.length(F.array_join(toks, "")).cast("long")
     k = F.size(
@@ -643,15 +644,14 @@ def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (`reach`), and DuckDB otherwise inlines the whole strip pipeline
 # into every recursion step (measured 27 s -> ~2 s).
 _CHROME = "cookie banner accept all"  # 4 tokens = exactly 2 spans
+_PLANTED_SQL = f"CASE WHEN doc_id % 2 = 0 THEN '{_CHROME} ' || text ELSE text END"
 
 _PIPE_ORACLE_STRIPPED = _PIPE_ORACLE.replace(
     "WITH RECURSIVE\nsig AS (",
     f"""WITH RECURSIVE
 sbase AS (
   SELECT doc_id, source,
-         string_split(trim(regexp_replace(lower(
-           CASE WHEN doc_id % 2 = 0 THEN '{_CHROME} ' || text
-                ELSE text END), '\\s+', ' ', 'g')), ' ') AS t
+         {ws_tokens_sql(_PLANTED_SQL)} AS t
   FROM documents WHERE doc_id < 500),
 sspans AS (
   SELECT doc_id, CAST(floor((i - 1) / 2) AS BIGINT) AS pos,
@@ -833,10 +833,10 @@ def docs_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PIPE_ORACLE_DECON = _PIPE_ORACLE.replace(
     "WITH RECURSIVE\nsig AS (",
-    """WITH RECURSIVE
+    f"""WITH RECURSIVE
 d_tok AS (
   SELECT doc_id, source,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {ws_tokens_sql('text')} AS t
   FROM documents WHERE doc_id < 500),
 d_ev AS (
   SELECT DISTINCT
@@ -952,7 +952,6 @@ def _intake_oracle() -> str:
 
     k = EXSUB_SHINGLE
     assert DECON_SHINGLE == k
-    nb = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
     return f"""
 WITH raw0 AS (
   SELECT doc_id,
@@ -978,15 +977,15 @@ ba AS (
                    array_to_string(string_split(c.text, ' ')[2:], ' ')
               ELSE b.text END AS text
   FROM ba0 b LEFT JOIN co c ON c.doc_id = b.doc_id - 9),
-bnorm AS (SELECT doc_id, {nb} AS ntext FROM ba),
-cofp AS (SELECT DISTINCT md5({nb}) AS fp FROM co),
+bnorm AS (SELECT doc_id, {ws_norm_sql('text')} AS ntext FROM ba),
+cofp AS (SELECT DISTINCT md5({ws_norm_sql('text')}) AS fp FROM co),
 exact AS (SELECT doc_id FROM bnorm
           WHERE md5(ntext) IN (SELECT fp FROM cofp)),
 surv0 AS (SELECT doc_id, ntext FROM bnorm
           WHERE doc_id NOT IN (SELECT doc_id FROM exact)),
 tagged AS (
   SELECT doc_id, ntext AS text, 'b' AS side FROM surv0
-  UNION ALL SELECT doc_id, {nb} AS text, 'i' FROM co),
+  UNION ALL SELECT doc_id, {ws_norm_sql('text')} AS text, 'i' FROM co),
 posting AS (
   SELECT doc_id, side,
          unnest(list_distinct(string_split(text, ' '))) AS term
@@ -1011,7 +1010,7 @@ evidx AS (
   SELECT DISTINCT
          md5(array_to_string(list_slice(t, pos + 1, pos + {k}), ' ')) AS h
   FROM (SELECT t, unnest(range(0, greatest(len(t) - {k} + 1, 0))) AS pos
-        FROM (SELECT string_split({nb}, ' ') AS t FROM ev))),
+        FROM (SELECT {ws_tokens_sql('text')} AS t FROM ev))),
 dsh AS (
   SELECT doc_id, CAST(pos AS BIGINT) AS pos,
          md5(array_to_string(list_slice(t, pos + 1, pos + {k}), ' ')) AS h
@@ -1054,7 +1053,7 @@ coidx AS (
   SELECT DISTINCT
          md5(array_to_string(list_slice(t, pos + 1, pos + {k}), ' ')) AS h
   FROM (SELECT t, unnest(range(0, greatest(len(t) - {k} + 1, 0))) AS pos
-        FROM (SELECT string_split({nb}, ' ') AS t FROM co))),
+        FROM (SELECT {ws_tokens_sql('text')} AS t FROM co))),
 xsh AS (
   SELECT doc_id, CAST(pos AS BIGINT) AS pos,
          md5(array_to_string(list_slice(t, pos + 1, pos + {k}), ' ')) AS h

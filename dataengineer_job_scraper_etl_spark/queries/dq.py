@@ -16,6 +16,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    normalize_ws_lower,
+    ws_norm_sql,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 
@@ -185,13 +189,13 @@ def orders_incremental_rollup_refresh(
 
 @register(
     "docs_erasure_propagation",
-    """
+    f"""
 WITH dels AS (SELECT doc_id FROM documents WHERE doc_id % 97 = 0),
 docs2 AS (
   SELECT d.* FROM documents d LEFT JOIN dels ON d.doc_id = dels.doc_id
   WHERE dels.doc_id IS NULL),
 idx AS (
-  SELECT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS f,
+  SELECT md5({ws_norm_sql('text')}) AS f,
          doc_id
   FROM documents),
 idx2 AS (
@@ -221,7 +225,7 @@ def docs_erasure_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_parquet(spark, f"{sf_dir}/documents.parquet")
     dels = d.filter(F.col("doc_id") % 97 == 0).select("doc_id")
     docs2 = d.join(F.broadcast(dels), "doc_id", "left_anti")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    norm = normalize_ws_lower(F.col("text"))
     idx = d.select(F.md5(norm).alias("f"), "doc_id")
     idx2 = idx.join(F.broadcast(dels), "doc_id", "left_anti")
 

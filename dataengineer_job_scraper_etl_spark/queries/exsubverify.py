@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens_sql
 
 _K = 8        # phase-1 candidate shingle width (== spans.EXSUB_SHINGLE)
 _MIN_RUN = 16  # removal threshold / phase-2 gram width (== EXSUB_MIN_RUN)
@@ -82,9 +83,6 @@ _B_SQL = (
     "array_to_string(list_transform(range(1, 9), "
     "j -> 'qb' || CAST(doc_id AS VARCHAR) || 'w' || CAST(j AS VARCHAR)), ' ')"
 )
-
-_TOK = "string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')"
-
 
 def _chain_sql(width: int, prefix: str, min_run: int) -> str:
     """One coverage chain: sliding ``width``-gram digests -> count>=2
@@ -120,7 +118,7 @@ WITH raw AS (
                        || {_B_SQL} || ' ' || {_A_SQL}
                   ELSE '' END) AS text
   FROM documents),
-tok AS (SELECT doc_id, {_TOK} AS t FROM raw),
+tok AS (SELECT doc_id, {ws_tokens_sql('text')} AS t FROM raw),
 {_chain_sql(_K, "a", _MIN_RUN)},
 {_chain_sql(_MIN_RUN, "x", _MIN_RUN)},
 rem8 AS (SELECT doc_id, CAST(sum(len) AS BIGINT) AS removed_approx

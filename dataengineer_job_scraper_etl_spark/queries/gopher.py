@@ -38,7 +38,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
-from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    ws_tokens,
+    ws_tokens_sql,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 _STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
@@ -78,7 +81,7 @@ WITH seeded AS (
   FROM documents),
 parts AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(s), '\\s+', ' ', 'g')), ' ')
+         {ws_tokens_sql('s')}
            AS toks,
          string_split(s, {_NL}) AS lines,
          CAST(len(regexp_extract_all(s, '[#…]')) AS BIGINT) AS n_sym

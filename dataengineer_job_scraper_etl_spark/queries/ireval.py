@@ -54,6 +54,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    ws_tokens,
+    ws_tokens_sql,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.text import (
     _BM25_B,
@@ -76,16 +80,11 @@ IDCG_PPB = sum(7 * DISCOUNT_PPB[i] for i in range(5)) + sum(
     3 * DISCOUNT_PPB[i] for i in range(5, 10)
 )
 
-_TOKS_SQL = (
-    "string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')"
-)
-
-
 def _mlt_eval_oracle() -> str:
     discounts = ", ".join(str(d) for d in DISCOUNT_PPB)
     return f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
+  SELECT doc_id, {ws_tokens_sql('text')} AS t FROM documents),
 tf AS (
   SELECT doc_id, dl, term, CAST(count(*) AS BIGINT) AS tf
   FROM (SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM toks)
@@ -204,9 +203,6 @@ def mlt_bm25_scores(
     bm25_scores' bounded-column shape; see module docstring for the
     scale/broadcast layout. score_ppb is an exact integer (per-term
     ppb quantization BEFORE the sum)."""
-    from dataengineer_job_scraper_etl_spark.functions.strings import (
-        ws_tokens,
-    )
 
     base = docs.select(
         "doc_id", ws_tokens(F.col("text")).alias("toks")

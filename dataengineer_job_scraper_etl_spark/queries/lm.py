@@ -72,8 +72,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
-from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    ws_tokens,
+    ws_tokens_sql,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
+from dataengineer_job_scraper_etl_spark.session import evaluate_once
 
 # Rendered as EXACT decimal literals in both engine texts.
 _LAM_BIGRAM = "0.7"
@@ -85,7 +89,7 @@ REF_MOD = 5  # reference slice: doc_id % REF_MOD == 0
 _BIGRAM_PPL_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {ws_tokens_sql('text')} AS t
   FROM documents),
 ref_tok AS (SELECT doc_id, t FROM tok WHERE doc_id % {REF_MOD} = 0),
 uni AS (SELECT tok, CAST(count(*) AS DOUBLE) AS c_uni
@@ -223,11 +227,11 @@ def train_bigram_lm(
     identical to the two-pass formulation (pinned in
     tests/test_r14_optimizations.py); bigram counts are the
     prev-IS-NOT-NULL rows. The tokenize rides behind a Generate
-    barrier (explode(array(...)), the streaming_lm device) so the
-    zip's CodegenFallback subtree reads ``t`` as a stored attribute
-    instead of re-running the regexp tokenization per reference."""
+    barrier (``session.evaluate_once``) so the zip's CodegenFallback
+    subtree reads ``t`` as a stored attribute instead of re-running
+    the regexp tokenization per reference."""
     ref_tok = reference.select(
-        F.explode(F.array(ws_tokens(F.col(text_col)))).alias("t")
+        evaluate_once(ws_tokens(F.col(text_col))).alias("t")
     )
     pc = (
         ref_tok.select(_headed_pair_arr().alias("pcs"))
@@ -313,16 +317,12 @@ def bigram_neg_logprob(
         probs, uni, stats = train_bigram_lm(reference, text_col)
     # Generate barrier instead of a checkpoint (r14 optimization): the
     # tokenized frame feeds exactly ONE consumer (the transition
-    # stream), so the former localCheckpoint materialized the whole
+    # stream), so a localCheckpoint would materialize the whole
     # token-array corpus just to keep ``t`` out of _pair_arr's
-    # CodegenFallback zip (where 4 references would re-tokenize 4x per
-    # row — no CSE inside fallback subtrees). explode(array(...)) makes
-    # ``t`` a stored attribute with zero materialization — the
-    # streaming_lm device, pinned by test_scale_plans'
-    # Generate-barrier test.
+    # CodegenFallback zip (4 references: 4 tokenize passes per row).
     tokd = base.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.array(ws_tokens(F.col(text_col)))).alias("t"),
+        evaluate_once(ws_tokens(F.col(text_col))).alias("t"),
     )
 
     # Scoring: two token-scale LEFT joins (transitions x model on the

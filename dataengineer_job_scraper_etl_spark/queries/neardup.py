@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens_sql
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.operators.dedup import (
     minhash_lsh_pairs,
@@ -50,7 +51,7 @@ EMBED_DIM = 64
 # the raw-space first word is dropped exactly like the Spark plant
 # (split on single space), then shingling normalizes (lower, collapse
 # whitespace) — 'XX ' therefore shingles as 'xx'.
-_UNION_SHINGLE_CTES = """
+_UNION_SHINGLE_CTES = f"""
 uni AS (
   SELECT doc_id, text FROM documents
   UNION ALL
@@ -60,8 +61,7 @@ uni AS (
   FROM documents WHERE doc_id % 10 = 0),
 tok AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-                      ' ') AS t
+         {ws_tokens_sql('text')} AS t
   FROM uni),
 sh AS (
   SELECT DISTINCT doc_id, s FROM (

@@ -22,6 +22,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    ws_split,
+    ws_split_py,
+    ws_split_sql,
+    ws_tokens,
+    ws_tokens_sql,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.events import _events
 
@@ -31,16 +38,9 @@ from dataengineer_job_scraper_etl_spark.queries.events import _events
 # feeds Java regex (Spark) and DuckDB's RE2.
 BPE_SPLIT = "[a-z]+|[0-9]|[^a-z0-9\\s]"
 
-_WS_SQL = "string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')"
-
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_parquet(spark, f"{sf_dir}/documents.parquet")
-
-
-from dataengineer_job_scraper_etl_spark.functions.strings import (  # noqa: E402
-    ws_tokens as _ws_tokens,
-)
 
 
 @register(
@@ -49,7 +49,7 @@ from dataengineer_job_scraper_etl_spark.functions.strings import (  # noqa: E402
 WITH tok AS (
   SELECT source,
          len(regexp_extract_all(lower(text), '{BPE_SPLIT}')) AS n_pieces,
-         len({_WS_SQL}) AS n_words
+         len({ws_tokens_sql('text')}) AS n_words
   FROM documents)
 SELECT source, count(*) AS n_docs,
        CAST(sum(n_pieces) AS BIGINT) AS total_pieces,
@@ -70,7 +70,7 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     pieces = F.size(
         F.regexp_extract_all(F.lower(F.col("text")), F.lit(BPE_SPLIT), F.lit(0))
     )
-    words = F.size(_ws_tokens(F.col("text")))
+    words = F.size(ws_tokens(F.col("text")))
     return (
         d.select("source", pieces.alias("n_pieces"), words.alias("n_words"))
         .groupBy("source")
@@ -94,8 +94,8 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
 WITH sig AS (
   SELECT doc_id,
-         len({_WS_SQL}) AS n_toks,
-         len(list_distinct({_WS_SQL})) AS d_toks
+         len({ws_tokens_sql('text')}) AS n_toks,
+         len(list_distinct({ws_tokens_sql('text')})) AS d_toks
   FROM documents)
 SELECT doc_id,
        CASE WHEN n_toks < 20 THEN 'too_short'
@@ -113,7 +113,7 @@ FROM sig
 )
 def docs_pretrain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
-    toks = _ws_tokens(F.col("text"))
+    toks = ws_tokens(F.col("text"))
     sig = d.select(
         "doc_id",
         F.size(toks).alias("n_toks"),
@@ -134,7 +134,7 @@ def docs_pretrain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "docs_pack_sequences",
     f"""
 WITH tok AS (
-  SELECT source, doc_id, len({_WS_SQL}) AS n_toks
+  SELECT source, doc_id, len({ws_tokens_sql('text')}) AS n_toks
   FROM documents),
 off AS (
   SELECT source, n_toks,
@@ -158,7 +158,7 @@ FROM off GROUP BY source, shard_id
 def docs_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     tok = d.select(
-        "source", "doc_id", F.size(_ws_tokens(F.col("text"))).alias("n_toks")
+        "source", "doc_id", F.size(ws_tokens(F.col("text"))).alias("n_toks")
     )
     w = (
         Window.partitionBy("source")
@@ -341,7 +341,7 @@ CHUNK_SIZE, CHUNK_STRIDE = 32, 24
     f"""
 WITH s AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS t
+         {ws_split_sql('text')} AS t
   FROM documents)
 SELECT doc_id,
        unnest(list_transform(range(0, len(t), {CHUNK_STRIDE}),
@@ -365,14 +365,12 @@ FROM s
     "chunkers with real tokenizer logic that SQL can't express.",
 )
 def docs_chunk_sliding_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import re as _re
-
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="doc_id bigint, chunk_no int, chunk string")
     class ChunkDoc:
         def eval(self, doc_id, text):  # noqa: ANN001
-            toks = _re.sub(r"\s+", " ", text or "").strip().split(" ")
+            toks = ws_split_py(text or "")
             for i, start in enumerate(
                 range(0, len(toks), CHUNK_STRIDE)
             ):
@@ -658,7 +656,7 @@ N_QUERY_DOCS = 5
     f"""
 WITH s AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS t
+         {ws_split_sql('text')} AS t
   FROM documents),
 chunks AS (
   SELECT doc_id,
@@ -723,9 +721,7 @@ def docs_chunk_hashtf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 
     d = _docs(spark, sf_dir)
-    toks = F.split(
-        F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")), " "
-    )
+    toks = ws_split(F.col("text"))
     starts = F.sequence(
         F.lit(0),
         F.greatest(F.size(F.col("t")) - 1, F.lit(0)),

@@ -42,23 +42,21 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    ws_tokens,
+    ws_tokens_sql,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.text import (
     _BM25_B,
     _BM25_K1,
     BM25_QUERY_TERMS,
     _bm25_oracle_sql,
-    _tokens,
 )
 
 FB_DOCS = 10  # feedback depth: top-10 first-pass docs
 FB_TERMS = 5  # expansion terms mined
 PRF_TOP_N = 20  # final rows returned
-
-_TOK_SQL = (
-    "string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')"
-)
-
 
 def _prf_oracle_sql() -> str:
     bm25 = _bm25_oracle_sql(BM25_QUERY_TERMS, _BM25_K1, _BM25_B)
@@ -73,7 +71,7 @@ WITH first_pass AS (
   FROM ({bm25}) bm
   ORDER BY rank_first LIMIT {FB_DOCS}),
 tok AS (
-  SELECT doc_id, {_TOK_SQL} AS toks FROM documents),
+  SELECT doc_id, {ws_tokens_sql('text')} AS toks FROM documents),
 posting AS (
   SELECT doc_id, unnest(toks) AS term, len(toks) AS dl
   FROM tok),
@@ -174,7 +172,7 @@ def retrieval_prf_expansion(
     )
 
     # shared posting index for mining + pass 2 (ONE tokenize scan)
-    tokd = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
+    tokd = docs.select("doc_id", ws_tokens(F.col("text")).alias("toks"))
     posting = tokd.select(
         "doc_id", F.explode("toks").alias("term"), F.size("toks").alias("dl")
     ).filter(F.col("term") != "")

@@ -49,6 +49,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    ws_tokens,
+    ws_tokens_sql,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.operators import index_store
 
@@ -73,10 +77,7 @@ def _features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, x1..x4, y): length/100, stopword ratio, distinct
     ratio, mean-token-length/8 — every base integer-exact, every ratio
     ONE double division, matching the SQL text exactly."""
-    toks = F.split(
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")),
-        " ",
-    )
+    toks = ws_tokens(F.col(text_col))
     sig = docs.select(
         "doc_id",
         F.size(toks).cast("long").alias("n_toks"),
@@ -176,8 +177,7 @@ feats AS MATERIALIZED (
                  AS stop_toks,
                CAST(length(array_to_string(t, '')) AS BIGINT) AS chars
         FROM (SELECT doc_id,
-                     string_split(trim(regexp_replace(lower(text),
-                       '\\s+', ' ', 'g')), ' ') AS t
+                     {ws_tokens_sql('text')} AS t
               FROM documents)))"""
 
 

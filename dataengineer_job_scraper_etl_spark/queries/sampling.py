@@ -15,6 +15,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    ws_tokens,
+    ws_tokens_sql,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 
@@ -411,7 +415,7 @@ def _budget_oracle() -> str:
 WITH q AS ({_QUALITY_SQL}),
 base AS (
   SELECT d.doc_id, d.source,
-         len(string_split(trim(regexp_replace(lower(d.text), '\\s+', ' ', 'g')), ' ')) AS n_toks,
+         len({ws_tokens_sql('d.text')}) AS n_toks,
          q.quality_millionths
   FROM documents d JOIN q USING (doc_id)),
 sel AS (
@@ -442,7 +446,6 @@ FROM sel GROUP BY source
 )
 def docs_quality_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.queries.text import (
-        _tokens,
         text_quality_score,
     )
 
@@ -453,7 +456,7 @@ def docs_quality_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame
     base = d.select(
         "doc_id",
         "source",
-        F.size(_tokens(F.col("text"))).cast("long").alias("n_toks"),
+        F.size(ws_tokens(F.col("text"))).cast("long").alias("n_toks"),
     ).join(q, "doc_id")
     sel = select_by_token_budget(base, _BUDGET_TOKENS)
     return sel.groupBy("source").agg(
@@ -511,7 +514,7 @@ _ES_K = 100
 _ES_ORACLE = f"""
 WITH w AS (
   SELECT doc_id,
-         CAST(len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS BIGINT) AS w_toks,
+         CAST(len({ws_tokens_sql('text')}) AS BIGINT) AS w_toks,
          {_uniform_sql("doc_id")} AS u
   FROM documents)
 SELECT doc_id, w_toks
@@ -534,11 +537,9 @@ LIMIT {_ES_K}
     "sample on both engines.",
 )
 def docs_weighted_sample_es(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dataengineer_job_scraper_etl_spark.queries.text import _tokens
-
     d = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id",
-        F.size(_tokens(F.col("text"))).cast("long").alias("w_toks"),
+        F.size(ws_tokens(F.col("text"))).cast("long").alias("w_toks"),
     )
     return weighted_sample_without_replacement(
         d, _ES_K, weight_col="w_toks"
@@ -569,12 +570,11 @@ def dsir_importance_topk(
     LMs are vocab-sized aggregates of one exploded pass (broadcastable
     — AQE decides), scoring is explode -> broadcast join -> per-doc
     sum, and the final top-k never global-sorts."""
-    from dataengineer_job_scraper_etl_spark.queries.text import _tokens
 
     flat = docs.select(
         F.col(id_col).alias("doc_id"),
         target_filter.alias("__is_tgt"),
-        F.explode(_tokens(F.col(text_col))).alias("tok"),
+        F.explode(ws_tokens(F.col(text_col))).alias("tok"),
     )
     lm = flat.groupBy("tok").agg(
         F.count(F.lit(1)).alias("c_raw"),
@@ -607,7 +607,7 @@ def dsir_importance_topk(
 _DSIR_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id, source = '{_DSIR_TARGET_SOURCE}' AS is_tgt,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {ws_tokens_sql('text')} AS t
   FROM documents),
 flat AS (SELECT doc_id, is_tgt, unnest(t) AS tok FROM tok),
 lm AS (
@@ -774,8 +774,7 @@ _CLIP_BUDGET = 48  # tokens; the fixture's docs run ~20-90 tokens
     f"""
 WITH sig AS (
   SELECT source,
-         len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-             ' ')) AS n
+         len({ws_tokens_sql('text')}) AS n
   FROM documents)
 SELECT source,
        CAST(count(*) AS BIGINT) AS n_docs,
@@ -796,8 +795,6 @@ FROM sig GROUP BY source
     "never shuffles.",
 )
 def docs_token_budget_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens
-
     d = read_parquet(spark, f"{sf_dir}/documents.parquet")
     n = F.size(ws_tokens(F.col("text"))).cast("long")
     kept = F.least(n, F.lit(_CLIP_BUDGET))

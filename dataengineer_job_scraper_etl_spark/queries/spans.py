@@ -31,7 +31,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
-from dataengineer_job_scraper_etl_spark.queries.text import _docs, _tokens
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    ws_tokens,
+    ws_tokens_sql,
+)
+from dataengineer_job_scraper_etl_spark.queries.text import _docs
 from dataengineer_job_scraper_etl_spark.session import ensure_min_parallelism
 
 
@@ -66,7 +70,7 @@ def tok_base(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
         bytes_per_partition=_TOK_BYTES_PER_PART,
     )
     return src.select(
-        "doc_id", _tokens(F.col("__text")).alias("t")
+        "doc_id", ws_tokens(F.col("__text")).alias("t")
     ).localCheckpoint(eager=False)
 
 SPAN_TOKENS = 2
@@ -181,7 +185,7 @@ def strip_boilerplate_text(
 _SPANS_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {ws_tokens_sql('text')} AS t
   FROM documents),
 spans AS (
   SELECT doc_id,
@@ -318,7 +322,7 @@ def repeated_ngram_coverage(
 _COVERAGE_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {ws_tokens_sql('text')} AS t
   FROM documents),
 sh AS (
   SELECT doc_id, CAST(pos AS BIGINT) AS pos,
@@ -535,7 +539,7 @@ def decontaminate_trim(
         ),
     ).select("doc_id", "pos", F.md5(F.col("shingle")).alias("h"))
     eval_idx = (
-        eval_docs.select(_tokens(F.col(text_col)).alias("t"))
+        eval_docs.select(ws_tokens(F.col(text_col)).alias("t"))
         .select(
             F.explode(_sliding_k_shingles(F.col("t"), k)).alias("shingle")
         )
@@ -578,7 +582,7 @@ def exact_substring_index(
         ensure_min_parallelism(
             corpus_docs.select(F.col(text_col).alias("__text"))
         )
-        .select(_tokens(F.col("__text")).alias("t"))
+        .select(ws_tokens(F.col("__text")).alias("t"))
         .select(
             F.explode(_sliding_k_shingles(F.col("t"), k)).alias("shingle")
         )
@@ -682,7 +686,7 @@ def decontaminate_text(
 _EXSUB_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {ws_tokens_sql('text')} AS t
   FROM documents),
 sh AS (
   SELECT doc_id, CAST(pos AS BIGINT) AS pos,
@@ -792,7 +796,7 @@ WITH raw AS (
   FROM documents),
 tok AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {ws_tokens_sql('text')} AS t
   FROM raw),
 co AS (SELECT doc_id, t FROM tok WHERE doc_id % 10 < 8),
 ba AS (SELECT doc_id, t FROM tok WHERE doc_id % 10 >= 8),
@@ -882,7 +886,7 @@ def docs_exact_substring_ingest(
 _DECON_ORACLE = f"""
 WITH tok AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {ws_tokens_sql('text')} AS t
   FROM documents),
 ev AS (
   SELECT DISTINCT

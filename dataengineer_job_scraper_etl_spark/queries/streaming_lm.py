@@ -31,7 +31,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
-from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    ws_tokens,
+    ws_tokens_sql,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.lm import (
     REF_MOD,
@@ -48,6 +51,7 @@ from dataengineer_job_scraper_etl_spark.queries.streaming_queries import (
     _DOCS_STREAM_SCHEMA,
     _drain,
 )
+from dataengineer_job_scraper_etl_spark.session import evaluate_once
 from dataengineer_job_scraper_etl_spark.staging import (
     stage_once,
     write_ordered_batches,
@@ -88,7 +92,7 @@ def _lm_serve_oracle() -> str:
     return f"""
 WITH tok AS (
   SELECT doc_id, source,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {ws_tokens_sql('text')} AS t
   FROM documents),
 co AS (SELECT doc_id, source, t FROM tok
        WHERE doc_id % {_CORPUS_MOD} < {_CORPUS_LT}),
@@ -217,22 +221,16 @@ def streaming_bigram_ppl_ingest(
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
     )
-    # Generate barrier (r13 optimization, session 4): explode(array(x))
-    # emits exactly one row per input row with the token array as a
-    # REAL attribute, which CollapseProject cannot inline through. On
-    # this STREAMING frame (no checkpoint possible) the plain alias
-    # form collapsed into transitions()' pair expression, where ``t``
-    # appears four times (two slices + two sizes) inside a
-    # CodegenFallback subtree with no CSE — four tokenize passes per
-    # row. Measured on the batch twin of this exact projection:
-    # 0.4-0.7 s -> 0.2-0.3 s per pass, 0 row diffs. The barrier's
-    # optimizer dependence (CollapseProject not crossing Generate) is
-    # pinned by tests/test_scale_plans.py::
-    # test_generate_barriers_survive_the_optimizer (ADVICE r13).
+    # Generate barrier (session.evaluate_once): on this STREAMING
+    # frame (no checkpoint possible) the plain alias form collapsed
+    # into transitions()' pair expression, where ``t`` appears four
+    # times — four tokenize passes per row. Measured on the batch twin
+    # of this exact projection: 0.4-0.7 s -> 0.2-0.3 s per pass, 0 row
+    # diffs.
     tokd = stream.select(
         "doc_id",
         "source",
-        F.explode(F.array(ws_tokens(F.col("text")))).alias("t"),
+        evaluate_once(ws_tokens(F.col("text"))).alias("t"),
     )
     tr = transitions(tokd, ["doc_id", "source"])
     scored_rows = (

@@ -26,6 +26,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    ws_tokens,
+    ws_tokens_sql,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.staging import (
     stage_once,
@@ -793,7 +797,7 @@ WITH raw AS (
   FROM documents),
 tok AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {ws_tokens_sql('text')} AS t
   FROM raw),
 co AS (SELECT doc_id, t FROM tok WHERE doc_id % 10 < 8),
 ba AS (SELECT doc_id, t FROM tok WHERE doc_id % 10 >= 8),
@@ -872,7 +876,6 @@ def streaming_exact_substring_ingest(
         _trim_covered_runs,
         exact_substring_index,
     )
-    from dataengineer_job_scraper_etl_spark.queries.text import _tokens
 
     corpus = _planted_docs(spark, sf_dir).filter(F.col("doc_id") % 10 < 8)
     idx = exact_substring_index(corpus)
@@ -885,7 +888,7 @@ def streaming_exact_substring_ingest(
     sh = stream.select(
         "doc_id",
         F.posexplode(
-            _sliding_k_shingles(_tokens(F.col("text")), EXSUB_SHINGLE)
+            _sliding_k_shingles(ws_tokens(F.col("text")), EXSUB_SHINGLE)
         ).alias("pos", "shingle"),
     ).select("doc_id", "pos", F.md5(F.col("shingle")).alias("h"))
     cov = sh.join(F.broadcast(idx), "h", "left_semi").select(
@@ -896,7 +899,7 @@ def streaming_exact_substring_ingest(
     )
     rows = _drain(cov, spark, output_mode="append")
     base = read_parquet(spark, d).select(
-        "doc_id", _tokens(F.col("text")).alias("t")
+        "doc_id", ws_tokens(F.col("text")).alias("t")
     )
     out = _trim_covered_runs(base, rows.distinct(), EXSUB_MIN_RUN)
     return out.select(

@@ -18,6 +18,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    normalize_ws_lower,
+    ws_collapse_sql,
+    ws_norm_sql,
+    ws_tokens,
+    ws_tokens_sql,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 
 # Stopword profiles for the language-ID heuristic; deterministic and
@@ -35,17 +42,12 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_parquet(spark, f"{sf_dir}/documents.parquet")
 
 
-from dataengineer_job_scraper_etl_spark.functions.strings import (  # noqa: E402
-    ws_tokens as _tokens,
-)
-
-
 @register(
     "text_token_stats",
-    """
+    f"""
 WITH tok AS (
   SELECT doc_id, lang,
-         len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
+         len({ws_tokens_sql('text')})
            AS n_tokens,
          n_chars
   FROM documents)
@@ -59,7 +61,7 @@ FROM tok GROUP BY lang
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
-    toks = F.size(_tokens(F.col("text"))).alias("n_tokens")
+    toks = F.size(ws_tokens(F.col("text"))).alias("n_tokens")
     return (
         d.select("lang", toks, "n_chars")
         .groupBy("lang")
@@ -74,9 +76,9 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_term_frequencies",
-    """
+    f"""
 SELECT term, count(*) AS n FROM (
-  SELECT unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
+  SELECT unnest({ws_tokens_sql('text')})
            AS term
   FROM documents)
 WHERE term <> ''
@@ -88,7 +90,7 @@ GROUP BY term ORDER BY n DESC, term ASC LIMIT 30
 def text_term_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     return (
-        d.select(F.explode(_tokens(F.col("text"))).alias("term"))
+        d.select(F.explode(ws_tokens(F.col("text"))).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -108,10 +110,10 @@ def text_term_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   (8*n*min(n,100) + 75*min(L,8n) + 600*k) / (2000*n)
 # so floor(1e6 * q) = (500 * numerator) DIV n — integer-exact on any
 # engine, no doubles anywhere.
-_QUALITY_SQL = """
+_QUALITY_SQL = f"""
 WITH tok AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
+         {ws_tokens_sql('text')} AS toks
   FROM documents),
 sig AS (
   SELECT doc_id,
@@ -136,7 +138,7 @@ FROM sig
 )
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
-    toks = _tokens(F.col("text"))
+    toks = ws_tokens(F.col("text"))
     sig = d.select(
         "doc_id",
         F.size(toks).cast("long").alias("n"),
@@ -174,7 +176,7 @@ def _langid_sql() -> str:
     return f"""
 WITH tok AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
+         {ws_tokens_sql('text')} AS toks
   FROM documents),
 scored AS (SELECT doc_id, {score_cols} FROM tok)
 SELECT doc_id,
@@ -192,7 +194,7 @@ FROM scored
 )
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
-    toks = _tokens(F.col("text"))
+    toks = ws_tokens(F.col("text"))
     df = d.select("doc_id", toks.alias("toks"))
     # NB: the lambda must have exactly one parameter — PySpark treats a
     # second parameter (even a default) as the element-index argument.
@@ -229,9 +231,9 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_fingerprint",
-    """
+    f"""
 SELECT doc_id,
-       md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint
+       md5({ws_norm_sql('text')}) AS fingerprint
 FROM documents
 """,
     doc="Document fingerprint: md5 of whitespace-normalized lowercase "
@@ -239,16 +241,16 @@ FROM documents
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    norm = normalize_ws_lower(F.col("text"))
     return d.select("doc_id", F.md5(norm).alias("fingerprint"))
 
 
 @register(
     "docs_exact_dedup",
-    """
+    f"""
 SELECT fingerprint, min(doc_id) AS keep_doc_id, count(*) AS n_copies
 FROM (SELECT doc_id,
-             md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint
+             md5({ws_norm_sql('text')}) AS fingerprint
       FROM documents)
 GROUP BY fingerprint
 """,
@@ -258,7 +260,7 @@ GROUP BY fingerprint
 )
 def docs_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    norm = normalize_ws_lower(F.col("text"))
     return (
         d.select("doc_id", F.md5(norm).alias("fingerprint"))
         .groupBy("fingerprint")
@@ -280,14 +282,14 @@ def docs_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 JACCARD_MAX_DF = 100
 
 # CTE stack shared by the pair query and the cluster query's oracle.
-_JACCARD_CTES = """tok AS (
+_JACCARD_CTES = f"""tok AS (
   SELECT doc_id,
-         list_distinct(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS toks
+         list_distinct({ws_tokens_sql('text')}) AS toks
   FROM documents WHERE doc_id < 200),
 posting AS (SELECT doc_id, unnest(toks) AS term FROM tok),
 tdf AS (SELECT term, count(*) AS df FROM posting GROUP BY term),
 kept AS (SELECT p.doc_id, p.term FROM posting p
-         JOIN tdf ON p.term = tdf.term WHERE tdf.df <= {maxdf}),
+         JOIN tdf ON p.term = tdf.term WHERE tdf.df <= {JACCARD_MAX_DF}),
 pair_inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
   FROM kept a JOIN kept b ON a.term = b.term AND a.doc_id < b.doc_id
@@ -299,9 +301,7 @@ pairs AS (
   FROM pair_inter
   JOIN sizes sa ON sa.doc_id = doc_a
   JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.8)""".format(
-    maxdf=JACCARD_MAX_DF
-)
+  WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.8)"""
 
 
 @register(
@@ -321,7 +321,7 @@ def docs_near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).filter(F.col("doc_id") < 200)
     tok = d.select(
-        "doc_id", F.array_distinct(_tokens(F.col("text"))).alias("toks")
+        "doc_id", F.array_distinct(ws_tokens(F.col("text"))).alias("toks")
     )
     posting = tok.select("doc_id", F.explode("toks").alias("term"))
     tdf = posting.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -357,10 +357,10 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_tfidf_top_terms",
-    """
+    f"""
 WITH tok AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
+         {ws_tokens_sql('text')} AS toks
   FROM documents WHERE doc_id < 300),
 n_docs AS (SELECT count(*) AS n FROM tok),
 tf AS (
@@ -382,7 +382,7 @@ WHERE t.tf * ln((SELECT n FROM n_docs) * 1.0 / df.df) > 2.0
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).filter(F.col("doc_id") < 300)
     posting = d.select(
-        "doc_id", F.explode(_tokens(F.col("text"))).alias("term")
+        "doc_id", F.explode(ws_tokens(F.col("text"))).alias("term")
     ).filter(F.col("term") != "")
     tf = posting.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     # Corpus size as a broadcast 1-row frame, not a driver-side
@@ -592,10 +592,10 @@ def _trigrams(toks):
 
 @register(
     "docs_contamination_ngram",
-    """
+    f"""
 WITH tok AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {ws_tokens_sql('text')} AS t
   FROM documents),
 g AS (
   SELECT DISTINCT doc_id,
@@ -629,7 +629,7 @@ def docs_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the trigram lambda otherwise inlines the whole regexp+split and
     # Spark does no CSE inside lambda functions — the text would be
     # re-tokenized ~3x per gram per row.
-    tokd = d.select("doc_id", _tokens(F.col("text")).alias("__toks"))
+    tokd = d.select("doc_id", ws_tokens(F.col("text")).alias("__toks"))
     grams = tokd.select(
         "doc_id", F.explode(_trigrams(F.col("__toks"))).alias("gram")
     ).dropDuplicates(["doc_id", "gram"])
@@ -657,10 +657,10 @@ def docs_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_repetition_signals",
-    """
+    f"""
 WITH tok AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {ws_tokens_sql('text')} AS t
   FROM documents),
 flat AS (SELECT doc_id, unnest(t) AS tok FROM tok),
 per_tok AS (
@@ -700,7 +700,7 @@ def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2. Project the O(n^2) array_distinct below the explode — an
     #    expression in the same select as a generator is evaluated per
     #    GENERATED row (113s -> ~1s at sf0.01 for this split).
-    tokd = d.select("doc_id", _tokens(F.col("text")).alias("__toks"))
+    tokd = d.select("doc_id", ws_tokens(F.col("text")).alias("__toks"))
     tcol = F.col("__toks")
     bigrams = F.when(
         F.size(tcol) >= 2,
@@ -749,10 +749,10 @@ def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_unigram_logprob",
-    """
+    f"""
 WITH tok AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS t
+         {ws_tokens_sql('text')} AS t
   FROM documents),
 flat AS (SELECT doc_id, unnest(t) AS tok FROM tok),
 uni AS (SELECT tok, count(*) AS c FROM flat GROUP BY tok),
@@ -773,7 +773,7 @@ GROUP BY f.doc_id
 )
 def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
-    flat = d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
+    flat = d.select("doc_id", F.explode(ws_tokens(F.col("text"))).alias("tok"))
     uni = flat.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     total = uni.agg(F.sum("c").cast("double").alias("__total"))
     return (
@@ -902,7 +902,7 @@ WITH per_doc AS (
   SELECT doc_id, len(toks) AS dl,
          {tf_cols}
   FROM (SELECT doc_id,
-               string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
+               {ws_tokens_sql('text')} AS toks
         FROM documents)),
 stats AS (
   SELECT CAST(count(*) AS BIGINT) AS n_docs, avg(dl) AS avgdl,
@@ -943,6 +943,7 @@ def text_bm25_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SEEDED deterministically from doc_id (same device as
 # text_pii_redaction): script/style blocks, per-doc entity tails, and
 # classic boilerplate lines, identically constructed on both engines.
+_UNCTRL_SQL = "regexp_replace(s, '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]', ' ', 'g')"
 _CLEAN_ORACLE = """
 WITH seeded AS (
   SELECT doc_id,
@@ -972,9 +973,9 @@ unboiled AS (
       l -> NOT regexp_matches(l, '(?i)^\\s*(©|\\(c\\)\\s|copyright\\b|all rights reserved|accept (all )?cookies|we use cookies|cookie (policy|settings)|subscribe to our newsletter|sign in to continue|terms (of (use|service))?\\s*\\|\\s*privacy).*$')),
       chr(10)) AS s
   FROM stripped)
-SELECT doc_id,
-  md5(trim(regexp_replace(regexp_replace(s, '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]', ' ', 'g'), '\\s+', ' ', 'g'))) AS clean_fp,
-  CAST(length(trim(regexp_replace(regexp_replace(s, '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]', ' ', 'g'), '\\s+', ' ', 'g'))) AS BIGINT) AS clean_len
+""" + f"""SELECT doc_id,
+  md5({ws_collapse_sql(_UNCTRL_SQL)}) AS clean_fp,
+  CAST(length({ws_collapse_sql(_UNCTRL_SQL)}) AS BIGINT) AS clean_len
 FROM unboiled
 """
 
@@ -1032,7 +1033,7 @@ _TERCILES_ORACLE = f"""
 WITH q AS ({_QUALITY_SQL}),
 tok AS (
   SELECT doc_id, source,
-         len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS n_toks
+         len({ws_tokens_sql('text')}) AS n_toks
   FROM documents),
 b AS (
   SELECT t.source, t.doc_id, t.n_toks, q.quality_millionths,
@@ -1071,7 +1072,7 @@ def docs_quality_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = d.select(
         "doc_id",
         "source",
-        F.size(_tokens(F.col("text"))).cast("long").alias("n_toks"),
+        F.size(ws_tokens(F.col("text"))).cast("long").alias("n_toks"),
     ).join(q, "doc_id")
     w = Window.partitionBy("source").orderBy(
         F.desc("quality_millionths"), F.asc("doc_id")
@@ -1096,10 +1097,10 @@ def docs_quality_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_source_dedup_audit",
-    """
+    f"""
 WITH fp AS (
   SELECT doc_id, source,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS f
+         md5({ws_norm_sql('text')}) AS f
   FROM documents),
 keep AS (SELECT f, min(doc_id) AS k FROM fp GROUP BY f)
 SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1120,7 +1121,7 @@ GROUP BY source
 )
 def docs_source_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    norm = normalize_ws_lower(F.col("text"))
     fp = d.select("doc_id", "source", F.md5(norm).alias("f"))
     keep = fp.groupBy("f").agg(F.min("doc_id").alias("k"))
     dup = (F.col("doc_id") != F.col("k")).cast("long")
@@ -1149,8 +1150,7 @@ _VOCAB_CUTOFFS = (10, 100, 1000, 10000)
     "text_vocab_coverage_curve",
     f"""
 WITH terms AS (
-  SELECT unnest(string_split(
-           trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
+  SELECT unnest({ws_tokens_sql('text')})
            AS term
   FROM documents),
 tf AS (SELECT term, count(*) AS n FROM terms
@@ -1191,7 +1191,7 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs(spark, sf_dir)
     tf = (
-        d.select(F.explode(_tokens(F.col("text"))).alias("term"))
+        d.select(F.explode(ws_tokens(F.col("text"))).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1234,11 +1234,10 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_global_token_offsets",
-    """
+    f"""
 WITH t AS (
   SELECT doc_id,
-         CAST(len(string_split(
-           trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
+         CAST(len({ws_tokens_sql('text')})
            AS BIGINT) AS n_tokens
   FROM documents)
 SELECT doc_id, n_tokens,
@@ -1265,7 +1264,7 @@ def docs_global_token_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     t = d.select(
         "doc_id",
-        F.size(_tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
+        F.size(ws_tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
     )
     pref = global_prefix(t, [F.asc("doc_id")], sums={"c": "n_tokens"})
     return pref.select(
@@ -1277,11 +1276,10 @@ def docs_global_token_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_shard_assignment",
-    """
+    f"""
 WITH t AS (
   SELECT doc_id,
-         CAST(len(string_split(
-           trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))
+         CAST(len({ws_tokens_sql('text')})
            AS BIGINT) AS n_tokens
   FROM documents),
 o AS (
@@ -1313,7 +1311,7 @@ def docs_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     t = d.select(
         "doc_id",
-        F.size(_tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
+        F.size(ws_tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
     )
     pref = global_prefix(t, [F.asc("doc_id")], sums={"c": "n_tokens"})
     tot = pref.agg(F.max("c").cast("bigint").alias("total"))

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens_sql
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.operators.bpe import (
     pair_counts,
@@ -27,7 +28,7 @@ _TOP = 30
 
 _PAIRS_ORACLE = f"""
 WITH words AS (
-  SELECT unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS word
+  SELECT unnest({ws_tokens_sql('text')}) AS word
   FROM documents),
 wc AS (
   SELECT word, count(*) AS c FROM words WHERE word <> '' GROUP BY word),

@@ -31,16 +31,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.strings import (
+    ws_split,
+    ws_split_sql,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
+from dataengineer_job_scraper_etl_spark.session import evaluate_once
 
 _DIM = 16
 _K = 4
 _DOC_BOUND = 300
-
-_TOK_SQL = (
-    "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
-)
-
 
 def _lloyd_sql() -> str:
     """Unrolled 2-round quantized Lloyd over the ``emb`` CTE —
@@ -88,7 +88,7 @@ def _hashtf_emb_sql(src: str, out: str) -> str:
     (vec_id, e); zero-norm docs excluded."""
     return f"""
 {out}_tok AS (
-  SELECT doc_id, {_TOK_SQL} AS t FROM {src}),
+  SELECT doc_id, {ws_split_sql('text')} AS t FROM {src}),
 {out}_cnt AS (
   SELECT doc_id,
          position(substring(md5(tk), 1, 1) IN '0123456789abcdef') - 1 AS bk,
@@ -162,9 +162,9 @@ def hashtf_unit_embeddings(d: DataFrame) -> DataFrame:
     featurizer (one md5 nibble per token -> {_DIM} buckets) with L2
     normalization — stateless and shuffle-free (streaming-safe, so the
     streaming twin runs it per micro-batch unchanged), staged as THREE
-    projection segments separated by single-element explode(array(x))
-    Generate barriers (see the barrier comment below) rather than one
-    collapsed projection. Token-less and zero-norm docs drop."""
+    projection segments separated by Generate barriers
+    (``session.evaluate_once``; see the barrier comment below) rather
+    than one collapsed projection. Token-less and zero-norm docs drop."""
     from dataengineer_job_scraper_etl_spark.functions.vector_math import (
         dot,
     )
@@ -174,9 +174,7 @@ def hashtf_unit_embeddings(d: DataFrame) -> DataFrame:
     )
     split = d.select(
         "doc_id",
-        F.split(
-            F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")), " "
-        ).alias("t"),
+        ws_split(F.col("text")).alias("t"),
     ).filter(F.size("t") > 0)
     toks = F.filter(F.col("t"), lambda tk: tk != "")
     bks = F.transform(toks, bucket)
@@ -201,25 +199,20 @@ def hashtf_unit_embeddings(d: DataFrame) -> DataFrame:
             + F.when(b == i, F.lit(1.0)).otherwise(F.lit(0.0)),
         ),
     )
-    # Generate barriers (r13 optimization, session 4): explode(array(x))
-    # yields exactly one row per input row carrying x as a REAL
-    # attribute, and CollapseProject cannot inline an expression
-    # through a Generate. Without them, any consumer that cannot
-    # checkpoint this frame — the STREAMING twin above all — collapses
-    # the whole chain into one projection where the aggregate fold
-    # re-evaluates inside the norm lambda (per element), the zero-norm
-    # filter, and the caller's argmin-per-centroid lambda: ~25
-    # featurizer evaluations per row. Three barriers (after the
-    # histogram, after the norm, after the unit vector) pin each stage
-    # to one evaluation; rows are identical (1-element explode drops
-    # nothing) and the plan stays a stateless streaming-safe
-    # projection — no shuffle, no state. Measured on the full sf0.1
-    # featurize+argmin chain: ~3.0 s -> ~1.0 s (0 row diffs).
-    base = split.select(
-        "doc_id", F.explode(F.array(vec)).alias("v")
-    ).withColumn("__norm", F.sqrt(dot(F.col("v"), F.col("v"))))
+    # Generate barriers (session.evaluate_once). Without them, any
+    # consumer that cannot checkpoint this frame — the STREAMING twin
+    # above all — collapses the whole chain into one projection where
+    # the aggregate fold re-evaluates inside the norm lambda (per
+    # element), the zero-norm filter, and the caller's
+    # argmin-per-centroid lambda: ~25 featurizer evaluations per row.
+    # Three barriers (after the histogram, after the norm, after the
+    # unit vector) pin each stage to one evaluation. Measured on the
+    # full sf0.1 featurize+argmin chain: ~3.0 s -> ~1.0 s (0 row diffs).
+    base = split.select("doc_id", evaluate_once(vec).alias("v")).withColumn(
+        "__norm", F.sqrt(dot(F.col("v"), F.col("v")))
+    )
     base = base.select(
-        "doc_id", F.explode(F.array(F.struct("v", "__norm"))).alias("s")
+        "doc_id", evaluate_once(F.struct("v", "__norm")).alias("s")
     ).select(
         "doc_id", F.col("s.v").alias("v"), F.col("s.__norm").alias("__norm")
     )
@@ -231,5 +224,5 @@ def hashtf_unit_embeddings(d: DataFrame) -> DataFrame:
                 F.col("v"), lambda x: x / F.col("__norm")
             ).alias("e"),
         )
-        .select("doc_id", F.explode(F.array("e")).alias("e"))
+        .select("doc_id", evaluate_once("e").alias("e"))
     )

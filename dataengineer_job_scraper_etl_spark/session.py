@@ -20,7 +20,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
+from pyspark.sql import functions as F
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -176,3 +177,19 @@ def ensure_min_parallelism(
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def evaluate_once(col: Column | str) -> Column:
+    """Generate barrier: ``explode(array(col))`` yields ``col`` once per
+    row as a stored attribute, so a consumer that references it several
+    times (lambda bodies, CodegenFallback subtrees such as
+    ``arrays_zip``: no CSE there) reads it instead of re-evaluating it
+    per reference. Rows are unchanged; no shuffle, no state, so
+    streaming frames can use it. Relies on Catalyst's ``CollapseProject``
+    not merging projections through a ``Generate`` (pinned by
+    tests/test_scale_plans.py::test_generate_barriers_survive_the_optimizer).
+    If a Spark upgrade eliminates single-element Generates, fall back to
+    ``localCheckpoint`` of the frame, which a streaming frame cannot use.
+    A frame with several consumers is checkpointed instead
+    (``queries.spans.tok_base``)."""
+    return F.explode(F.array(col))

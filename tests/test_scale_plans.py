@@ -175,20 +175,29 @@ def test_catalog_docstring_plan_claims_hold(spark, sf_dir):
 
 
 def test_generate_barriers_survive_the_optimizer(spark):
-    """The explode(array(x)) materialization barriers (r13 — topics.
-    hashtf_unit_embeddings, streaming_lm's tokenize, lm.train_bigram_lm)
-    rely on CollapseProject not crossing a Generate node. A Spark
-    upgrade that eliminates single-element Generates would silently
-    reintroduce the ~25x featurizer re-evaluation / per-transition
-    retokenization with NO correctness signal (ADVICE r13) — so pin
-    the OPTIMIZED plan shape: the expensive expression must appear
-    exactly once, behind at least the expected Generate count."""
+    """The ``session.evaluate_once`` Generate barriers (topics.
+    hashtf_unit_embeddings, streaming_lm's tokenize, lm.train_bigram_lm
+    and lm.bigram_neg_logprob) rely on CollapseProject not crossing a
+    Generate node. A Spark upgrade that eliminates single-element
+    Generates would silently reintroduce the ~25x featurizer
+    re-evaluation / per-transition retokenization with NO correctness
+    signal (ADVICE r13) — so pin the OPTIMIZED plan shape: the
+    expensive expression must appear exactly once, behind at least the
+    expected Generate count."""
     from dataengineer_job_scraper_etl_spark.functions.strings import (
         ws_tokens,
     )
     from dataengineer_job_scraper_etl_spark.queries.lm import transitions
     from dataengineer_job_scraper_etl_spark.queries.topics import (
         hashtf_unit_embeddings,
+    )
+    from dataengineer_job_scraper_etl_spark.session import evaluate_once
+
+    fallback = (
+        "the evaluate_once Generate barrier was optimized away: fall back "
+        "to df.localCheckpoint(eager=False) on the barrier's frame (batch "
+        "only; a streaming frame cannot be checkpointed and needs "
+        "foreachBatch) — see session.evaluate_once\n"
     )
 
     docs = spark.createDataFrame(
@@ -198,18 +207,16 @@ def test_generate_barriers_survive_the_optimizer(spark):
     # in exactly ONE place in the optimized plan (pre-r13: ~25 sites)
     feat = hashtf_unit_embeddings(docs)
     plan = feat._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("md5(") == 1, plan
-    assert plan.count("Generate explode") >= 3, plan
+    assert plan.count("md5(") == 1, fallback + plan
+    assert plan.count("Generate explode") >= 3, fallback + plan
     # the streamed-tokenize twin (identical projection on a batch frame
     # with NO checkpoint): the regexp tokenization must survive as one
     # evaluation behind the barrier, not collapse into the pair zip
-    tokd = docs.select(
-        "doc_id", F.explode(F.array(ws_tokens(F.col("text")))).alias("t")
-    )
+    tokd = docs.select("doc_id", evaluate_once(ws_tokens(F.col("text"))).alias("t"))
     tr = transitions(tokd, ["doc_id"])
     plan2 = tr._jdf.queryExecution().optimizedPlan().toString()
-    assert plan2.count("regexp_replace") == 1, plan2
-    assert plan2.count("Generate explode") >= 2, plan2
+    assert plan2.count("regexp_replace") == 1, fallback + plan2
+    assert plan2.count("Generate explode") >= 2, fallback + plan2
 
 
 def test_python_stays_out_of_the_hot_path_catalog_wide(spark, sf_dir):

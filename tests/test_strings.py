@@ -2,12 +2,33 @@
 
 from __future__ import annotations
 
+import ast
+import pathlib
+import re
+
+import duckdb
 from pyspark.sql import functions as F
 
+import dataengineer_job_scraper_etl_spark as pkg
 from dataengineer_job_scraper_etl_spark.functions.strings import (
     ddmmyyyy,
     jobid_from_urn,
+    normalize_ws_lower,
     not_containing,
+    ws_collapse,
+    ws_collapse_py,
+    ws_collapse_sql,
+    ws_norm_sql,
+    ws_split,
+    ws_split_py,
+    ws_split_sql,
+    ws_tokens,
+    ws_tokens_sql,
+)
+from dataengineer_job_scraper_etl_spark.operators.skills import (
+    _TokenTrie,
+    extract_skills_ngram_join,
+    extract_skills_udf,
 )
 
 
@@ -36,3 +57,159 @@ def test_not_containing_drops_nulls(spark):
 def test_ddmmyyyy_shape(spark):
     got = spark.range(1).select(ddmmyyyy().alias("d")).first()["d"]
     assert len(got) == 8 and got.isdigit()
+
+
+# --- the whitespace contract: one home, three engines -------------------
+
+# Every ASCII whitespace char (Java's and re.ASCII's \s), then the
+# characters Unicode-aware code would also treat as whitespace but
+# Spark and DuckDB do not: NBSP, NEL, FS, LINE SEPARATOR, IDEOGRAPHIC
+# SPACE.
+_ASCII_WS = [" ", "\t", "\n", "\x0b", "\x0c", "\r"]
+_OTHER_WS = ["\xa0", "\x85", "\x1c", "\u2028", "\u3000"]
+_WS_INPUTS = (
+    [f"Ab{c}Cd" for c in _ASCII_WS + _OTHER_WS]
+    + [f"{c}{c}Ab{c}{c}Cd{c}" for c in _ASCII_WS + _OTHER_WS]
+    + ["  lead", "trail  ", " \t\x0b\x0c\r\n ", "a \xa0 b", "\xa0x\xa0", "", None]
+)
+
+
+def _spark_ws(spark):
+    df = spark.createDataFrame(list(enumerate(_WS_INPUTS)), "id int, text string")
+    t = F.col("text")
+    rows = df.select(
+        "id",
+        ws_collapse(t).alias("collapse"),
+        ws_split(t).alias("split"),
+        normalize_ws_lower(t).alias("norm"),
+        ws_tokens(t).alias("tokens"),
+    ).collect()
+    return {r["id"]: (r["collapse"], r["split"], r["norm"], r["tokens"]) for r in rows}
+
+
+def _duckdb_ws():
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(_WS_INPUTS)))
+    rows = con.execute(
+        f"SELECT id, {ws_collapse_sql('text')}, {ws_split_sql('text')}, "
+        f"{ws_norm_sql('text')}, {ws_tokens_sql('text')} FROM t"
+    ).fetchall()
+    return {r[0]: tuple(r[1:]) for r in rows}
+
+
+def test_whitespace_twins_agree_across_spark_duckdb_python(spark):
+    """The Spark helpers, their DuckDB twins and the Python twins
+    collapse, trim and split the same characters: exactly Java's \\s
+    set, never NBSP or the other Unicode-only spaces."""
+    sp, dd = _spark_ws(spark), _duckdb_ws()
+    for i, s in enumerate(_WS_INPUTS):
+        assert dd[i] == sp[i], (repr(s), dd[i], sp[i])
+        if s is not None:
+            assert (ws_collapse_py(s), ws_split_py(s)) == sp[i][:2], repr(s)
+    # the contract itself, pinned on a few inputs
+    assert sp[_WS_INPUTS.index("Ab\x0bCd")][3] == ["ab", "cd"]
+    assert sp[_WS_INPUTS.index("Ab\xa0Cd")][3] == ["ab\xa0cd"]
+    assert sp[_WS_INPUTS.index("")][1] == [""]
+    assert sp[_WS_INPUTS.index(None)] == (None, None, None, None)
+
+
+def test_trie_matches_native_ngram_on_nbsp_description(spark):
+    """The pandas-UDF path (trie for LOWER phrases, Python regex for TEXT
+    phrases) and the native n-gram join find the same skills on text
+    carrying NBSP (BeautifulSoup ``get_text`` keeps it): NBSP is part of
+    a token, not a boundary, in all of them."""
+    phrases = sorted(["python", "spark", "apache spark", "power bi"])
+    text_phrases = ["Power BI"]  # case-sensitive TEXT stratum (regex path)
+    texts = [
+        "Python\xa0Spark and Power\xa0BI",
+        "apache\xa0spark,\xa0python",
+        "Apache Spark\x0bPython",
+        "Power BI\xa0dashboards",
+    ]
+    df = spark.createDataFrame(
+        [(str(i), t) for i, t in enumerate(texts)], "jobid string, description string"
+    )
+    native = {
+        r["jobid"]: r["skills"]
+        for r in extract_skills_ngram_join(
+            spark, df, "description", "jobid", phrases, text_phrases=text_phrases
+        ).collect()
+    }
+    udf = {
+        r["jobid"]: r["skills"]
+        for r in extract_skills_udf(
+            spark, df, "description", phrases, text_phrases=text_phrases
+        ).collect()
+    }
+    trie = _TokenTrie(phrases)
+    for i, t in enumerate(texts):
+        assert trie.match(t) == native[str(i)], repr(t)
+    assert udf == native
+    assert native["0"] == [] and native["2"] == ["apache spark", "python", "spark"]
+
+
+# Whitespace-run regexes outside functions/strings.py: (module,
+# enclosing function) -> why it is not the shared contract.
+_WS_RUN_ALLOWED = {
+    ("operators/skills.py", "text_pattern_regex"): "a phrase-search pattern "
+    "shared verbatim by Spark rlike, RE2 and Python re, not a collapse",
+}
+_WS_RUN_RE = re.compile(r"\\s\+|\[\\s[^\]]*\]\+")
+
+
+def _package_sites(visit) -> set[tuple[str, str]]:
+    """(module, enclosing function) of every AST node in the package
+    for which ``visit(node)`` is true."""
+    root = pathlib.Path(pkg.__file__).parent
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+
+        class Finder(ast.NodeVisitor):
+            scope = "<module>"
+
+            def visit_FunctionDef(self, node):
+                outer, self.scope = self.scope, node.name
+                self.generic_visit(node)
+                self.scope = outer
+
+            def generic_visit(self, node):
+                if visit(node):
+                    found.add((rel, self.scope))
+                super().generic_visit(node)
+
+        Finder().visit(ast.parse(path.read_text(encoding="utf-8")))
+    return found
+
+
+def test_whitespace_is_spelled_only_in_strings_module():
+    """No whitespace-run regex (Spark, SQL or Python) outside
+    functions/strings.py, except the named allowlist."""
+    found = _package_sites(
+        lambda n: isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and bool(_WS_RUN_RE.search(n.value))
+    )
+    found = {s for s in found if s[0] != "functions/strings.py"}
+    assert found == set(_WS_RUN_ALLOWED)
+
+
+def test_generate_barrier_is_spelled_only_in_its_helper():
+    """A single-element ``F.explode(F.array(x))`` appears only in
+    session.evaluate_once."""
+
+    def is_barrier(n):
+        return (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "explode"
+            and len(n.args) == 1
+            and isinstance(n.args[0], ast.Call)
+            and isinstance(n.args[0].func, ast.Attribute)
+            and n.args[0].func.attr == "array"
+            and len(n.args[0].args) == 1
+            and not isinstance(n.args[0].args[0], ast.Starred)
+        )
+
+    assert _package_sites(is_barrier) == {("session.py", "evaluate_once")}

@@ -22,17 +22,17 @@ class TestTrigrams:
     def test_short_docs_yield_empty_not_descending_sequence(self, spark):
         # sequence(1, n) DESCENDS for n < 1 — the guard must catch
         # 0-, 1- and 2-token docs.
-        from dataengineer_job_scraper_etl_spark.queries.text import (
-            _tokens,
-            _trigrams,
+        from dataengineer_job_scraper_etl_spark.functions.strings import (
+            ws_tokens,
         )
+        from dataengineer_job_scraper_etl_spark.queries.text import _trigrams
 
         df = _docs_df(spark, ["", "one", "one two", "one two three four"])
         got = {
             r["doc_id"]: r["g"]
             for r in df.select(
                 "doc_id",
-                _trigrams(_tokens(F.col("text"))).alias("g"),
+                _trigrams(ws_tokens(F.col("text"))).alias("g"),
             ).collect()
         }
         assert got[1] == []
