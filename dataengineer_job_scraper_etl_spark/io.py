@@ -109,11 +109,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: Iterable[str] = TABLE_NAMES) -> dict[str, DataFrame]:
-    """Load the driver's testdata tables for one scale factor."""
-    return {name: read_parquet(spark, f"{sf_dir}/{name}.parquet") for name in names}
-
-
 def read_csv(
     spark: SparkSession,
     path: str,

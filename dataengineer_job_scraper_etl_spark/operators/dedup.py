@@ -28,13 +28,6 @@ from dataengineer_job_scraper_etl_spark.session import ensure_min_parallelism
 # ---------------------------------------------------------------- exact
 
 
-def dedup_exact(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Exact dedup. With explicit cols -> dropDuplicates (hash shuffle
-    on those cols). Full-row text dedup at scale should digest first:
-    shuffle 16-byte md5s, not document bodies (see docs_exact_dedup)."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
-
-
 def dedup_exact_by_digest(
     df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
@@ -175,18 +168,6 @@ def _signature_from_hashes(
 
     init = F.array_repeat(p.cast("long"), num_hashes)
     return F.aggregate(base_m, init, step)
-
-
-def minhash_signature(
-    shingle_arr: Column, num_hashes: int = 64, seed: int = 42
-) -> Column:
-    """MinHash signature as array<bigint> of length ``num_hashes``.
-
-    Each shingle is base-hashed once with xxhash64, then rehashed
-    through the affine family; min per hash function, all minima
-    carried in a single aggregate pass. Zero shuffle, zero Python."""
-    base = F.transform(shingle_arr, lambda s: F.xxhash64(s))
-    return _signature_from_hashes(base, num_hashes, seed)
 
 
 def banded_sketch(

@@ -54,12 +54,11 @@ from dataengineer_job_scraper_etl_spark.operators.pca import (
     half_up,
 )
 from dataengineer_job_scraper_etl_spark.operators.similarity import (
-    _as_double,
-    _pq_codebooks,
+    pq_codebooks,
     pq_encode,
     pq_topk_adc,
+    rerank_topk,
 )
-from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 from dataengineer_job_scraper_etl_spark.session import ensure_min_parallelism
 
 
@@ -220,10 +219,6 @@ def pq_rerank_topk(
     artifacts stored under the corpus fingerprint (plus the rotation,
     when set), so repeated calls measure the serve path — query
     rotate + ADC + rerank — not a per-call retrain and re-encode."""
-    from dataengineer_job_scraper_etl_spark.functions.vector_math import (
-        cosine,
-    )
-
     fp = index_store.fingerprint(corpus)
     corpus = ensure_min_parallelism(corpus).localCheckpoint(eager=False)
     code_col, qcode_col = vec_col, qvec_col
@@ -234,7 +229,7 @@ def pq_rerank_topk(
         cc = opq_rotate(corpus, rotation, vec_col, code_col)
         qq = opq_rotate(queries, rotation, qvec_col, qcode_col)
         rot_key = (vec_col, tuple(map(tuple, rotation)))
-    books = _pq_codebooks(
+    books = pq_codebooks(
         fp,
         ensure_min_parallelism(cc.select(code_col)).localCheckpoint(
             eager=False
@@ -260,17 +255,6 @@ def pq_rerank_topk(
     ).select(qid_col, id_col)
     # exact rerank on the ORIGINAL vectors (rotation preserves the
     # metric, but reranking raw keeps the two paths' rerank identical)
-    scored = (
-        short.join(corpus.select(id_col, vec_col), id_col)
-        .join(F.broadcast(queries.select(qid_col, qvec_col)), qid_col)
-        .select(
-            qid_col,
-            id_col,
-            cosine(
-                _as_double(F.col(qvec_col)), _as_double(F.col(vec_col))
-            ).alias("cos_sim"),
-        )
-    )
-    return grouped_topk(
-        scored, [qid_col], [F.desc("cos_sim"), F.asc(id_col)], k
+    return rerank_topk(
+        short, corpus, queries, id_col, vec_col, qid_col, qvec_col, k
     )

@@ -37,6 +37,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dataengineer_job_scraper_etl_spark.functions.vector_math import as_double
 from dataengineer_job_scraper_etl_spark.operators import index_store
 
 
@@ -86,9 +87,7 @@ def gram_triplets(
 
     return (
         vectors.select(
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-                vec_col
-            )
+            as_double(F.col(vec_col)).alias(vec_col)
         )
         .mapInPandas(part, "i int, j int, g double")
         .groupBy("i", "j")

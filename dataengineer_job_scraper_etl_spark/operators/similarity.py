@@ -1,7 +1,7 @@
 """Approximate nearest-neighbor search over embedding columns (north
 star, SURVEY §2.10).
 
-Three tiers, trading recall for scan cost:
+Five serving paths, trading recall for scan cost:
 
 1. ``brute_force_topk`` — exact cosine top-k; the correctness baseline
    (oracle-checked variant in queries/vectors.py). At 100 TB this is a
@@ -16,10 +16,23 @@ Three tiers, trading recall for scan cost:
 3. ``ivf_topk`` — IVF coarse quantizer: k-means-lite centroids
    (deterministic seeded init + ``n_iter`` Lloyd rounds, all DataFrame
    ops), assign corpus to nearest centroid, probe ``n_probe`` nearest
-   lists per query. Centroid table is tiny -> broadcast everywhere.
+   lists per query, exact cosine over the probed lists.
+4. ``ivfpq_topk`` — IVF-PQ: the IVF probe, PQ asymmetric-distance
+   (ADC) scoring of the probed candidates, exact rerank of the
+   shortlist.
+5. ``pq_topk_adc`` / ``opq.pq_rerank_topk`` — PQ (optionally
+   OPQ-rotated) over the whole corpus: ADC shortlist, exact rerank.
 
-No Python in the scoring path: dot products / norms are zip_with +
-aggregate built-ins.
+Paths 3-5 compose three shared stages, each spelled once:
+
+- probe (``_probe_lists``): a query's ``n_probe`` nearest list ids;
+- ADC (``pq_topk_adc``): per-query distance tables joined against
+  posexploded corpus codes and summed, then a grouped top-k;
+- exact rerank (``rerank_topk``): shortlist -> raw vectors -> cosine
+  -> grouped top-k.
+
+No Python in the scoring path: per-element vector math lives in
+functions/vector_math.py (zip_with + aggregate built-ins).
 """
 
 from __future__ import annotations
@@ -30,29 +43,16 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.functions.vector_math import (
+    as_double,
     cosine,
     dot,
     l2_norm,
+    ranked_centroids,
+    sq_dist,
 )
 from dataengineer_job_scraper_etl_spark.operators import index_store
 from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 from dataengineer_job_scraper_etl_spark.session import ensure_min_parallelism
-
-
-def _as_double(col: Column) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _sq_dist(a: Column, b: Column) -> Column:
-    """Squared L2 distance as ONE sequential left-to-right fold —
-    deterministic given identical inputs, which is what lets oracles
-    replay it bit-identically. Shared by centroid assignment, the
-    SemDeDup survivor ranking, and the profile query."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def brute_force_topk(
@@ -72,9 +72,9 @@ def brute_force_topk(
     # optimization, the graphrank device): dot/(qn*cn) is the
     # bit-identical cosine (same ops, same order) with the two norm
     # folds hoisted out of the |queries| x |corpus| scoring loop.
-    q2 = queries.withColumn("__qn", l2_norm(_as_double(F.col(qvec_col))))
+    q2 = queries.withColumn("__qn", l2_norm(as_double(F.col(qvec_col))))
     c2 = ensure_min_parallelism(corpus).withColumn(
-        "__cn", l2_norm(_as_double(F.col(vec_col)))
+        "__cn", l2_norm(as_double(F.col(vec_col)))
     )
     scored = (
         F.broadcast(q2)
@@ -83,7 +83,7 @@ def brute_force_topk(
             F.col(qid_col),
             F.col(id_col),
             (
-                dot(_as_double(F.col(qvec_col)), _as_double(F.col(vec_col)))
+                dot(as_double(F.col(qvec_col)), as_double(F.col(vec_col)))
                 / (F.col("__qn") * F.col("__cn"))
             ).alias("cos_sim"),
         )
@@ -98,6 +98,32 @@ def _hyperplanes(dim: int, n_bits: int, seed: int) -> list[list[float]]:
     return [
         [rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_bits)
     ]
+
+
+def _hyperplane_tables(
+    spark, dim: int, n_bits: int, n_tables: int, seed: int
+) -> DataFrame:
+    """The RHP-LSH hash tables as a tiny broadcastable frame: one
+    (tab, planes) row per table."""
+    rows = [
+        (t, _hyperplanes(dim, n_bits, seed + 1000 * t))
+        for t in range(n_tables)
+    ]
+    return spark.createDataFrame(rows, "tab int, planes array<array<double>>")
+
+
+def _rhp_bucket(vec: Column) -> Column:
+    """Sign bit of ``vec`` against each of the row's ``planes``,
+    folded MSB-first into a bigint bucket id."""
+    bits = F.transform(
+        F.col("planes"),
+        lambda p: F.when(dot(vec, p) >= 0, F.lit(1).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        ),
+    )
+    return F.aggregate(
+        bits, F.lit(0).cast("long"), lambda acc, b: acc * 2 + b
+    )
 
 
 def rhp_lsh_topk(
@@ -132,45 +158,28 @@ def rhp_lsh_topk(
     500 vectors), and a per-table union re-scanned the corpus once per
     table. One scan, one cross join against <=16 rows, one projection.
     """
-    spark = corpus.sparkSession
+    planes_df = _hyperplane_tables(
+        corpus.sparkSession, dim, n_bits, n_tables, seed
+    )
     corpus = ensure_min_parallelism(corpus)  # 1-partition scans would
     # otherwise pin the bucket+rerank stages to one core (no-op at scale)
-    planes_rows = [
-        (t, _hyperplanes(dim, n_bits, seed + 1000 * t))
-        for t in range(n_tables)
-    ]
-    planes_df = spark.createDataFrame(
-        planes_rows, "tab int, planes array<array<double>>"
-    )
-
-    def bucket_for(vec: Column) -> Column:
-        # sign bit per plane, folded MSB-first into a bigint bucket id
-        bits = F.transform(
-            F.col("planes"),
-            lambda p: F.when(dot(vec, p) >= 0, F.lit(1).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            ),
-        )
-        return F.aggregate(
-            bits, F.lit(0).cast("long"), lambda acc, b: acc * 2 + b
-        )
 
     # Corpus-side norm computed once per row BEFORE the planes cross
     # join (r13 optimization): the rerank's cosine becomes dot/(qn*cn)
     # — the bit-identical expression with the two norm folds hoisted
     # out of the candidate loop (and out of the n_tables fan-out).
     c_all = (
-        corpus.withColumn("__cn", l2_norm(_as_double(F.col(vec_col))))
+        corpus.withColumn("__cn", l2_norm(as_double(F.col(vec_col))))
         .crossJoin(F.broadcast(planes_df))
         .select(
             F.col(id_col),
             F.col(vec_col),
             F.col("__cn"),
             F.col("tab"),
-            bucket_for(_as_double(F.col(vec_col))).alias("bucket"),
+            _rhp_bucket(as_double(F.col(vec_col))).alias("bucket"),
         )
     )
-    qb = bucket_for(_as_double(F.col(qvec_col)))
+    qb = _rhp_bucket(as_double(F.col(qvec_col)))
     if multiprobe not in (0, 1):
         # only hamming-distance-1 probing is implemented; accepting
         # larger values silently delivered distance-1 recall while the
@@ -186,7 +195,7 @@ def rhp_lsh_topk(
     else:
         probe_buckets = F.array(qb)
     q_all = (
-        queries.withColumn("__qn", l2_norm(_as_double(F.col(qvec_col))))
+        queries.withColumn("__qn", l2_norm(as_double(F.col(qvec_col))))
         .crossJoin(F.broadcast(planes_df))
         .select(
             F.col(qid_col),
@@ -206,30 +215,13 @@ def rhp_lsh_topk(
         F.col(qid_col),
         F.col(id_col),
         (
-            dot(_as_double(F.col(qvec_col)), _as_double(F.col(vec_col)))
+            dot(as_double(F.col(qvec_col)), as_double(F.col(vec_col)))
             / (F.col("__qn") * F.col("__cn"))
         ).alias("cos_sim"),
     )
     return grouped_topk(
         scored, [qid_col], [F.desc("cos_sim"), F.asc(id_col)], k
     )
-
-
-def _centroids_sql(cents: list[tuple[int, list[float]]]) -> str:
-    """Render centroids as ONE SQL literal: array of (cluster_id,
-    centroid) structs. A single Py4J round trip that Catalyst constant-
-    folds into a plan Literal — vs shipping an n_clusters x dim local
-    relation + collect_list sub-aggregation + crossJoin(broadcast) per
-    Lloyd round. CAST('<repr>' AS DOUBLE) round-trips every IEEE-754
-    value exactly on both build (Python repr) and parse (JVM) sides."""
-    structs = ", ".join(
-        "named_struct('cluster_id', {cid}, 'centroid', array({vals}))".format(
-            cid=int(cid),
-            vals=", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in vec),
-        )
-        for cid, vec in cents
-    )
-    return f"array({structs})"
 
 
 def _kmeans_rounds(
@@ -307,7 +299,7 @@ def _kmeans_rounds(
             new = (
                 assigned.select(
                     "cluster_id",
-                    F.posexplode(_as_double(F.col(vec_col))).alias("i", "x"),
+                    F.posexplode(as_double(F.col(vec_col))).alias("i", "x"),
                 )
                 .groupBy("cluster_id", "i")
                 .agg(F.avg("x").alias("m"))
@@ -375,22 +367,12 @@ def assign_to_centroid(
     centroids: list[tuple[int, list[float]]],
     vec_col: str,
 ) -> DataFrame:
-    """Nearest-centroid assignment: argmin over the constant-folded
-    literal centroid set, computed as array_sort of (d2, cluster_id)
-    structs — per-row, no join, no shuffle, no extra job at all. Cost
-    O(n_clusters x dim) per row."""
-    cents = F.expr(_centroids_sql(centroids))
-    scored = F.transform(
-        cents,
-        lambda s: F.struct(
-            _sq_dist(_as_double(F.col(vec_col)), s.getField("centroid")).alias(
-                "d2"
-            ),
-            s.getField("cluster_id").alias("cluster_id"),
-        ),
-    )
-    best = F.array_sort(scored)[0].getField("cluster_id")
-    return df.withColumn("cluster_id", best)
+    """Nearest-centroid assignment: the head of ``ranked_centroids``
+    over the constant-folded literal centroid set — per-row, no join,
+    no shuffle, no extra job at all. Cost O(n_clusters x dim) per
+    row."""
+    ranked = ranked_centroids(as_double(F.col(vec_col)), centroids)
+    return df.withColumn("cluster_id", ranked[0].getField("cluster_id"))
 
 
 def kmeans_corpus_init(
@@ -422,7 +404,7 @@ def kmeans_corpus_init(
     contract — wrap it in ``index_store.get_or_train`` keyed by the
     training frame's fingerprint."""
     init_rows = (
-        corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+        corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
         .orderBy(F.col(id_col))
         .limit(n_clusters)
         .collect()
@@ -628,7 +610,7 @@ def normalize_assigned(
     same projection would inline the fold into the transform lambda
     and re-evaluate it per element. Post-checkpoint, nv is dim
     divisions per row against the stored scalar."""
-    vd = _as_double(F.col(vec_col))
+    vd = as_double(F.col(vec_col))
     # Fan the narrow (id, vec) frame out BEFORE assign/normalize (r13
     # optimization, guide §2.5): a small parquet fixture scans as ONE
     # partition, and since this checkpointed frame feeds BOTH sides of
@@ -710,7 +692,7 @@ def semdedup_centroid_survivors(
             cents, "cluster_id int, centroid array<double>"
         )
     )
-    d2 = _sq_dist(F.col("v"), F.col("centroid"))
+    d2 = sq_dist(F.col("v"), F.col("centroid"))
     grouped = (
         assigned.join(comp, assigned[id_col] == comp["node"])
         .join(cdf, on="cluster_id")
@@ -842,14 +824,14 @@ def pq_train(
     serve many times: the codebooks are stored under the corpus
     fingerprint and (vec_col, dim, m, k, n_iter, seed), the same key
     ``ivfpq_topk`` and plain ``pq_rerank_topk`` use."""
-    return _pq_codebooks(
+    return pq_codebooks(
         index_store.fingerprint(corpus),
         ensure_min_parallelism(corpus).localCheckpoint(eager=False),
         vec_col, dim, m, k, n_iter, seed,
     )
 
 
-def _pq_codebooks(
+def pq_codebooks(
     fp: tuple,
     staged: DataFrame,
     vec_col: str,
@@ -873,7 +855,7 @@ def _pq_codebooks(
             _kmeans_rounds(
                 staged.select(
                     F.slice(
-                        _as_double(F.col(vec_col)), j * d_sub + 1, d_sub
+                        as_double(F.col(vec_col)), j * d_sub + 1, d_sub
                     ).alias("__sub")
                 ),
                 "__sub",
@@ -896,36 +878,13 @@ def pq_encode(
 ) -> DataFrame:
     """Encode vectors as ``pq_codes`` (array<int>, one code per
     subspace): per-row argmin against each subspace's literal codebook
-    — the same constant-folded scored-struct trick as
-    assign_to_centroid, no join, no shuffle."""
+    through ``ranked_centroids``, like assign_to_centroid — no join,
+    no shuffle."""
     d_sub = len(codebooks[0][0][1])
-
-    def _argmin_code(sub: Column, book) -> Column:
-        # NB: capture `sub` via this factory, NOT a two-arg lambda with
-        # a default — PySpark reads a second lambda parameter as the
-        # (element, index) transform form and binds the INDEX to it.
-        cents = F.expr(_centroids_sql(book))
-        scored = F.transform(
-            cents,
-            lambda s: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        sub,
-                        s.getField("centroid"),
-                        lambda x, c: (x - c) * (x - c),
-                    ),
-                    F.lit(0.0),
-                    lambda a, v: a + v,
-                ).alias("d2"),
-                s.getField("cluster_id").alias("cluster_id"),
-            ),
-        )
-        return F.array_sort(scored)[0].getField("cluster_id")
-
     code_cols = [
-        _argmin_code(
-            F.slice(_as_double(F.col(vec_col)), j * d_sub + 1, d_sub), book
-        )
+        ranked_centroids(
+            F.slice(as_double(F.col(vec_col)), j * d_sub + 1, d_sub), book
+        )[0].getField("cluster_id")
         for j, book in enumerate(codebooks)
     ]
     return df.withColumn("pq_codes", F.array(*code_cols))
@@ -940,7 +899,8 @@ def pq_topk_adc(
     qvec_col: str = "qe",
     k: int = 10,
 ) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes, fully relational:
+    """Asymmetric-distance top-k over PQ codes, fully relational — the
+    ADC stage of every PQ serving path:
 
     1. distance tables: queries x (subspace, code, sub_centroid) —
        the codebooks join in as a broadcast table (n_q x m x k rows,
@@ -948,7 +908,10 @@ def pq_topk_adc(
        collect of query vectors.
     2. scoring: corpus codes posexplode to (id, subspace, code), join
        the broadcast tables on (subspace, code), sum per (qid, id) —
-       approximate distance = sum of per-subspace cell distances.
+       approximate distance = sum of per-subspace cell distances. A
+       candidate frame that already carries ``qid_col`` (IVF-PQ's
+       probed lists) joins on (qid, subspace, code) instead, so each
+       candidate is scored against its own query's tables only.
     3. two-stage grouped top-k on ascending distance.
 
     At 100 TB the corpus side carries only 1-byte codes through the
@@ -959,8 +922,8 @@ def pq_topk_adc(
     ranker — same-cluster vectors collapse to near-identical codes, so
     ADC top-k lands in the right cluster but does not resolve
     within-cluster order. Serve as shortlist (k ~ a few x final k)
-    followed by exact rerank of the shortlist against the raw vectors
-    (brute_force_topk over the candidate join)."""
+    followed by ``rerank_topk``: exact cosine of the shortlist against
+    the raw vectors."""
     spark = corpus_codes.sparkSession
     d_sub = len(codebooks[0][0][1])
     book_rows = [
@@ -972,32 +935,71 @@ def pq_topk_adc(
         book_rows, "j int, code int, sub array<double>"
     )
     qsub = F.slice(
-        _as_double(F.col(qvec_col)), F.col("j") * d_sub + 1, d_sub
+        as_double(F.col(qvec_col)), F.col("j") * d_sub + 1, d_sub
     )
-    tables = (
-        queries.crossJoin(F.broadcast(books_df))
-        .select(
-            qid_col,
-            "j",
-            "code",
-            F.aggregate(
-                F.zip_with(qsub, F.col("sub"), lambda x, c: (x - c) * (x - c)),
-                F.lit(0.0),
-                lambda a, v: a + v,
-            ).alias("d2"),
-        )
+    tables = queries.crossJoin(F.broadcast(books_df)).select(
+        qid_col, "j", "code", sq_dist(qsub, F.col("sub")).alias("d2")
     )
+    q_keys = [qid_col] if qid_col in corpus_codes.columns else []
     exploded = corpus_codes.select(
-        id_col, F.posexplode("pq_codes").alias("j", "code")
+        *q_keys, id_col, F.posexplode("pq_codes").alias("j", "code")
     )
     scored = (
-        exploded.join(F.broadcast(tables), ["j", "code"])
+        exploded.join(F.broadcast(tables), [*q_keys, "j", "code"])
         .groupBy(qid_col, id_col)
         .agg(F.sum("d2").alias("adc_d2"))
     )
     return grouped_topk(
         scored, [qid_col], [F.asc("adc_d2"), F.asc(id_col)], k
     )
+
+
+def rerank_topk(
+    short: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    qid_col: str = "qid",
+    qvec_col: str = "qe",
+    k: int = 10,
+) -> DataFrame:
+    """The exact-rerank stage of the PQ serving paths: each (qid, id)
+    shortlist row joins back to its raw corpus vector and its query,
+    and the final top-k is exact cosine over the shortlist only."""
+    scored = (
+        short.join(corpus.select(id_col, vec_col), id_col)
+        .join(F.broadcast(queries.select(qid_col, qvec_col)), qid_col)
+        .select(
+            qid_col,
+            id_col,
+            cosine(
+                as_double(F.col(qvec_col)), as_double(F.col(vec_col))
+            ).alias("cos_sim"),
+        )
+    )
+    return grouped_topk(
+        scored, [qid_col], [F.desc("cos_sim"), F.asc(id_col)], k
+    )
+
+
+def _probe_lists(
+    qvec_col: str, cents: list[tuple[int, list[float]]], n_probe: int
+) -> Column:
+    """The probe stage of the IVF paths: one ``cluster_id`` row per
+    list among the query's ``n_probe`` nearest, per row over the
+    literal centroid set — no window, no crossJoin, no shuffle on the
+    query side."""
+    return F.explode(
+        F.transform(
+            F.slice(
+                ranked_centroids(as_double(F.col(qvec_col)), cents),
+                1,
+                n_probe,
+            ),
+            lambda s: s.getField("cluster_id"),
+        )
+    ).alias("cluster_id")
 
 
 def ivfpq_topk(
@@ -1021,14 +1023,14 @@ def ivfpq_topk(
     the pieces above and fully relational:
 
     1. coarse: corpus inverted by nearest IVF centroid; each query
-       probes its ``n_probe`` nearest lists (constant-folded literal
-       centroids — no shuffle on the query side).
-    2. fine: probed candidates are scored by PQ ADC — 1-byte codes
-       join broadcast distance tables; the corpus's raw vectors never
-       enter the candidate join.
+       probes its ``n_probe`` nearest lists (``_probe_lists``, the
+       probe ``ivf_topk`` uses).
+    2. fine: probed candidates are scored by PQ ADC (``pq_topk_adc``)
+       — 1-byte codes join broadcast distance tables; the corpus's
+       raw vectors never enter the candidate join.
     3. rerank: the per-query ADC ``shortlist`` joins BACK to the raw
-       vectors for exact cosine, and the final top-k is exact over
-       that shortlist (PQ's coarse-ranker contract — see pq_topk_adc).
+       vectors for exact cosine (``rerank_topk``), and the final top-k
+       is exact over that shortlist (PQ's coarse-ranker contract).
 
     At 100 TB: lists bucket-prune the scan, candidates travel as
     (id, m bytes), only ``shortlist`` rows per query ever touch raw
@@ -1057,11 +1059,7 @@ def ivfpq_topk(
     fp = index_store.fingerprint(corpus)
     corpus = ensure_min_parallelism(corpus).localCheckpoint(eager=False)
     cents = _ivf_centroids(fp, corpus, vec_col, dim, n_clusters, n_iter, seed)
-    books = _pq_codebooks(fp, corpus, vec_col, dim, m, k_codes, n_iter, seed)
-    # NB the ADC stages below intentionally mirror pq_topk_adc's
-    # machinery (distance-table build, posexplode+join+sum) rather
-    # than calling it: this path interleaves the coarse probe join.
-    # Keep the two in sync — tests pin both, but edits must visit both.
+    books = pq_codebooks(fp, corpus, vec_col, dim, m, k_codes, n_iter, seed)
     coded = index_store.get_or_train(
         "ivfpq_coded",
         fp,
@@ -1073,77 +1071,17 @@ def ivfpq_topk(
         .select(id_col, "cluster_id", "pq_codes", vec_col)
         .localCheckpoint(eager=False),
     )
-
-    qd = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(
-            _as_double(F.col(qvec_col)), c, lambda x, cc: (x - cc) * (x - cc)
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    scored_cents = F.transform(
-        F.expr(_centroids_sql(cents)),
-        lambda s: F.struct(
-            qd(s.getField("centroid")).alias("qd"),
-            s.getField("cluster_id").alias("cluster_id"),
-        ),
-    )
-    probed = F.transform(
-        F.slice(F.array_sort(scored_cents), 1, n_probe),
-        lambda s: s.getField("cluster_id"),
-    )
-    probes = queries.select(
-        qid_col, qvec_col, F.explode(probed).alias("cluster_id")
-    )
+    probes = queries.select(qid_col, _probe_lists(qvec_col, cents, n_probe))
     cand = coded.select(id_col, "cluster_id", "pq_codes").join(
-        F.broadcast(probes.select(qid_col, "cluster_id")), "cluster_id"
+        F.broadcast(probes), "cluster_id"
     )
-
-    d_sub = dim // m
-    book_rows = [
-        (j, int(code), sub)
-        for j, book in enumerate(books)
-        for code, sub in book
-    ]
-    books_df = corpus.sparkSession.createDataFrame(
-        book_rows, "j int, code int, sub array<double>"
-    )
-    qsub = F.slice(_as_double(F.col(qvec_col)), F.col("j") * d_sub + 1, d_sub)
-    tables = queries.crossJoin(F.broadcast(books_df)).select(
-        qid_col,
-        "j",
-        "code",
-        F.aggregate(
-            F.zip_with(qsub, F.col("sub"), lambda x, c: (x - c) * (x - c)),
-            F.lit(0.0),
-            lambda a, v: a + v,
-        ).alias("d2"),
-    )
-    adc = (
-        cand.select(qid_col, id_col, F.posexplode("pq_codes").alias("j", "code"))
-        .join(F.broadcast(tables), [qid_col, "j", "code"])
-        .groupBy(qid_col, id_col)
-        .agg(F.sum("d2").alias("adc_d2"))
-    )
-    short = grouped_topk(
-        adc, [qid_col], [F.asc("adc_d2"), F.asc(id_col)], shortlist
+    short = pq_topk_adc(
+        cand, queries, books, id_col, qid_col, qvec_col, k=shortlist
     ).select(qid_col, id_col)
-
     # exact rerank reads raw vectors from the resident index frame —
     # the source table is not rescanned at serve time
-    rerank = (
-        short.join(coded.select(id_col, vec_col), id_col)
-        .join(F.broadcast(queries), qid_col)
-        .select(
-            qid_col,
-            id_col,
-            cosine(
-                _as_double(F.col(qvec_col)), _as_double(F.col(vec_col))
-            ).alias("cos_sim"),
-        )
-    )
-    return grouped_topk(
-        rerank, [qid_col], [F.desc("cos_sim"), F.asc(id_col)], k
+    return rerank_topk(
+        short, coded, queries, id_col, vec_col, qid_col, qvec_col, k
     )
 
 
@@ -1206,44 +1144,23 @@ def ivf_topk(
     corpus = ensure_min_parallelism(corpus).localCheckpoint(eager=False)
     cents = _ivf_centroids(fp, corpus, vec_col, dim, n_clusters, n_iter, seed)
     inverted = assign_to_centroid(corpus, cents, vec_col)
-
-    qd = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(
-            _as_double(F.col(qvec_col)),
-            c,
-            lambda x, cc: (x - cc) * (x - cc),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    scored_cents = F.transform(
-        F.expr(_centroids_sql(cents)),
-        lambda s: F.struct(
-            qd(s.getField("centroid")).alias("qd"),
-            s.getField("cluster_id").alias("cluster_id"),
-        ),
-    )
-    probed = F.transform(
-        F.slice(F.array_sort(scored_cents), 1, n_probe),
-        lambda s: s.getField("cluster_id"),
-    )
     probes = queries.select(
         qid_col,
         qvec_col,
         # query norm once per query row, not once per probed candidate
         # (r13 optimization; same device as brute_force_topk)
-        l2_norm(_as_double(F.col(qvec_col))).alias("__qn"),
-        F.explode(probed).alias("cluster_id"),
+        l2_norm(as_double(F.col(qvec_col))).alias("__qn"),
+        _probe_lists(qvec_col, cents, n_probe),
     )
     # corpus-side norm once per inverted row, before the probe join
     cand = inverted.withColumn(
-        "__cn", l2_norm(_as_double(F.col(vec_col)))
+        "__cn", l2_norm(as_double(F.col(vec_col)))
     ).join(F.broadcast(probes), "cluster_id")
     scored = cand.select(
         F.col(qid_col),
         F.col(id_col),
         (
-            dot(_as_double(F.col(qvec_col)), _as_double(F.col(vec_col)))
+            dot(as_double(F.col(qvec_col)), as_double(F.col(vec_col)))
             / (F.col("__qn") * F.col("__cn"))
         ).alias("cos_sim"),
     )
@@ -1277,26 +1194,10 @@ def embedding_neardup_lsh_pairs(
     where EXACTLY-parallel planted copies collide in EVERY table
     (positive scaling preserves every sign bit) — recall 1.0 by
     construction, not by luck."""
-    spark = corpus.sparkSession
-    corpus = ensure_min_parallelism(corpus)
-    planes_rows = [
-        (t, _hyperplanes(dim, n_bits, seed + 1000 * t))
-        for t in range(n_tables)
-    ]
-    planes_df = spark.createDataFrame(
-        planes_rows, "tab int, planes array<array<double>>"
+    planes_df = _hyperplane_tables(
+        corpus.sparkSession, dim, n_bits, n_tables, seed
     )
-
-    def bucket_for(vec: Column) -> Column:
-        bits = F.transform(
-            F.col("planes"),
-            lambda p: F.when(
-                dot(vec, p) >= 0, F.lit(1).cast("long")
-            ).otherwise(F.lit(0).cast("long")),
-        )
-        return F.aggregate(
-            bits, F.lit(0).cast("long"), lambda acc, b: acc * 2 + b
-        )
+    corpus = ensure_min_parallelism(corpus)
 
     hashed = (
         corpus.crossJoin(F.broadcast(planes_df))
@@ -1304,7 +1205,7 @@ def embedding_neardup_lsh_pairs(
             F.col(id_col),
             F.col(vec_col),
             F.col("tab"),
-            bucket_for(_as_double(F.col(vec_col))).alias("bucket"),
+            _rhp_bucket(as_double(F.col(vec_col))).alias("bucket"),
         )
         # materialized once: the self-join would recompute the
         # hyperplane projections per side (same device as the minhash
@@ -1331,7 +1232,7 @@ def embedding_neardup_lsh_pairs(
         cand.select(
             "id_a",
             "id_b",
-            cosine(_as_double(F.col("__va")), _as_double(F.col("__vb"))).alias(
+            cosine(as_double(F.col("__va")), as_double(F.col("__vb"))).alias(
                 "cos_sim"
             ),
         )

@@ -473,17 +473,3 @@ def extract_skills_udf(
     """U2/U3 assembled: df + sorted distinct skills array column."""
     udf = make_skills_udf(spark, phrases, text_phrases)
     return df.withColumn(out_col, udf(F.col(text_col)))
-
-
-def skill_counts(df: DataFrame, skills_col: str = "skills",
-                 group_cols: tuple[str, ...] = ("job_type",)) -> DataFrame:
-    """The flagship consumer query (SURVEY §2.6): explode(skills) ->
-    groupBy(skill, *group_cols) -> count. Partial aggregation
-    (map-side combine) keeps the shuffle small: the shuffled rows are
-    (skill, group, partial_count), bounded by |dictionary| x |groups|
-    per partition regardless of input size."""
-    return (
-        df.select(*group_cols, F.explode(F.col(skills_col)).alias("skill"))
-        .groupBy("skill", *group_cols)
-        .agg(F.count(F.lit(1)).alias("n"))
-    )

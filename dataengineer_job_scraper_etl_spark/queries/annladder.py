@@ -162,6 +162,7 @@ def ann_dim_truncation_tradeoff(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.functions.vector_math import (
+        as_double,
         cosine,
     )
     from dataengineer_job_scraper_etl_spark.operators.topk import (
@@ -169,8 +170,8 @@ def ann_dim_truncation_tradeoff(
     )
 
     e, q = _vectors(spark, sf_dir)
-    qe = F.transform(F.col("qe"), lambda x: x.cast("double"))
-    ee = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    qe = as_double(F.col("qe"))
+    ee = as_double(F.col("embedding"))
     # one projection per corpus row: all ladder rungs as columns...
     scored = (
         F.broadcast(q)

@@ -23,10 +23,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.vector_math import (
+    as_double,
+    sq_dist,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.operators.similarity import (
-    _as_double,
-    _sq_dist,
     assign_to_centroid,
     kmeans_corpus_init,
     semdedup_survivors,
@@ -150,7 +152,7 @@ def vec_kmeans_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdf = F.broadcast(
         spark.createDataFrame(cents, "cluster_id int, centroid array<double>")
     )
-    d2 = _sq_dist(_as_double(F.col("embedding")), F.col("centroid"))
+    d2 = sq_dist(as_double(F.col("embedding")), F.col("centroid"))
     return (
         assigned.join(cdf, on="cluster_id")
         .select("cluster_id", F.sqrt(d2).alias("dist"))
@@ -449,7 +451,7 @@ def vec_centroid_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = F.lit(1000000.0)
     dq = F.floor(
-        F.sqrt(_sq_dist(_as_double(F.col("embedding")), F.col("centroid")))
+        F.sqrt(sq_dist(as_double(F.col("embedding")), F.col("centroid")))
         * q
         + F.lit(0.5)
     ) / q

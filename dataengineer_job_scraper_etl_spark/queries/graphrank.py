@@ -118,6 +118,7 @@ def vec_knn_pagerank_centrality(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.functions.vector_math import (
+        as_double,
         dot,
         l2_norm,
     )
@@ -129,7 +130,7 @@ def vec_knn_pagerank_centrality(
     emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") < N_NODES
     )
-    ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    ed = as_double(F.col("embedding"))
     # r13 optimization (guide §2.5/§1.2): (1) fan the node slice out to
     # all cores BEFORE the quadratic pair stage — the slice scans as
     # ONE parquet partition, which pinned the whole N^2 cosine stage to
@@ -354,13 +355,12 @@ def _ivf_pagerank_frame(
     shared by the probe-4 entry (the honest-finding configuration)
     and the probe-7 production-remedy entry (DEEP_PROBES)."""
     from dataengineer_job_scraper_etl_spark.functions.vector_math import (
+        as_double,
         dot,
         l2_norm,
+        ranked_centroids,
     )
     from dataengineer_job_scraper_etl_spark.operators.similarity import (
-        _as_double,
-        _centroids_sql,
-        _sq_dist,
         assign_to_centroid,
         kmeans_corpus_init,
     )
@@ -384,20 +384,10 @@ def _ivf_pagerank_frame(
     # top-P probe lists per node: argsort over the literal centroid
     # set (per-row, no shuffle — the assign_to_centroid machinery,
     # keeping the first P instead of the first 1)
-    scored_cents = F.transform(
-        F.expr(_centroids_sql(cents)),
-        lambda s: F.struct(
-            _sq_dist(
-                _as_double(F.col("embedding")), s.getField("centroid")
-            ).alias("d2"),
-            s.getField("cluster_id").alias("cluster_id"),
-        ),
-    )
+    ranked = ranked_centroids(as_double(F.col("embedding")), cents)
     probe_lists = emb.select(
         F.col("vec_id").alias("src"),
-        F.explode(
-            F.slice(F.array_sort(scored_cents), 1, probes)
-        ).alias("p"),
+        F.explode(F.slice(ranked, 1, probes)).alias("p"),
     ).select("src", F.col("p.cluster_id").alias("cid"))
 
     # Per-node norms precomputed BEFORE the candidate join (r13
@@ -410,12 +400,12 @@ def _ivf_pagerank_frame(
         F.col("vec_id").alias("dst"),
         F.col("cluster_id").alias("cid"),
         F.col("embedding").alias("de"),
-        l2_norm(_as_double(F.col("embedding"))).alias("dn"),
+        l2_norm(as_double(F.col("embedding"))).alias("dn"),
     )
     src_vecs = emb.select(
         F.col("vec_id").alias("src"),
         F.col("embedding").alias("se"),
-        l2_norm(_as_double(F.col("embedding"))).alias("sn"),
+        l2_norm(as_double(F.col("embedding"))).alias("sn"),
     )
     cand = (
         probe_lists.join(assigned, "cid")
@@ -425,7 +415,7 @@ def _ivf_pagerank_frame(
             "src",
             "dst",
             F.round(
-                dot(_as_double(F.col("se")), _as_double(F.col("de")))
+                dot(as_double(F.col("se")), as_double(F.col("de")))
                 / (F.col("sn") * F.col("dn"))
                 * 1e6,
                 0,

@@ -229,6 +229,7 @@ def vec_knn_clustering_coefficient(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.functions.vector_math import (
+        as_double,
         dot,
         l2_norm,
     )
@@ -242,7 +243,7 @@ def vec_knn_clustering_coefficient(
     emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") < N_NODES
     )
-    ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    ed = as_double(F.col("embedding"))
     # Fan out + per-node norm precompute, exactly as in
     # vec_knn_pagerank_centrality (r13 optimization, see the comment
     # there): the 1-partition slice pinned the N^2 cosine stage to one

@@ -275,6 +275,7 @@ def retrieval_mlt_eval_metrics(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from dataengineer_job_scraper_etl_spark.functions.vector_math import (
+        as_double,
         cosine,
     )
     from dataengineer_job_scraper_etl_spark.operators.topk import (
@@ -293,8 +294,8 @@ def retrieval_mlt_eval_metrics(
     q = e.filter(F.col("vec_id") < N_QUERY_DOCS).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
-    qe = F.transform(F.col("qe"), lambda x: x.cast("double"))
-    ee = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    qe = as_double(F.col("qe"))
+    ee = as_double(F.col("embedding"))
     scored = (
         F.broadcast(q)
         .crossJoin(e)

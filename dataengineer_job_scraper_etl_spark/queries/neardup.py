@@ -347,6 +347,7 @@ def _ann_serving_contract(
     cosine top-10 (the deterministic seeded families make the margin
     a fixture constant). Work is bounded by |queries| * k rows."""
     from dataengineer_job_scraper_etl_spark.functions.vector_math import (
+        as_double,
         dot,
         l2_norm,
     )
@@ -355,7 +356,7 @@ def _ann_serving_contract(
     )
 
     e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    vd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    vd = as_double(F.col("embedding"))
     corp = e.select("vec_id", vd.alias("__cv"))
     qv = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), vd.alias("__qv")

@@ -370,7 +370,11 @@ def docs_chunk_sliding_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     @udtf(returnType="doc_id bigint, chunk_no int, chunk string")
     class ChunkDoc:
         def eval(self, doc_id, text):  # noqa: ANN001
-            toks = ws_split_py(text or "")
+            # a NULL text has no chunks (the oracle's string_split is
+            # NULL and unnests to nothing); '' is one empty chunk
+            if text is None:
+                return
+            toks = ws_split_py(text)
             for i, start in enumerate(
                 range(0, len(toks), CHUNK_STRIDE)
             ):

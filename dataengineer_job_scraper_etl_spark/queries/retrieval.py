@@ -37,6 +37,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.vector_math import (
+    as_double,
+    cosine,
+)
 from dataengineer_job_scraper_etl_spark.io import read_parquet
 from dataengineer_job_scraper_etl_spark.queries.text import (
     _BM25_B,
@@ -159,11 +163,10 @@ GROUP BY e.qid
     "recall against it.",
 )
 def ann_recall_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dataengineer_job_scraper_etl_spark.functions.vector_math import cosine
     from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 
     emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    ed = as_double(F.col("embedding"))
     v = emb.select("vec_id", ed.alias("e"))
     cal = v.select(F.explode("e").alias("x")).agg(
         F.expr(f"percentile(abs(x), {SQ8_CLIP_P})").alias("clip")
@@ -300,11 +303,10 @@ ex AS (
     "rankings share it via localCheckpoint.",
 )
 def ann_sq_bits_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dataengineer_job_scraper_etl_spark.functions.vector_math import cosine
     from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 
     emb = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    ed = as_double(F.col("embedding"))
     v = emb.select("vec_id", ed.alias("e"))
     cal = v.select(F.explode("e").alias("x")).agg(
         F.expr(f"percentile(abs(x), {SQ8_CLIP_P})").alias("clip")
@@ -398,7 +400,6 @@ def _ranked_topk(scored: DataFrame, score_col: str, rank_name: str) -> DataFrame
     "fusion for retrieval-backed corpus curation.",
 )
 def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dataengineer_job_scraper_etl_spark.functions.vector_math import cosine
     from dataengineer_job_scraper_etl_spark.operators.ranking import bm25_scores
 
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
@@ -414,8 +415,8 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qe")
     )
-    qe = F.transform(F.col("qe"), lambda x: x.cast("double"))
-    ee = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    qe = as_double(F.col("qe"))
+    ee = as_double(F.col("embedding"))
     vec_scored = (
         emb.filter(F.col("vec_id") != QUERY_VEC_ID)
         .crossJoin(F.broadcast(qv))

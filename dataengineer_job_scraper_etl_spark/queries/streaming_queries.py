@@ -589,7 +589,11 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_corpus_init,
         normalize_assigned,
     )
-    from dataengineer_job_scraper_etl_spark.functions.vector_math import l2_norm
+    from dataengineer_job_scraper_etl_spark.functions.vector_math import (
+        as_double,
+        dot,
+        l2_norm,
+    )
     from dataengineer_job_scraper_etl_spark.queries.clustering import (
         DIM,
         N_CLUSTERS,
@@ -618,7 +622,7 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
     )
-    vd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    vd = as_double(F.col("embedding"))
     # Inline normalization on the STREAM side (no checkpoint boundary
     # in a streaming plan): the loop-invariant norm fold re-evaluates
     # per element — O(dim^2) flops per incoming row, which is noise
@@ -627,8 +631,6 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = assign_to_centroid(stream, cents, "embedding").select(
         "vec_id", "cluster_id", nv.alias("b_nv")
     )
-    from dataengineer_job_scraper_etl_spark.functions.vector_math import dot
-
     classified = (
         assigned.join(F.broadcast(index), on="cluster_id", how="left")
         .withColumn(

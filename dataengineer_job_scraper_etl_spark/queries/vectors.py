@@ -14,7 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
-from dataengineer_job_scraper_etl_spark.functions.vector_math import (  # noqa: F401
+from dataengineer_job_scraper_etl_spark.functions.vector_math import (
+    as_double,
     cosine,
     dot,
     l2_norm,
@@ -56,16 +57,11 @@ def vec_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Cast float arrays to double BEFORE the arithmetic so both engines
     # accumulate in float64 (DuckDB list_cosine_similarity promotes).
-    qe = F.transform(F.col("qe"), lambda x: x.cast("double"))
-    ee = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    qe = as_double(F.col("qe"))
+    ee = as_double(F.col("embedding"))
     # Per-side norms hoisted out of the pair loop (r13 optimization,
     # the graphrank device): dot/(qn*en) is the bit-identical cosine
     # with each norm folded once per row instead of once per pair.
-    from dataengineer_job_scraper_etl_spark.functions.vector_math import (
-        dot,
-        l2_norm,
-    )
-
     q2 = q.withColumn("__qn", l2_norm(qe))
     e2 = e.withColumn("__en", l2_norm(ee))
     scored = (
@@ -103,7 +99,7 @@ FROM per_dim GROUP BY label
 )
 def vec_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    ed = as_double(F.col("embedding"))
     # posexplode -> per-(label, dim) partial means: fully distributed,
     # no per-group vector materialization (collect_list would hold all
     # group vectors in one aggregation buffer — wrong shape at scale).
@@ -144,8 +140,8 @@ def vec_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = e.select(
         F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb")
     )
-    ea = F.transform(F.col("ea"), lambda x: x.cast("double"))
-    eb = F.transform(F.col("eb"), lambda x: x.cast("double"))
+    ea = as_double(F.col("ea"))
+    eb = as_double(F.col("eb"))
     sim = cosine(ea, eb)
     return (
         a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
@@ -182,7 +178,7 @@ def vec_quantize_int8_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") < 500
     )
-    ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    ed = as_double(F.col("embedding"))
     maxabs = F.array_max(F.transform(ed, lambda x: F.abs(x)))
     df = e.select("vec_id", ed.alias("e"), maxabs.alias("maxabs")).filter(
         F.col("maxabs") > 0
@@ -237,7 +233,7 @@ def vec_quantize_int8_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") < 500
     )
-    ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    ed = as_double(F.col("embedding"))
     v = e.select("vec_id", ed.alias("e"))
     cal = v.select(F.explode("e").alias("x")).agg(
         F.expr("percentile(abs(x), 0.999)").alias("clip")

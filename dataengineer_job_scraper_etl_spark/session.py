@@ -119,14 +119,10 @@ def codegen_compiles(spark: SparkSession) -> int:
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
-def ensure_min_parallelism(
-    df,
-    min_partitions: int | None = None,
-    bytes_per_partition: int | None = None,
-):
-    """Round-robin repartition ``df`` up to ``min_partitions`` (default:
-    the cluster's defaultParallelism) IF it currently has fewer
-    partitions; no-op otherwise.
+def ensure_min_parallelism(df, bytes_per_partition: int | None = None):
+    """Round-robin repartition ``df`` up to the cluster's
+    defaultParallelism IF it currently has fewer partitions; no-op
+    otherwise.
 
     Why: a small parquet file (one row group) scans as 1-2 partitions,
     so a CPU-heavy downstream projection (minhash signatures, simhash
@@ -155,11 +151,7 @@ def ensure_min_parallelism(
     stage needs), before the expensive expressions, so the heavy
     compute lands after the exchange.
     """
-    target = (
-        min_partitions
-        if min_partitions is not None
-        else df.sparkSession.sparkContext.defaultParallelism
-    )
+    target = df.sparkSession.sparkContext.defaultParallelism
     if bytes_per_partition is not None and bytes_per_partition > 0:
         raw = (
             df._jdf.queryExecution()  # noqa: SLF001 - no public stats API

@@ -7,7 +7,9 @@ code paths as local[32]/cluster, just fewer tasks.
 
 from __future__ import annotations
 
+import ast
 import os
+import pathlib
 import sys
 
 import pytest
@@ -36,3 +38,36 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def package_sites():
+    """``package_sites(visit)``: the (module, enclosing function) of
+    every AST node in the package for which ``visit(node)`` is true —
+    the walker behind the one-home guards."""
+    import dataengineer_job_scraper_etl_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+
+    def sites(visit) -> set[tuple[str, str]]:
+        found = set()
+        for path in sorted(root.rglob("*.py")):
+            rel = path.relative_to(root).as_posix()
+
+            class Finder(ast.NodeVisitor):
+                scope = "<module>"
+
+                def visit_FunctionDef(self, node):
+                    outer, self.scope = self.scope, node.name
+                    self.generic_visit(node)
+                    self.scope = outer
+
+                def generic_visit(self, node):
+                    if visit(node):
+                        found.add((rel, self.scope))
+                    super().generic_visit(node)
+
+            Finder().visit(ast.parse(path.read_text(encoding="utf-8")))
+        return found
+
+    return sites

@@ -143,6 +143,35 @@ def test_chunking_covers_every_token_with_overlap(spark, sf_dir):
         )
 
 
+def test_chunking_udtf_matches_oracle_on_null_and_empty_text(spark, tmp_path):
+    """A NULL text yields no chunk (DuckDB's string_split is NULL and
+    unnests to nothing); an empty text yields one '' chunk on both
+    engines. The fixtures hold no NULL text, so only this pins it."""
+    import duckdb
+
+    from dataengineer_job_scraper_etl_spark.catalog import all_queries
+    from dataengineer_job_scraper_etl_spark.queries.pipeline_ops import (
+        docs_chunk_sliding_udtf,
+    )
+
+    path = f"{tmp_path}/documents.parquet"
+    con = duckdb.connect()
+    con.execute(
+        "COPY (SELECT * FROM (VALUES (1::BIGINT, NULL::VARCHAR), "
+        "(2, ''), (3, '  two   words ')) AS t(doc_id, text)) "
+        f"TO '{path}' (FORMAT PARQUET)"
+    )
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    oracle = con.execute(
+        all_queries()["docs_chunk_sliding_udtf"].oracle
+    ).fetchall()
+    got = [
+        tuple(r)
+        for r in docs_chunk_sliding_udtf(spark, str(tmp_path)).collect()
+    ]
+    assert sorted(got) == sorted(oracle) == [(2, 0, ""), (3, 0, "two words")]
+
+
 def test_zscore_native_equals_grouped_udf(spark, sf_dir):
     from dataengineer_job_scraper_etl_spark.queries.pipeline_ops import (
         events_user_zscore,

@@ -350,8 +350,10 @@ def test_kmeans_expr_agg_matches_column_api(spark, sf_dir):
     """_kmeans_rounds' F.expr per-dim means must train the identical
     centroid trajectory as the verbatim Column-API aggregate (same
     doubles in, same partial-agg shape, 6-decimal quantization)."""
+    from dataengineer_job_scraper_etl_spark.functions.vector_math import (
+        as_double,
+    )
     from dataengineer_job_scraper_etl_spark.operators.similarity import (
-        _as_double,
         _kmeans_rounds,
         assign_to_centroid,
         kmeans_corpus_init,
@@ -367,7 +369,7 @@ def test_kmeans_expr_agg_matches_column_api(spark, sf_dir):
 
     # verbatim pre-r14 rounds (Column-API wide agg)
     init = (
-        e.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
+        e.select(F.col("vec_id"), as_double(F.col("embedding")).alias("v"))
         .orderBy(F.col("vec_id"))
         .limit(k)
         .collect()
@@ -376,7 +378,7 @@ def test_kmeans_expr_agg_matches_column_api(spark, sf_dir):
     staged = e.localCheckpoint(eager=False)
     for _ in range(2):
         assigned = assign_to_centroid(staged, old_cents, "embedding")
-        vec = _as_double(F.col("embedding"))
+        vec = as_double(F.col("embedding"))
         new = assigned.groupBy("cluster_id").agg(
             *[F.avg(F.element_at(vec, i + 1)).alias(f"m{i}") for i in range(dim)]
         )

@@ -5,6 +5,9 @@ rank > k; kmeans-lite is deterministic.
 
 from __future__ import annotations
 
+import ast
+import re
+
 import numpy as np
 import pytest
 
@@ -446,3 +449,104 @@ def test_ann_serving_contract_flags_each_violation(spark):
     got = flags(shifted, 3)
     assert not got["recall_ok"]
     assert got["order_ok"] and got["scores_exact"] and got["rnk_contiguous"]
+
+
+def test_full_probe_reduces_ivf_paths_to_their_list_free_twins(spark):
+    """Probing every list leaves the shared probe stage nothing to
+    prune: IVF must then rank exactly like brute force, and IVF-PQ
+    exactly like whole-corpus PQ (same codebooks, ADC and rerank)."""
+    from dataengineer_job_scraper_etl_spark.operators.opq import (
+        pq_rerank_topk,
+    )
+    from dataengineer_job_scraper_etl_spark.operators.similarity import (
+        ivfpq_topk,
+    )
+
+    vecs = _clustered_vectors()
+    corpus, queries = _frames(spark, vecs)
+
+    def ranked(df):
+        return sorted((r["qid"], r["vec_id"], r["rnk"]) for r in df.collect())
+
+    assert ranked(
+        ivf_topk(corpus, queries, dim=DIM, k=5, n_clusters=4, n_probe=4)
+    ) == ranked(brute_force_topk(corpus, queries, k=5))
+    pq = dict(dim=DIM, k=5, m=4, k_codes=8, shortlist=25, seed=42)
+    assert ranked(
+        ivfpq_topk(corpus, queries, n_clusters=4, n_probe=4, **pq)
+    ) == ranked(pq_rerank_topk(corpus, queries, **pq))
+
+
+def _is_sq_diff_zip(n) -> bool:
+    """``zip_with(a, b, lambda x, y: (x - y) * (x - y))``."""
+    if not (
+        isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "zip_with"
+        and len(n.args) == 3
+        and isinstance(n.args[2], ast.Lambda)
+    ):
+        return False
+    body = n.args[2].body
+    return (
+        isinstance(body, ast.BinOp)
+        and isinstance(body.op, ast.Mult)
+        and isinstance(body.left, ast.BinOp)
+        and isinstance(body.left.op, ast.Sub)
+        and ast.dump(body.left) == ast.dump(body.right)
+    )
+
+
+def _is_double_cast_transform(n) -> bool:
+    """``transform(col, lambda x: x.cast("double"))``."""
+    if not (
+        isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "transform"
+        and len(n.args) == 2
+        and isinstance(n.args[1], ast.Lambda)
+    ):
+        return False
+    body = n.args[1].body
+    return (
+        isinstance(body, ast.Call)
+        and isinstance(body.func, ast.Attribute)
+        and body.func.attr == "cast"
+        and isinstance(body.func.value, ast.Name)
+        and body.func.value.id == n.args[1].args.args[0].arg
+        and [getattr(a, "value", None) for a in body.args] == ["double"]
+    )
+
+
+def _is_literal_centroids(n) -> bool:
+    """A SQL literal of (cluster_id, centroid) structs."""
+    return (
+        isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and re.search(r"'cluster_id'.*'centroid'", n.value) is not None
+    )
+
+
+@pytest.mark.parametrize(
+    "spelling",
+    [_is_sq_diff_zip, _is_double_cast_transform, _is_literal_centroids],
+    ids=["sq_diff_zip", "double_cast", "literal_centroids"],
+)
+def test_vector_math_is_spelled_only_in_vector_math(package_sites, spelling):
+    """No package source outside functions/vector_math.py spells these;
+    every site calls as_double / sq_dist / ranked_centroids."""
+    found = {
+        s for s in package_sites(spelling)
+        if s[0] != "functions/vector_math.py"
+    }
+    assert found == set()
+
+
+def test_no_module_imports_private_similarity_names(package_sites):
+    """The ANN stages other modules compose are public; the operator's
+    underscore names stay its own."""
+    assert package_sites(
+        lambda n: isinstance(n, ast.ImportFrom)
+        and (n.module or "").endswith("operators.similarity")
+        and any(a.name.startswith("_") for a in n.names)
+    ) == set()

@@ -3,13 +3,11 @@
 from __future__ import annotations
 
 import ast
-import pathlib
 import re
 
 import duckdb
 from pyspark.sql import functions as F
 
-import dataengineer_job_scraper_etl_spark as pkg
 from dataengineer_job_scraper_etl_spark.functions.strings import (
     ddmmyyyy,
     jobid_from_urn,
@@ -158,35 +156,10 @@ _WS_RUN_ALLOWED = {
 _WS_RUN_RE = re.compile(r"\\s\+|\[\\s[^\]]*\]\+")
 
 
-def _package_sites(visit) -> set[tuple[str, str]]:
-    """(module, enclosing function) of every AST node in the package
-    for which ``visit(node)`` is true."""
-    root = pathlib.Path(pkg.__file__).parent
-    found = set()
-    for path in sorted(root.rglob("*.py")):
-        rel = path.relative_to(root).as_posix()
-
-        class Finder(ast.NodeVisitor):
-            scope = "<module>"
-
-            def visit_FunctionDef(self, node):
-                outer, self.scope = self.scope, node.name
-                self.generic_visit(node)
-                self.scope = outer
-
-            def generic_visit(self, node):
-                if visit(node):
-                    found.add((rel, self.scope))
-                super().generic_visit(node)
-
-        Finder().visit(ast.parse(path.read_text(encoding="utf-8")))
-    return found
-
-
-def test_whitespace_is_spelled_only_in_strings_module():
+def test_whitespace_is_spelled_only_in_strings_module(package_sites):
     """No whitespace-run regex (Spark, SQL or Python) outside
     functions/strings.py, except the named allowlist."""
-    found = _package_sites(
+    found = package_sites(
         lambda n: isinstance(n, ast.Constant)
         and isinstance(n.value, str)
         and bool(_WS_RUN_RE.search(n.value))
@@ -195,7 +168,7 @@ def test_whitespace_is_spelled_only_in_strings_module():
     assert found == set(_WS_RUN_ALLOWED)
 
 
-def test_generate_barrier_is_spelled_only_in_its_helper():
+def test_generate_barrier_is_spelled_only_in_its_helper(package_sites):
     """A single-element ``F.explode(F.array(x))`` appears only in
     session.evaluate_once."""
 
@@ -212,4 +185,4 @@ def test_generate_barrier_is_spelled_only_in_its_helper():
             and not isinstance(n.args[0].args[0], ast.Starred)
         )
 
-    assert _package_sites(is_barrier) == {("session.py", "evaluate_once")}
+    assert package_sites(is_barrier) == {("session.py", "evaluate_once")}
