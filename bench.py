@@ -244,7 +244,7 @@ HEADLINE += [
 HEADLINE += [
     # round-12 additions: the streaming hopping twin (append-mode
     # finalization machinery), the second-order Markov pair (one
-    # full-stream window feeding train+score), and the two-phase
+    # full-stream window feeding train+score), and the grouped top-k
     # topic-balanced quota riding the hashed-TF k-means chain
     "streaming_hopping_window",
     "events_type_markov2_transitions",
@@ -265,7 +265,7 @@ HEADLINE += [
 HEADLINE += [
     # round-13 session-2 additions: the MRL dimension-truncation
     # ladder (one corpus scan, 4 sliced-cosine rungs unpivoted into a
-    # single two-stage top-k) and the graded IR-eval harness (postings
+    # single grouped top-k) and the graded IR-eval harness (postings
     # MLT-BM25 + integer-DCG metrics) — the first nDCG/MRR surface in
     # the catalog
     "ann_dim_truncation_tradeoff",

@@ -22,6 +22,11 @@ from pyspark.sql import functions as F
 
 _WS_RUN_PY = re.compile(r"\s+", re.ASCII)
 
+# Java's ``\s`` spelled out as a regex character-class body, so one
+# pattern string means the same set in Java, RE2 (whose ``\s`` lacks
+# ``\x0B``) and Python ``re`` (whose Unicode ``\s`` adds NBSP).
+WS_CLASS = " \\t\\n\\x0B\\f\\r"
+
 
 def jobid_from_urn(urn: Column) -> Column:
     """C4 — ``data_entity_urn.split(':')[-1]`` (reference main.py:100,

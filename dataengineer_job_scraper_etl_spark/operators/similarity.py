@@ -912,7 +912,7 @@ def pq_topk_adc(
        candidate frame that already carries ``qid_col`` (IVF-PQ's
        probed lists) joins on (qid, subspace, code) instead, so each
        candidate is scored against its own query's tables only.
-    3. two-stage grouped top-k on ascending distance.
+    3. grouped top-k on ascending distance.
 
     At 100 TB the corpus side carries only 1-byte codes through the
     explode, the tables stay broadcast-sized, and the sum is a partial

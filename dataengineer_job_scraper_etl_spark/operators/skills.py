@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dataengineer_job_scraper_etl_spark.functions.strings import (
+    WS_CLASS,
     ws_collapse,
     ws_collapse_py,
     ws_collapse_sql,
@@ -148,11 +149,12 @@ def text_phrases_from_patterns(patterns: list[dict]) -> list[str]:
 # the TEXT pattern "C" does not fire inside "C++"/"C#". The regex uses
 # only alternation + character classes — no lookaround — so the SAME
 # pattern string runs identically on Java regex (Spark rlike), RE2
-# (DuckDB regexp_matches), and Python re (the UDF variant).
+# (DuckDB regexp_matches), and Python re (the UDF variant). Whitespace
+# is strings.WS_CLASS, never ``\s``: RE2's ``\s`` lacks ``\x0B``.
 # ---------------------------------------------------------------------
 
-TEXT_LEFT_BOUND = "(^|[\\s\"'\\(\\[\\{<,;:!\\?])"
-TEXT_RIGHT_BOUND = "($|[\\s\"'\\)\\]\\}>,\\.;:!\\?])"
+TEXT_LEFT_BOUND = "(^|[" + WS_CLASS + "\"'\\(\\[\\{<,;:!\\?])"
+TEXT_RIGHT_BOUND = "($|[" + WS_CLASS + "\"'\\)\\]\\}>,\\.;:!\\?])"
 
 
 def _escape_regex_token(tok: str) -> str:
@@ -167,7 +169,8 @@ def _escape_regex_token(tok: str) -> str:
 def text_pattern_regex(phrase: str) -> str:
     """Search regex (no anchors beyond the boundary groups) for one
     case-sensitive TEXT phrase; engine-portable (see block comment)."""
-    body = "(?:\\s+)".join(_escape_regex_token(t) for t in phrase.split(" "))
+    gap = "(?:[" + WS_CLASS + "]+)"
+    body = gap.join(_escape_regex_token(t) for t in phrase.split(" "))
     return TEXT_LEFT_BOUND + body + TEXT_RIGHT_BOUND
 
 
@@ -419,13 +422,13 @@ class _TokenTrie:
 class _TextRegexMatcher:
     """Case-sensitive TEXT-stratum matcher for the Python path: the
     SAME engine-portable pattern strings as the Spark/DuckDB channels,
-    compiled once per worker (``re.ASCII``: Java's ``\\s``, not NBSP)."""
+    compiled once per worker."""
 
     __slots__ = ("compiled",)
 
     def __init__(self, text_phrases: list[str]):
         self.compiled = [
-            (re.compile(text_pattern_regex(p), re.ASCII), p.lower())
+            (re.compile(text_pattern_regex(p)), p.lower())
             for p in text_phrases
         ]
 

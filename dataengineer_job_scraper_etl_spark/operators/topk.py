@@ -1,22 +1,18 @@
-"""Skew-free grouped top-k.
+"""Grouped top-k: the one home for "top-k rows per group".
 
-A single ``row_number() OVER (PARTITION BY group)`` filter is correct
-but funnels the ENTIRE input through one task per group — with a
-handful of groups (e.g. 5 query ids ranking a whole corpus) that is a
-single-task sort of everything at scale.
+One ``row_number() OVER (PARTITION BY group ORDER BY ...)`` window with
+a ``<= k`` filter. Catalyst's ``InferWindowGroupLimit`` rule (Spark 3.5+)
+turns that shape into a distributed top-k on its own: a **Partial**
+``WindowGroupLimit`` prunes each input partition to its top-k per group
+BELOW the ``hashpartitioning(group)`` exchange, and a **Final** one
+above it ranks the survivors — per-partition prune, then merge. So the
+shuffle carries at most ``input_partitions x k`` rows per group, not
+the whole group.
 
-``grouped_topk`` runs the classic two-stage refinement instead:
-
-1. stage 1 ranks within (group, spark_partition_id()) — parallelism is
-   the full partition count, and any member of the global top-k is by
-   definition in the top-k of whatever partition it lands in, so the
-   pruning loses nothing;
-2. stage 2 ranks the survivors (<= input_partitions x k rows per
-   group, instead of the whole corpus) to produce the exact global
-   rank with a deterministic tiebreak.
-
-Output is identical to the single-window formulation for any dataset
-(same rows, same ranks), so oracle hash checks are unaffected.
+The rule fires when ``k <= spark.sql.optimizer.windowGroupLimitThreshold``
+(default 1000; the largest ``k`` in use is 200, the PQ shortlist). With
+an empty ``group_cols`` Catalyst plans a ``Limit(Sort)`` instead.
+``tests/test_scale_plans.py`` pins the Partial-below-exchange shape.
 """
 
 from __future__ import annotations
@@ -35,16 +31,8 @@ def grouped_topk(
     """Exact top-k rows per group with rank column attached.
 
     ``order_cols`` must define a TOTAL order per group (include a
-    tiebreak) — otherwise ranks are nondeterministic in any top-k
-    formulation, not just this one."""
-    staged = df.withColumn("__pid", F.spark_partition_id())
-    w1 = Window.partitionBy(*group_cols, "__pid").orderBy(*order_cols)
-    survivors = (
-        staged.withColumn("__r1", F.row_number().over(w1))
-        .filter(F.col("__r1") <= k)
-        .drop("__r1", "__pid")
-    )
-    w2 = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return survivors.withColumn(rank_col, F.row_number().over(w2)).filter(
+    tiebreak) — otherwise ranks are nondeterministic."""
+    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
         F.col(rank_col) <= k
     )

@@ -151,7 +151,7 @@ GROUP BY t.dim, t.qid
     "full-dim exact top-10 when serving cosine over only the first "
     "8/16/32/64 dimensions, per query. ONE corpus scan computes every "
     "rung (the per-dim cosines are sliced projections of the same "
-    "broadcast-query cross, unpivoted with stack), then one two-stage "
+    "broadcast-query cross, unpivoted with stack), then one grouped "
     "top-k on (dim, qid) — the corpus is never rescanned per rung and "
     "never shuffled, only (dim, qid, vec_id, sim) rows move. Exact "
     "hash oracle (no floors): truncation is deterministic arithmetic, "

@@ -33,6 +33,7 @@ from dataengineer_job_scraper_etl_spark.operators.similarity import (
     kmeans_corpus_init,
     semdedup_survivors,
 )
+from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 
 DIM = 64
 N_CLUSTERS = 8
@@ -321,8 +322,6 @@ FROM ranked WHERE rn <= {_BALANCED_PER_CLUSTER} GROUP BY cid
     "vec_id) pairs only; id_checksum pins membership.",
 )
 def vec_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     e = read_parquet(spark, f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
@@ -330,13 +329,12 @@ def vec_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, "vec_id", "embedding", DIM, N_CLUSTERS, n_iter=N_ITER
     )
     assigned = assign_to_centroid(e, cents, "embedding")
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.md5(F.col("vec_id").cast("string")), "vec_id"
-    )
     return (
-        assigned.select("cluster_id", "vec_id")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _BALANCED_PER_CLUSTER)
+        grouped_topk(
+            assigned.select("cluster_id", "vec_id"), ["cluster_id"],
+            [F.md5(F.col("vec_id").cast("string")), "vec_id"],
+            _BALANCED_PER_CLUSTER, rank_col="rn",
+        )
         .groupBy("cluster_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_sampled"),
@@ -511,8 +509,6 @@ FROM ranked WHERE rn = 1
     "documented trade as SemDeDup's miss mode.",
 )
 def vec_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from dataengineer_job_scraper_etl_spark.functions.vector_math import dot
     from dataengineer_job_scraper_etl_spark.operators.similarity import (
         normalize_assigned,
@@ -550,12 +546,11 @@ def vec_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("anchor", "neg", sim_q.alias("sim_q"))
         .filter(F.col("sim_q") > F.lit(_TAU_HN))
     )
-    w = Window.partitionBy("anchor").orderBy(
-        F.col("sim_q").desc(), F.col("neg").asc()
-    )
     return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        grouped_topk(
+            pairs, ["anchor"], [F.col("sim_q").desc(), F.col("neg").asc()],
+            1, rank_col="rn",
+        )
         .select(
             F.col("anchor").alias("vec_id"),
             F.col("neg").alias("hard_neg_id"),
@@ -597,8 +592,6 @@ FROM win JOIN tot ON win.cid = tot.cid
     "k-row windows; the corpus shuffles once.",
 )
 def vec_cluster_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     e = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     cents = kmeans_corpus_init(
         e.select("vec_id", "embedding"), "vec_id", "embedding",
@@ -613,12 +606,11 @@ def vec_cluster_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = cl.groupBy("cluster_id").agg(
         F.sum("n").cast("bigint").alias("n_members")
     )
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.col("n").desc(), F.col("label").asc()
-    )
     win = (
-        cl.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        grouped_topk(
+            cl, ["cluster_id"], [F.col("n").desc(), F.col("label").asc()],
+            1, rank_col="rn",
+        )
         .select(
             "cluster_id",
             F.col("label").cast("bigint").alias("majority_label"),

@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 
 from dataengineer_job_scraper_etl_spark.catalog import register
 from dataengineer_job_scraper_etl_spark.io import read_parquet
+from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,12 +223,9 @@ WHERE rn = 1
 )
 def events_latest_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        e.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", "event_type", "ts")
-    )
+    return grouped_topk(
+        e, ["user_id"], [F.desc("ts"), F.desc("event_id")], 1, rank_col="rn"
+    ).select("user_id", "event_id", "event_type", "ts")
 
 
 @register(

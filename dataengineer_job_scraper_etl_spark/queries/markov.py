@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
 from dataengineer_job_scraper_etl_spark.io import read_parquet
+from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 
 _MARKOV_ORACLE = """
 WITH ev AS (
@@ -405,10 +406,10 @@ def events_markov_incremental_update(
         .agg(F.count(F.lit(1)).alias("n"))
     )
     tail = (
-        corpus.withColumn("__rn", F.row_number().over(
-            Window.partitionBy("user_id").orderBy(
-                F.desc("ts"), F.desc("event_id"))))
-        .filter(F.col("__rn") == 1)
+        grouped_topk(
+            corpus, ["user_id"], [F.desc("ts"), F.desc("event_id")], 1,
+            rank_col="__rn",
+        )
         .select("user_id", F.col("event_type").alias("tail_type"))
         .localCheckpoint(eager=False)
     )
@@ -424,8 +425,9 @@ def events_markov_incremental_update(
     )
     # ... plus the boundary pair per user with history on both sides
     first_arriving = (
-        arriving.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        grouped_topk(
+            arriving, ["user_id"], ["ts", "event_id"], 1, rank_col="__rn"
+        )
         .select("user_id", F.col("event_type").alias("next_type"))
     )
     boundary = first_arriving.join(tail, "user_id").select(

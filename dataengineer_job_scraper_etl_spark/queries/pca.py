@@ -32,6 +32,7 @@ from dataengineer_job_scraper_etl_spark.operators.pca import (
     pca_top_component,
     train_top_components,
 )
+from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 
 DIM = 64
 N_ITER = 8
@@ -844,8 +845,6 @@ FROM ranked WHERE rn <= {_GRID_PER_CELL} GROUP BY bin_x, bin_y
     "bounded collects, one window over (cell, id) pairs.",
 )
 def vec_pca_grid_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from dataengineer_job_scraper_etl_spark.operators.pca import (
         pca_top_components,
     )
@@ -871,12 +870,12 @@ def vec_pca_grid_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_expr(ex, "pc1").alias("bin_x"),
         bucket_expr(ey, "pc2").alias("bin_y"),
     )
-    w = Window.partitionBy("bin_x", "bin_y").orderBy(
-        F.md5(F.col("vec_id").cast("string")), "vec_id"
-    )
     return (
-        cells.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _GRID_PER_CELL)
+        grouped_topk(
+            cells, ["bin_x", "bin_y"],
+            [F.md5(F.col("vec_id").cast("string")), "vec_id"],
+            _GRID_PER_CELL, rank_col="rn",
+        )
         .groupBy("bin_x", "bin_y")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_sampled"),

@@ -710,8 +710,8 @@ FROM scored WHERE rnk <= {RETRIEVAL_TOPK}
     "nibble per token — the feature-hashing trick, engine-portable "
     "like the sampling entries) -> L2 normalization (staged once, "
     "nullif zero-guard) -> brute-force cosine top-"
-    f"{RETRIEVAL_TOPK} chunks per query chunk (two-stage grouped "
-    "top-k, no single-task sort; queries broadcast, corpus never "
+    f"{RETRIEVAL_TOPK} chunks per query chunk (grouped top-k pruned "
+    "map-side, no single-task sort; queries broadcast, corpus never "
     "shuffles). The ANN entries swap the last stage for IVF/LSH at "
     "scale; the featurizer slot is where a real embedding model "
     "plugs in (same schema contract as operators/multimodal.py's "

@@ -20,6 +20,7 @@ from dataengineer_job_scraper_etl_spark.functions.strings import (
     ws_tokens_sql,
 )
 from dataengineer_job_scraper_etl_spark.io import read_parquet
+from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 
 
 def hash_split(
@@ -694,12 +695,11 @@ def docs_balanced_eval_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "source", "doc_id"
     )
-    w = Window.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), "doc_id"
-    )
     return (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _BALANCED_N)
+        grouped_topk(
+            d, ["source"], [F.md5(F.col("doc_id").cast("string")), "doc_id"],
+            _BALANCED_N, rank_col="rn",
+        )
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_sampled"),

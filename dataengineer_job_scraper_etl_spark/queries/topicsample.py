@@ -16,39 +16,24 @@ break on doc_id, making membership total-ordered and stable forever.
 
 Built and verified hash-green in round 11, reverted to protect the
 last r6 audit-drain slot (PLANS.md r11 wrap); re-landed per VERDICT
-r11 ask #3 with one upgrade: the quota is taken TWO-PHASE.
-
-Scale shape (the 100 TB story): a single row_number() partitioned by
-topic puts an ENTIRE stratum in one task — with k=4 topics that is a
-quarter of the corpus through one window. Instead the quota runs
-two-phase: (1) row_number over (topic, salt) — salt = a 16-bit md5
-digit window (hex digits 29-32) mod _SALT_S, independent of the rank
-key's digit window — keeps
-per-task frames at |stratum|/S and drops everything past the quota;
-(2) row_number over topic on the survivors, whose per-topic input is
-now <= S * Q rows, a constant. Phase 1 can only discard rows BELOW
-the global quota cut (any global top-Q member is top-Q within its own
-salt bucket, and every row preceding it globally also survives), so
-the composition is EXACTLY the single-window semantics — which is why
-the ORACLE is the plain one-window SQL: the salting is pinned as pure
-physical strategy, the interval-join bucketing device. Production
-sizes S to the stratum/executor-memory ratio; the semantics never
-move.
+r11 ask #3. The quota is one ``grouped_topk`` window over topic, which
+Catalyst prunes map-side (operators/topk.py), so no stratum reaches a
+single task whole.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 from dataengineer_job_scraper_etl_spark.queries.topics import (
     _TOPICS_ORACLE,
     docs_hashtf_kmeans_topics,
 )
 
 _QUOTA = 30  # docs kept per topic
-_SALT_S = 8  # phase-1 fan-out (production: sized to stratum/memory)
 
 _BALANCED_ORACLE = f"""
 WITH assigned AS (
@@ -67,39 +52,18 @@ FROM ranked WHERE rn <= {_QUOTA}
 
 
 def topic_balanced_quota(
-    assigned: DataFrame,
-    quota: int = _QUOTA,
-    salt_buckets: int = _SALT_S,
+    assigned: DataFrame, quota: int = _QUOTA
 ) -> DataFrame:
     """(doc_id, topic) -> the per-topic top-``quota`` rows by the
-    deterministic hash rank, computed two-phase so no window frame is
-    stratum-sized (module docstring proves phase 1 lossless)."""
+    deterministic hash rank (doc_id tiebreak)."""
     rank_key = F.substring(F.md5(F.col("doc_id").cast("string")), 17, 4)
-    # salt from a DIFFERENT digit window (29-32) than the rank key:
-    # correlated salt would defeat the per-bucket quota's coverage
-    salt = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 29, 4),
-            16,
-            10,
-        ).cast("long")
-        % salt_buckets
-    )
-    local = Window.partitionBy("topic", salt).orderBy(rank_key, "doc_id")
-    survivors = (
-        assigned.withColumn("__lrn", F.row_number().over(local))
-        .filter(F.col("__lrn") <= quota)
-        .drop("__lrn")
-    )
-    w = Window.partitionBy("topic").orderBy(rank_key, "doc_id")
-    return (
-        survivors.withColumn("sample_rank", F.row_number().over(w))
-        .filter(F.col("sample_rank") <= quota)
-        .select(
-            "doc_id",
-            F.col("topic").cast("bigint").alias("topic"),
-            F.col("sample_rank").cast("bigint").alias("sample_rank"),
-        )
+    return grouped_topk(
+        assigned, ["topic"], [rank_key, "doc_id"], quota,
+        rank_col="sample_rank",
+    ).select(
+        "doc_id",
+        F.col("topic").cast("bigint").alias("topic"),
+        F.col("sample_rank").cast("bigint").alias("sample_rank"),
     )
 
 
@@ -110,10 +74,8 @@ def topic_balanced_quota(
     "30 docs per hashed-TF k-means topic, filled by deterministic "
     "md5-digit-17-20 rank with doc_id tiebreak — stratum source is "
     "docs_hashtf_kmeans_topics verbatim, the hash window is disjoint "
-    "from every other sampling device, and the quota runs TWO-PHASE "
-    "(salted local top-Q, then top-Q over the <= S*Q survivors) so no "
-    "window frame is stratum-sized; the oracle is the plain "
-    "one-window SQL because phase 1 is provably lossless.",
+    "from every other sampling device, and the quota is one grouped "
+    "top-k window that Catalyst prunes map-side.",
 )
 def docs_topic_balanced_sample(
     spark: SparkSession, sf_dir: str

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
 from dataengineer_job_scraper_etl_spark.io import read_parquet
+from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -229,14 +230,10 @@ WHERE rn <= 3
 )
 def window_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-    )
+    return grouped_topk(
+        o, ["o_custkey"], [F.desc("o_totalprice"), F.asc("o_orderkey")], 3,
+        rank_col="rn",
+    ).select("o_custkey", "o_orderkey", "o_totalprice", "rn")
 
 
 @register(

@@ -74,8 +74,8 @@ def vec_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (dot(qe, ee) / (F.col("__qn") * F.col("__en"))).alias("sim"),
         )
     )
-    # two-stage top-k (operators/topk.py): a plain window over 5 qids
-    # would sort the whole scored corpus in <=5 tasks at scale.
+    # grouped top-k (operators/topk.py): Catalyst prunes each input
+    # partition to its top-k per qid before the qid shuffle.
     from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
 
     return grouped_topk(

@@ -71,3 +71,49 @@ def package_sites():
         return found
 
     return sites
+
+
+@pytest.fixture(scope="session")
+def topk_prune_problems():
+    """``topk_prune_problems(df)``: why ``df``'s executed plan is not a
+    map-side-pruned grouped top-k (empty when it is). Catalyst's
+    ``InferWindowGroupLimit`` must put a Partial ``WindowGroupLimit``
+    below the ``Exchange hashpartitioning`` on its group keys, and a
+    Final one on the same keys above that exchange."""
+    import re
+
+    def depth(line: str) -> int:
+        m = re.search(r"[+:]- ", line)
+        return m.start() if m else -1
+
+    def ancestors(lines: list[str], i: int) -> list[str]:
+        out, cur = [], depth(lines[i])
+        for line in reversed(lines[:i]):
+            if depth(line) < cur:
+                out.append(line)
+                cur = depth(line)
+        return out
+
+    def problems(df) -> list[str]:
+        lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+        partial = [
+            i for i, line in enumerate(lines)
+            if "WindowGroupLimit" in line and line.rstrip().endswith("Partial")
+        ]
+        if not partial:
+            return ["no Partial WindowGroupLimit in the plan"]
+        bad = []
+        for i in partial:
+            keys = re.search(r"WindowGroupLimit \[([^\]]*)\]", lines[i]).group(1)
+            up = ancestors(lines, i)
+            ex = next((j for j, a in enumerate(up) if "Exchange" in a), None)
+            if ex is None or f"Exchange hashpartitioning({keys}, " not in up[ex]:
+                bad.append(f"Partial on [{keys}] is not below its group exchange")
+            elif not any(
+                f"WindowGroupLimit [{keys}]" in a and a.rstrip().endswith("Final")
+                for a in up[ex + 1:]
+            ):
+                bad.append(f"no Final on [{keys}] above its exchange")
+        return bad
+
+    return problems

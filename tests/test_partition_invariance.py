@@ -41,7 +41,7 @@ ENTRIES = [
     "events_value_ks_drift",            # cross-multiplied CDF max
     "events_time_weighted_value",       # window lead + integer TWAP
     # round-12 additions with order-sensitivity risk:
-    "docs_topic_balanced_sample",       # two-phase salted quota rank
+    "docs_topic_balanced_sample",       # per-topic hash-rank quota
     "events_user_markov2_anomaly",      # lag windows + ppm back-off
     # round-13 additions with order-sensitivity risk:
     "neardup_minhash_lsh",              # banding candidates + exact ppm

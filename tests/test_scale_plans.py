@@ -1,5 +1,6 @@
 """Plan-level evidence for the scale mechanics the engine relies on:
-partition pruning (static + dynamic) and AQE skew-join splitting.
+partition pruning (static + dynamic), AQE skew-join splitting and
+map-side grouped top-k.
 
 These don't oracle-check values (the companion queries do); they pin
 that the PHYSICAL plans behave the way the 100 TB design assumes —
@@ -8,6 +9,8 @@ prunes fact partitions at runtime, a hot key actually gets split.
 """
 
 from __future__ import annotations
+
+import ast
 
 import pytest
 from pyspark.sql import functions as F
@@ -111,9 +114,9 @@ def test_catalog_docstring_plan_claims_hold(spark, sf_dir):
         # localCheckpoint, so the copurchase row above is unchanged)
         "events_type_markov2_transitions": (3, 2, 0),
         "events_user_markov2_anomaly": (6, 2, 1),
-        # exactly TWO windows = the two-phase quota signature (a
-        # third would mean a stratum-sized frame snuck back in)
-        "docs_topic_balanced_sample": (3, 2, 0),
+        # ONE window = the grouped_topk quota; its one topic exchange
+        # carries only what the Partial WindowGroupLimit kept
+        "docs_topic_balanced_sample": (1, 1, 0),
         # round-13 additions (same convention). The fingerprint
         # contract is a PURE PROJECTION — zero exchanges is the
         # signature; the verified-pairs entry is banding shuffle +
@@ -137,12 +140,12 @@ def test_catalog_docstring_plan_claims_hold(spark, sf_dir):
         # once behind the localCheckpoint instead of once per consumer
         # branch (pre-fix the visible plan carried 6 windows — the
         # corpus cross re-ran per branch); its joins are all broadcast.
-        # The IR-eval entry's 4 windows are its two grouped_topk pairs
+        # The IR-eval entry's 2 windows are its two grouped_topk calls
         # (system list + dense gold); query-profile/df/stats joins
         # broadcast, so no shuffle join at any scale where a vocabulary
         # broadcasts (the documented MLT shape).
         "ann_dim_truncation_tradeoff": (2, 0, 0),
-        "retrieval_mlt_eval_metrics": (6, 4, 0),
+        "retrieval_mlt_eval_metrics": (4, 2, 0),
         # triangle counting: node-scale keyed joins render as shuffle
         # joins (nodes = corpus docs at real scale, never broadcast;
         # the checkpoints also deny AQE the stats to broadcast the
@@ -217,6 +220,86 @@ def test_generate_barriers_survive_the_optimizer(spark):
     plan2 = tr._jdf.queryExecution().optimizedPlan().toString()
     assert plan2.count("regexp_replace") == 1, fallback + plan2
     assert plan2.count("Generate explode") >= 2, fallback + plan2
+
+
+def test_grouped_topk_prunes_below_the_exchange(
+    spark, sf_dir, topk_prune_problems
+):
+    """``operators/topk.grouped_topk`` is one row_number window and a
+    ``<= k`` filter: the distributed top-k is Catalyst's
+    ``InferWindowGroupLimit``, a Partial WindowGroupLimit that prunes
+    each input partition BELOW the group-key exchange and a Final one
+    above it. A Spark upgrade or config change that drops the rule
+    would ship whole groups through the shuffle with NO correctness
+    signal, so pin the executed plan, including the largest k in use
+    (200, the PQ shortlist) on a multi-partition frame."""
+    from dataengineer_job_scraper_etl_spark.catalog import all_queries
+    from dataengineer_job_scraper_etl_spark.operators.topk import grouped_topk
+
+    fallback = (
+        "grouped top-k is no longer pruned map-side: restore the "
+        "(group, spark_partition_id()) pre-stage in operators/topk.py "
+        "from git history; check InferWindowGroupLimit / "
+        "spark.sql.optimizer.windowGroupLimitThreshold\n"
+    )
+    qs = all_queries()
+    frame = spark.range(0, 4000, numPartitions=8).select(
+        (F.col("id") % 3).alias("g"),
+        "id",
+        (F.col("id") * 7 % 101).alias("s"),
+    )
+    cases = {
+        "vec_cosine_topk": qs["vec_cosine_topk"].spark_fn(spark, sf_dir),
+        "docs_topic_balanced_sample": qs[
+            "docs_topic_balanced_sample"
+        ].spark_fn(spark, sf_dir),
+        "grouped_topk k=200": grouped_topk(
+            frame, ["g"], [F.desc("s"), "id"], 200
+        ),
+    }
+    bad = {n: p for n, df in cases.items() if (p := topk_prune_problems(df))}
+    assert not bad, fallback + str(bad)
+
+
+# F.row_number() sites outside operators/topk.grouped_topk: (module,
+# enclosing function) -> why the site is not a per-group top-k (none
+# filters its rank ``<= k`` within a group).
+_ROW_NUMBER_ALLOWED = {
+    ("operators/similarity.py", "semdedup_centroid_survivors"): "flags "
+    "each component's survivor (rn == 1 -> kept) but keeps every row",
+    ("queries/exsubverify.py", "exact_substring_trim_verified"): "gaps-"
+    "and-islands: cp - row_number() labels covered runs",
+    ("queries/spans.py", "_trim_covered_runs"): "gaps-and-islands run "
+    "labels",
+    ("queries/prf.py", "retrieval_prf_expansion"): "numbers a global "
+    "list already cut by limit()",
+    ("queries/retrieval.py", "_ranked_topk"): "numbers a global list "
+    "already cut by limit()",
+    ("queries/retrieval.py", "retrieval_hybrid_rrf"): "numbers the "
+    "<= 2*DEPTH fused list before its limit()",
+    ("queries/sampling.py", "docs_training_order"): "a position for "
+    "every row of its shard, none dropped",
+}
+
+
+def test_grouped_topk_is_the_one_per_group_topk(package_sites):
+    """Per-group top-k has one home: F.row_number() appears outside
+    operators/topk.grouped_topk only at the named sites, and no ranking
+    leans on spark_partition_id() (the hand-built per-partition
+    pre-stage that Catalyst's WindowGroupLimit replaces)."""
+
+    def calls(attr):
+        return lambda n: (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == attr
+        )
+
+    found = package_sites(calls("row_number"))
+    assert found - {("operators/topk.py", "grouped_topk")} == set(
+        _ROW_NUMBER_ALLOWED
+    )
+    assert package_sites(calls("spark_partition_id")) == set()
 
 
 def test_python_stays_out_of_the_hot_path_catalog_wide(spark, sf_dir):

@@ -15,8 +15,10 @@ from dataengineer_job_scraper_etl_spark.operators.skills import (
     extract_skills_native,
     extract_skills_ngram_join,
     extract_skills_udf,
+    match_text_patterns,
     normalize_text_py,
     phrases_from_patterns,
+    text_matches_oracle_sql,
     text_phrases_from_patterns,
 )
 
@@ -202,6 +204,53 @@ def test_case_sensitive_three_variants_equal(spark):
     assert native["n1"] is None
     for i, (_, expected) in enumerate(CS_CASES):
         assert native[str(i)] == sorted(expected), CS_CASES[i]
+
+
+# Vertical tab is whitespace in Java's \s but not in RE2's; NBSP is
+# whitespace in neither engine.
+WS_TEXT_CASES = [
+    ("uses Power\x0bBI daily", ["power bi"]),
+    ("\x0bPower BI\x0b", ["power bi"]),
+    ("Power\x0b\x0bBI.", ["power bi"]),
+    ("Power BI", ["power bi"]),
+    ("Power\xa0BI", []),
+    ("\xa0Power BI\xa0", []),
+]
+
+
+def test_text_stratum_whitespace_agrees_across_spark_duckdb_python(spark):
+    """The TEXT-stratum regex fires on the same texts in Spark rlike,
+    the DuckDB oracle (RE2) and the Python UDF path: vertical tab
+    between or around the words matches, NBSP does not."""
+    import duckdb
+
+    phrases = ["Power BI"]
+    rows = [(str(i), t) for i, (t, _) in enumerate(WS_TEXT_CASES)]
+    df = spark.createDataFrame(rows, "jobid string, description string")
+    sp = {
+        r["jobid"]: r["s"]
+        for r in df.select(
+            "jobid", match_text_patterns(F.col("description"), phrases).alias("s")
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (jobid VARCHAR, description VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    dd = dict(
+        con.execute(
+            f"SELECT jobid, {text_matches_oracle_sql('description', phrases)} FROM t"
+        ).fetchall()
+    )
+    udf = {
+        r["jobid"]: r["skills"]
+        for r in extract_skills_udf(
+            spark, df, "description", [], text_phrases=phrases
+        ).collect()
+    }
+    want = {str(i): e for i, (_, e) in enumerate(WS_TEXT_CASES)}
+    assert sp == want
+    assert dd == want
+    assert udf == want
 
 
 def test_asset_has_reference_scale_text_stratum():

@@ -149,10 +149,7 @@ def test_trie_matches_native_ngram_on_nbsp_description(spark):
 
 # Whitespace-run regexes outside functions/strings.py: (module,
 # enclosing function) -> why it is not the shared contract.
-_WS_RUN_ALLOWED = {
-    ("operators/skills.py", "text_pattern_regex"): "a phrase-search pattern "
-    "shared verbatim by Spark rlike, RE2 and Python re, not a collapse",
-}
+_WS_RUN_ALLOWED: dict[tuple[str, str], str] = {}
 _WS_RUN_RE = re.compile(r"\\s\+|\[\\s[^\]]*\]\+")
 
 

@@ -1,10 +1,11 @@
 """Topic-balanced sampling (queries/topicsample.py): per-topic quota
-semantics, the two-phase window rewrite's exactness, and composition
-with the hashed-TF k-means stratum source."""
+semantics, the map-side-pruned quota window, and composition with the
+hashed-TF k-means stratum source."""
 
 from __future__ import annotations
 
-from pyspark.sql import Window
+import hashlib
+
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import all_queries
@@ -12,21 +13,6 @@ from dataengineer_job_scraper_etl_spark.queries.topicsample import (
     _QUOTA,
     topic_balanced_quota,
 )
-
-
-def _naive_quota(assigned, quota):
-    """The single-window reference rendering (the oracle's shape)."""
-    rank_key = F.substring(F.md5(F.col("doc_id").cast("string")), 17, 4)
-    w = Window.partitionBy("topic").orderBy(rank_key, "doc_id")
-    return (
-        assigned.withColumn("sample_rank", F.row_number().over(w))
-        .filter(F.col("sample_rank") <= quota)
-        .select(
-            "doc_id",
-            F.col("topic").cast("bigint").alias("topic"),
-            F.col("sample_rank").cast("bigint").alias("sample_rank"),
-        )
-    )
 
 
 def test_per_topic_counts_hit_quota_or_stratum_size(spark, sf_dir):
@@ -69,37 +55,37 @@ def test_sample_rank_is_dense_from_one(spark, sf_dir):
         assert r.hi <= _QUOTA
 
 
-def test_two_phase_equals_single_window_under_skew(spark):
-    """Phase-1 losslessness on a SKEWED planted stratum set: one
-    500-doc topic (each salt bucket well above the quota, so phase 1
-    discards aggressively), one 5-doc topic (below quota — nothing may
-    drop), and salt collisions guaranteed (500 docs over 8 buckets).
-    The two-phase result must equal the naive single-window rendering
-    row for row."""
+def test_quota_under_skew(spark):
+    """A SKEWED planted stratum set: one 500-doc topic (far above the
+    quota) and one 5-doc topic (below it — nothing may drop). Each
+    topic keeps its first ``min(quota, n)`` docs by (md5 digits 17-20,
+    doc_id), ranked densely from 1."""
     assigned = spark.createDataFrame(
         [(i, 0) for i in range(500)] + [(1000 + i, 1) for i in range(5)],
         "doc_id long, topic long",
     )
     got = sorted(
-        (r.doc_id, r.topic, r.sample_rank)
+        (r.topic, r.sample_rank, r.doc_id)
         for r in topic_balanced_quota(assigned).collect()
     )
-    want = sorted(
-        (r.doc_id, r.topic, r.sample_rank)
-        for r in _naive_quota(assigned, _QUOTA).collect()
-    )
-    assert got == want
-    counts = {t: sum(1 for g in got if g[1] == t) for t in (0, 1)}
+    counts = {t: sum(1 for g in got if g[0] == t) for t in (0, 1)}
     assert counts == {0: _QUOTA, 1: 5}
 
+    def key(i):
+        return hashlib.md5(str(i).encode()).hexdigest()[16:20], i
 
-def test_no_stratum_sized_window_frame(spark, sf_dir):
-    """The plan must show BOTH windows partition-keyed (topic+salt,
-    then topic over the quota-bounded survivors) — no empty
-    partitionBy anywhere in the chain."""
+    want = []
+    for t, ids in ((0, range(500)), (1, range(1000, 1005))):
+        ranked = sorted(ids, key=key)[:_QUOTA]
+        want += [(t, r, i) for r, i in enumerate(ranked, start=1)]
+    assert got == sorted(want)
+
+
+def test_quota_is_pruned_below_the_topic_exchange(
+    spark, sf_dir, topk_prune_problems
+):
+    """The quota is one window over topic: Catalyst's Partial
+    WindowGroupLimit keeps each partition's top-quota per topic below
+    the topic exchange, so no stratum reaches one task whole."""
     df = all_queries()["docs_topic_balanced_sample"].spark_fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    for m in re.finditer(r"Window \[[^\]]*\], \[([^\]]*)\]", plan):
-        assert m.group(1).strip(), "unpartitioned window in the plan"
+    assert not topk_prune_problems(df)
