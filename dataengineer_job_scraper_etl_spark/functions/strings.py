@@ -65,6 +65,22 @@ def ws_tokens(col: Column) -> Column:
     return ws_split(F.lower(col))
 
 
+def ngrams(toks: Column, n: int) -> Column:
+    """Positional sliding ``n``-grams of the token array ``toks``, each
+    joined by one space; empty when ``toks`` is NULL or has fewer than
+    ``n`` tokens (``sequence(1, m)`` descends for ``m < 1``).
+
+    Pass a token COLUMN projected in its own select, not a tokenizer
+    expression: Catalyst does no common-subexpression elimination
+    inside lambdas, so an inline tokenizer re-runs once per window."""
+    n_g = F.size(toks) - F.lit(n - 1)
+    win = F.transform(
+        F.sequence(F.lit(1), n_g),
+        lambda i: F.array_join(F.slice(toks, i, n), " "),
+    )
+    return F.when(n_g >= 1, win).otherwise(F.array().cast("array<string>"))
+
+
 def ws_collapse_sql(expr: str) -> str:
     """DuckDB twin of ``ws_collapse`` over the SQL text ``expr``."""
     return f"trim(regexp_replace({expr}, '[\\s\\v]+', ' ', 'g'), ' ')"

@@ -67,10 +67,16 @@ def shingles(text: Column, n: int = 3) -> Column:
     yield an EMPTY array: F.sequence's default step is -1 when
     start > stop, so an unguarded sequence(1, 0) would produce [1, 0]
     and slice() would then throw INVALID_PARAMETER_VALUE.START. The
-    CASE branch is only evaluated when the token count is >= n."""
+    CASE branch is only evaluated when the token count is >= n.
+
+    It keeps its own window form instead of ``strings.ngrams``: on an
+    sf0.1 token column (4 cores, median of 5) the zip below took 0.39 s
+    at the n=3 the sketches use against 0.48 s for transform/slice,
+    while at n=16 it took 1.19 s against 0.49 s, so neither form serves
+    both without slowing one side."""
     toks = ws_tokens(text)
     n_sh = F.size(toks) - F.lit(n - 1)
-    # Windows via zip_with of n SHIFTED SLICES (r13 optimization):
+    # Windows via zip_with of n SHIFTED SLICES:
     # the old transform(sequence(1, n_sh), i -> array_join(slice(toks,
     # i, n))) referenced ``toks`` INSIDE the lambda, and Catalyst does
     # not CSE across lambda boundaries — the whole regexp+split
@@ -145,7 +151,7 @@ def _signature_from_hashes(
     )
     p = F.lit(_MERSENNE_31)
 
-    # r13 optimization (guide §1.2 per-task work): the old step built
+    # Per-task work: the old step built
     # TWO 64-element arrays per shingle (the candidate-hash zip, then
     # the least() zip) and — because lambda bodies are not CSE'd —
     # re-evaluated pmod(x, p) inside the inner lambda once per hash
@@ -338,7 +344,7 @@ def minhash_verified_pairs(
     BIGINT (the catalog's half-up ppm rule; inter/union are exact
     integers so the one IEEE division is engine-identical).
 
-    BANDING IS MATCHED TO THE VERIFY THRESHOLD (r13 sf1 finding): the
+    BANDING IS MATCHED TO THE VERIFY THRESHOLD (an sf1 finding): the
     exact-set contract needs P(banding misses a pair at j >= threshold)
     ~ 0, and the candidate generator's default 16 bands x 4 rows has
     P(find) = 1-(1-j^4)^16 = 0.65 at j=0.5 and 0.988 at j=0.7 — at

@@ -66,6 +66,7 @@ from pyspark.sql import types as T
 
 from dataengineer_job_scraper_etl_spark.functions.strings import (
     WS_CLASS,
+    ngrams,
     ws_collapse,
     ws_collapse_py,
     ws_collapse_sql,
@@ -310,19 +311,11 @@ def skill_match_pairs(
     depunct = F.regexp_replace(F.lower(F.col(text_col)), PUNCT_CLASS, " ")
     toks = ws_split(depunct)
 
-    def grams_of(n: int):
-        n_g = F.size(F.col("__toks")) - F.lit(n - 1)
-        win = F.transform(
-            F.sequence(F.lit(1), n_g),
-            lambda i: F.array_join(F.slice(F.col("__toks"), i, n), " "),
-        )
-        return F.when(n_g >= 1, win).otherwise(
-            F.array().cast(T.ArrayType(T.StringType()))
-        )
-
     grams = df.select(*carry_cols, toks.alias("__toks")).select(
         *carry_cols,
-        F.explode(F.flatten(F.array(*[grams_of(n) for n in lens]))).alias("gram"),
+        F.explode(
+            F.flatten(F.array(*[ngrams(F.col("__toks"), n) for n in lens]))
+        ).alias("gram"),
     )
     joined = grams.join(
         F.broadcast(phrase_df), grams["gram"] == phrase_df["phrase"]

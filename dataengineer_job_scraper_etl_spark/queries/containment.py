@@ -39,8 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
+from dataengineer_job_scraper_etl_spark.functions.strings import ngrams
 from dataengineer_job_scraper_etl_spark.io import read_parquet
-from dataengineer_job_scraper_etl_spark.queries.text import _trigrams
 
 _DOC_BOUND = 150
 _EXCERPT_MOD = 20
@@ -105,7 +105,7 @@ def _containment_frames(spark: SparkSession, sf_dir: str):
     ordered-pair intersection counts the containment family shares."""
     tok = _corpus_with_excerpts(spark, sf_dir)
     sh = (
-        tok.select("doc_id", F.explode(_trigrams(F.col("t"))).alias("shingle"))
+        tok.select("doc_id", F.explode(ngrams(F.col("t"), 3)).alias("shingle"))
         .dropDuplicates(["doc_id", "shingle"])
     )
     rare = (

@@ -821,7 +821,7 @@ def docs_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- decontaminated pipeline composition (round 9) --------------------
+# --- decontaminated pipeline composition -----------------------------
 # The decontamination stage (queries/spans.py::decontaminate_text)
 # composed INTO the pipeline, proven the same way as the stripped
 # variant: the oracle prepends the eval-digest -> covered-runs -> trim
@@ -943,11 +943,11 @@ _P2 = (
 
 def _intake_oracle() -> str:
     from dataengineer_job_scraper_etl_spark.queries.spans import (
-        _PLANT,
-        _PLANT_PRED,
         DECON_SHINGLE,
         EXSUB_MIN_RUN,
         EXSUB_SHINGLE,
+        PLANT,
+        PLANT_PRED,
     )
 
     k = EXSUB_SHINGLE
@@ -955,7 +955,7 @@ def _intake_oracle() -> str:
     return f"""
 WITH raw0 AS (
   SELECT doc_id,
-         CASE WHEN {_PLANT_PRED} THEN text || ' {_PLANT}'
+         CASE WHEN {PLANT_PRED} THEN text || ' {PLANT}'
               ELSE text END AS text
   FROM documents),
 raw AS (
@@ -1159,11 +1159,11 @@ def corpus_pipeline_intake(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_intake,
     )
     from dataengineer_job_scraper_etl_spark.queries.spans import (
-        _planted_docs,
+        planted_docs,
     )
 
     p2pred = (F.col("doc_id") % 37 == 0) | (F.col("doc_id") % 20 == 18)
-    raw = _planted_docs(spark, sf_dir).select(
+    raw = planted_docs(spark, sf_dir).select(
         "doc_id",
         F.when(p2pred, F.concat(F.col("text"), F.lit(" " + _P2)))
         .otherwise(F.col("text"))

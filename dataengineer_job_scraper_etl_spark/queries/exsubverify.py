@@ -1,5 +1,4 @@
-"""ExactSubstr with suffix-array-faithful run verification (VERDICT
-r12 ask #5).
+"""ExactSubstr with suffix-array-faithful run verification.
 
 queries/spans.py's ``exact_substring_trim`` marks positions covered by
 repeated 8-token shingles and deletes maximal covered runs >= 16 — a
@@ -29,13 +28,14 @@ digests ONLY inside candidate runs — the "one extra bounded semi-join
 on run boundaries": the corpus is never re-shingled at width 16,
 because every occurrence of a REPEATED 16-gram provably lies inside
 candidate runs, so counting restricted to them equals the global
-count wherever the count reaches 2. Repeated-16-gram coverage then
-feeds the same gaps-and-islands + array-side trim core
-(spans._trim_covered_runs; resulting runs are >= 16 automatically).
+count wherever the count reaches 2. Both phases are compositions of
+the ExactSubstr stages in queries/spans.py (shingle_digests ->
+covered_positions -> covered_runs), and repeated-16-gram coverage
+feeds the same trim_runs (resulting runs are >= 16 automatically).
 
 The entry emits BOTH removal counts, so the approximation's over-trim
 is visible inside the hash-checked output: the fixture plants (a) the
-true cross-doc duplicate suffix spans._PLANT (removed by BOTH chains,
+true cross-doc duplicate suffix spans.PLANT (removed by BOTH chains,
 identically) and (b) a per-doc composite borrow A_i B_i qx B_i A_i on
 doc_id % 30 == 1 — A_i and B_i are doc-unique 8-token phrases each
 occurring twice WITHIN the doc, so the approximation sees two
@@ -52,7 +52,7 @@ entry.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
@@ -61,7 +61,7 @@ from dataengineer_job_scraper_etl_spark.functions.strings import ws_tokens_sql
 _K = 8        # phase-1 candidate shingle width (== spans.EXSUB_SHINGLE)
 _MIN_RUN = 16  # removal threshold / phase-2 gram width (== EXSUB_MIN_RUN)
 
-# must stay equal to spans._PLANT / spans._PLANT_PRED (asserted in the
+# must stay equal to spans.PLANT / spans.PLANT_PRED (asserted in the
 # entry): the true-duplicate plant shared with docs_exact_substring_*.
 _PLANT = (
     "xqalpha xqbravo xqcedar xqdelta xqember xqfalcon xqgrove xqhollow "
@@ -171,59 +171,26 @@ def exact_substring_trim_verified(
     gaps-and-islands. removed_approx (what the shingle-cover
     approximation WOULD delete) falls out of phase 1 for free."""
     from dataengineer_job_scraper_etl_spark.queries.spans import (
-        _sliding_k_shingles,
-        _trim_covered_runs,
+        covered_positions,
+        covered_runs,
+        repeated_digests,
+        shingle_digests,
         tok_base,
+        trim_runs,
     )
 
     # phase 1, phase 2 and the trim all scan it; fanned out before
     # tokenize (see spans.tok_base)
     base = tok_base(docs, id_col, text_col)
-    # sh feeds the repeat count AND the coverage join (r13
-    # optimization, the exact_substring_trim staging): one shingle
-    # pass instead of two.
-    sh = (
-        base.select(
-            "doc_id",
-            F.posexplode(_sliding_k_shingles(F.col("t"), k)).alias(
-                "pos", "shingle"
-            ),
-        )
-        .select("doc_id", "pos", F.md5(F.col("shingle")).alias("h"))
-        .localCheckpoint(eager=False)
-    )
-    rep = (
-        sh.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("h")
-    )
-    cov = (
-        sh.join(rep, "h")
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.col("pos"), F.col("pos") + k - 1)).alias(
-                "cp"
-            ),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("doc_id").orderBy("cp")
-    isl = cov.withColumn("g", F.col("cp") - F.row_number().over(w))
+    # sh feeds the repeat count AND the coverage join: one shingle pass
+    # instead of two
+    sh = shingle_digests(base, k).localCheckpoint(eager=False)
+    cov = covered_positions(sh.join(repeated_digests(sh), "h"), k)
     # cand feeds approx AND the phase-2 run list — without the
-    # checkpoint each consumer re-ran the whole phase-1 chain
-    # (coverage join + per-doc window) from the sh checkpoint (r13
-    # optimization; the run set is duplicate-density-bounded, tiny).
-    cand = (
-        isl.groupBy("doc_id", "g")
-        .agg(
-            F.min("cp").alias("s"),
-            F.max("cp").alias("e"),
-            F.count(F.lit(1)).alias("len"),
-        )
-        .filter(F.col("len") >= min_run)
-        .localCheckpoint(eager=False)
-    )
+    # checkpoint each consumer re-ran the whole phase-1 chain (coverage
+    # join + per-doc window) from the sh checkpoint; the run set is
+    # duplicate-density-bounded, tiny.
+    cand = covered_runs(cov, min_run).localCheckpoint(eager=False)
     approx = cand.groupBy("doc_id").agg(
         F.sum("len").cast("long").alias("removed_approx")
     )
@@ -239,36 +206,25 @@ def exact_substring_trim_verified(
             "t",
             F.explode(
                 F.sequence(F.col("r.s"), F.col("r.e") - min_run + 1)
-            ).alias("p"),
+            ).alias("pos"),
         )
         .select(
             "doc_id",
-            "p",
+            "pos",
             F.md5(
-                F.array_join(F.slice(F.col("t"), F.col("p") + 1, min_run), " ")
+                F.array_join(
+                    F.slice(F.col("t"), F.col("pos") + 1, min_run), " "
+                )
             ).alias("h"),
         )
         # grams feeds the phase-2 repeat count AND the verified
-        # coverage join — one candidate-gram pass instead of two (r13)
+        # coverage join — one candidate-gram pass instead of two
         .localCheckpoint(eager=False)
     )
-    rep16 = (
-        grams.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("h")
+    cov16 = covered_positions(
+        grams.join(repeated_digests(grams), "h"), min_run
     )
-    cov16 = (
-        grams.join(rep16, "h")
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("p"), F.col("p") + min_run - 1)
-            ).alias("cp"),
-        )
-        .distinct()
-    )
-    out = _trim_covered_runs(base, cov16, min_run)
+    out = trim_runs(base, covered_runs(cov16, min_run))
     return out.join(approx, "doc_id", "left").select(
         "doc_id",
         "n_toks",
@@ -283,8 +239,8 @@ def exact_substring_trim_verified(
 @register(
     "docs_exact_substring_verified",
     _VERIFIED_ORACLE,
-    doc="ExactSubstr with suffix-array-faithful run verification "
-    "(VERDICT r12 ask #5): candidate runs from the 8-shingle cover "
+    doc="ExactSubstr with suffix-array-faithful run verification: "
+    "candidate runs from the 8-shingle cover "
     "are verified via repeated-16-gram coverage — provably equal to "
     "Lee et al.'s 'delete every maximal >= 16-token substring "
     "occurring >= 2 times', with the verify pass bounded to "
@@ -293,7 +249,7 @@ def exact_substring_trim_verified(
     "the driver's evidence: the planted per-doc composite borrow "
     "(A_i B_i qx B_i A_i, doc_id % 30 == 1) shows removed_approx = "
     "32 vs removed_exact = 0, while the true cross-doc duplicate "
-    "suffix (spans._PLANT) is removed identically by both chains. "
+    "suffix (spans.PLANT) is removed identically by both chains. "
     "cleaned_md5 pins the exact-semantics reassembly per doc.",
 )
 def docs_exact_substring_verified(
@@ -303,9 +259,9 @@ def docs_exact_substring_verified(
 
     # the shared-fixture constants must not drift from spans'
     assert _K == _sp.EXSUB_SHINGLE and _MIN_RUN == _sp.EXSUB_MIN_RUN
-    assert _PLANT == _sp._PLANT and _PLANT_PRED == _sp._PLANT_PRED
+    assert _PLANT == _sp.PLANT and _PLANT_PRED == _sp.PLANT_PRED
 
-    d = _sp._planted_docs(spark, sf_dir)
+    d = _sp.planted_docs(spark, sf_dir)
     comp = F.concat_ws(
         " ",
         *[F.concat(F.lit("qa"), F.col("doc_id").cast("string"),

@@ -1,9 +1,31 @@
-"""Global repeated-span (boilerplate) removal — the C4/RefinedWeb
-"repeated line" rule re-expressed for a corpus without line structure
-(reference has no analogue; this is a north-star LLM-pipeline op,
-SURVEY §2.10): spans that appear across a large fraction of documents
-are boilerplate (headers, cookie banners, navigation chrome) and are
-stripped from every document, preserving the order of what remains.
+"""Corpus-wide repeated-text operators (north-star LLM-pipeline ops,
+SURVEY §2.10; the reference has no analogue): C4-style boilerplate-span
+removal, repeated n-gram coverage, and the ExactSubstr family (Lee et
+al. 2022) — self-dedup trim, eval-set decontamination, and incremental
+ingest against a frozen digest index.
+
+The ExactSubstr family composes four public stages over the staged
+token frame ``tok_base`` -> (doc_id, t):
+
+1. ``shingle_digests(base, k)`` -> (doc_id, pos, h): the md5 of every
+   sliding k-token shingle (``strings.ngrams``) at its start position;
+2. ``covered_positions(matched, k)`` -> distinct (doc_id, cp): the
+   token positions the matched shingles cover;
+3. ``covered_runs(cov, min_run)`` -> (doc_id, s, e, len): maximal
+   covered runs of at least ``min_run`` positions (gaps-and-islands);
+4. ``trim_runs(base, runs)`` -> (doc_id, n_toks, removed_toks,
+   cleaned): the runs deleted array-side and the survivors rejoined.
+
+Each operator differs only in which digests count as matched: repeated
+within the corpus, present in an eval index, or present in a frozen
+corpus index. ``queries/exsubverify.py`` and the streaming twin in
+``queries/streaming_queries.py`` compose the same stages.
+
+Boilerplate removal is the C4/RefinedWeb "repeated line" rule
+re-expressed for a corpus without line structure: spans that appear
+across a large fraction of documents are boilerplate (headers, cookie
+banners, navigation chrome) and are stripped from every document,
+preserving the order of what remains.
 
 C4 removes any LINE occurring >= 3 times in the corpus; that absolute
 threshold is scale-dependent (at 100 TB every 3-word span repeats), so
@@ -32,6 +54,7 @@ from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
 from dataengineer_job_scraper_etl_spark.functions.strings import (
+    ngrams,
     ws_tokens,
     ws_tokens_sql,
 )
@@ -39,15 +62,15 @@ from dataengineer_job_scraper_etl_spark.queries.text import _docs
 from dataengineer_job_scraper_etl_spark.session import ensure_min_parallelism
 
 
-# Fan-out sizing for the tokenize front half (r14, VERDICT r13 ask #6):
-# the r13 blanket fan-out to defaultParallelism put 32 tasks of ~20 KB
-# behind every span checkpoint, and the scheduling overhead across the
-# many small downstream stages ate the win on some entries (the r13
-# §12 A/B: docs_exact_substring_verified +0.7 s). Sizing the target
-# with input bytes keeps ~10 tasks at fixture scale (interleaved 3-way
-# A/B full32 / 64k / no-fanout: 64 KB/partition fastest or tied on 5
-# of 6 span entries) while an unsplittable multi-GB input still clamps
-# to full cluster width — the no-op-at-scale property is unchanged.
+# Fan-out sizing for the tokenize front half: a blanket fan-out to
+# defaultParallelism put 32 tasks of ~20 KB behind every span
+# checkpoint, and the scheduling overhead across the many small
+# downstream stages ate the win on some entries
+# (docs_exact_substring_verified +0.7 s). Sizing the target with input
+# bytes keeps ~10 tasks at fixture scale (interleaved 3-way A/B full32
+# / 64k / no-fanout: 64 KB/partition fastest or tied on 5 of 6 span
+# entries) while an unsplittable multi-GB input still clamps to full
+# cluster width — the no-op-at-scale property is unchanged.
 _TOK_BYTES_PER_PART = 64 * 1024
 
 
@@ -55,8 +78,7 @@ def tok_base(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, t): the tokenized, checkpoint-staged base frame every
     span operator fans out from — with the (id, text) projection
     round-robined up to min(cluster parallelism, input_bytes /
-    _TOK_BYTES_PER_PART) BEFORE tokenize (r13 optimization session 4 +
-    the r14 size-scaled target, guide §2.5). A small parquet fixture
+    _TOK_BYTES_PER_PART) BEFORE tokenize. A small parquet fixture
     scans as ONE partition and the lazy localCheckpoint freezes that
     layout, so the tokenize + shingle + md5 front half of every span
     operator ran on one task (measured: a 1-task 3.7 s CPU stage
@@ -73,6 +95,100 @@ def tok_base(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
         "doc_id", ws_tokens(F.col("__text")).alias("t")
     ).localCheckpoint(eager=False)
 
+
+# --- The ExactSubstr stages (module docstring). Every one is
+# partition-local or shuffles digests and positions, never k-token
+# strings or corpus text.
+
+
+def shingle_digests(base: DataFrame, k: int) -> DataFrame:
+    """(doc_id, t) -> (doc_id, pos, h): the 16-byte md5 of every
+    sliding k-token shingle at its 0-based start position, so digests,
+    not k-token strings, travel through the count and join shuffles."""
+    return base.select(
+        "doc_id",
+        F.posexplode(ngrams(F.col("t"), k)).alias("pos", "shingle"),
+    ).select("doc_id", "pos", F.md5(F.col("shingle")).alias("h"))
+
+
+def covered_positions(matched: DataFrame, k: int) -> DataFrame:
+    """Matched k-shingles (doc_id, pos, ...) -> distinct (doc_id, cp):
+    every token position they cover, expanded array-side."""
+    return matched.select(
+        "doc_id",
+        F.explode(F.sequence(F.col("pos"), F.col("pos") + k - 1)).alias(
+            "cp"
+        ),
+    ).distinct()
+
+
+def covered_runs(cov: DataFrame, min_run: int) -> DataFrame:
+    """(doc_id, cp) -> (doc_id, s, e, len): the maximal runs of covered
+    positions at least ``min_run`` long, by gaps-and-islands under a
+    PER-DOC window (partition-bounded, never the unpartitioned kind)."""
+    w = Window.partitionBy("doc_id").orderBy("cp")
+    return (
+        cov.withColumn("g", F.col("cp") - F.row_number().over(w))
+        .groupBy("doc_id", "g")
+        .agg(
+            F.min("cp").alias("s"),
+            F.max("cp").alias("e"),
+            F.count(F.lit(1)).alias("len"),
+        )
+        .filter(F.col("len") >= min_run)
+        .select("doc_id", "s", "e", "len")
+    )
+
+
+def trim_runs(base: DataFrame, runs: DataFrame) -> DataFrame:
+    """(doc_id, t) + runs (doc_id, s, e, len) -> (doc_id, n_toks,
+    removed_toks, cleaned): each doc's runs are deleted by an
+    array-side filter against its own (s, e) list and the survivors
+    rejoined by one space — the corpus text is never exploded for
+    reassembly."""
+    per_doc = runs.groupBy("doc_id").agg(
+        F.collect_list(F.struct("s", "e")).alias("runs"),
+        F.sum("len").cast("long").alias("removed_toks"),
+    )
+    keep = F.filter(
+        F.col("t"),
+        lambda tok, i: ~F.exists(
+            F.col("runs"), lambda r: (r["s"] <= i) & (i <= r["e"])
+        ),
+    )
+    return base.join(per_doc, "doc_id", "left").select(
+        "doc_id",
+        F.size("t").cast("long").alias("n_toks"),
+        F.coalesce(F.col("removed_toks"), F.lit(0))
+        .cast("long")
+        .alias("removed_toks"),
+        F.when(F.col("runs").isNull(), F.array_join(F.col("t"), " "))
+        .otherwise(F.array_join(keep, " "))
+        .alias("cleaned"),
+    )
+
+
+def repeated_digests(sh: DataFrame, min_count: int = 2) -> DataFrame:
+    """Distinct digests ``h`` occurring >= ``min_count`` times in a
+    digest frame: the self-dedup match rule (counts partial-aggregated
+    map-side)."""
+    return (
+        sh.groupBy("h")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .filter(F.col("c") >= min_count)
+        .select("h")
+    )
+
+
+def _digest_index(toks: DataFrame, k: int) -> DataFrame:
+    """Token frame (t) -> its distinct k-shingle digests ``h``."""
+    return (
+        toks.select(F.explode(ngrams(F.col("t"), k)).alias("shingle"))
+        .select(F.md5(F.col("shingle")).alias("h"))
+        .distinct()
+    )
+
+
 SPAN_TOKENS = 2
 # boilerplate iff document frequency * DF_DENOM >= n_docs * DF_NUM
 # (i.e. DF >= 20% of the corpus) — integer arithmetic, no float ratio.
@@ -83,7 +199,7 @@ def span_array(toks):
     """Non-overlapping SPAN_TOKENS-token spans of a token array, as an
     array<string> in document order (last span may be shorter).
 
-    Empty/NULL guard (same hazard _sliding_shingles documents below):
+    Empty/NULL guard (the hazard ``strings.ngrams`` also guards):
     for a ZERO-length token array, sequence(0, n_spans-1) would be
     sequence(0, -1), whose default step DESCENDS and emits [0, -1] —
     two phantom '' spans that inflate n_kept and can even become
@@ -108,9 +224,8 @@ def remove_boilerplate_spans(
     reassemble the survivors in original order ('' if everything was
     boilerplate). Two shuffles; boilerplate set broadcast."""
     # base feeds the span explode AND the totals projection; ex feeds
-    # the DF count AND the strip join — staged once each (r13
-    # optimization; the materialization the pass-1 comment below
-    # always described).
+    # the DF count AND the strip join — staged once each (the
+    # materialization the pass-1 comment below describes).
     base = tok_base(docs, id_col, text_col)
     ex = base.select(
         "doc_id", F.posexplode(span_array(F.col("t"))).alias("pos", "span")
@@ -165,16 +280,26 @@ def remove_boilerplate_spans(
 def strip_boilerplate_text(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Text-in/text-out form for pipeline composition: replace
-    ``text_col`` with the boilerplate-stripped reassembly (other
-    columns pass through; docs that were ALL boilerplate keep '').
-    NB the output text is the NORMALIZED reassembly (lowercased,
-    whitespace-collapsed) — exactly what the downstream gate/digest/
-    shingle stages would compute anyway, so dedup semantics are
-    unchanged while boilerplate no longer defeats them."""
-    cleaned = remove_boilerplate_spans(
-        docs, id_col=id_col, text_col=text_col
-    ).select(F.col("doc_id").alias(id_col), F.col("cleaned"))
+    """Text-in/text-out boilerplate strip (docs that were ALL
+    boilerplate keep ''); dedup semantics are unchanged while
+    boilerplate no longer defeats them. See ``_replace_text``."""
+    return _replace_text(
+        docs,
+        remove_boilerplate_spans(docs, id_col=id_col, text_col=text_col),
+        id_col,
+        text_col,
+    )
+
+
+def _replace_text(
+    docs: DataFrame, trimmed: DataFrame, id_col: str, text_col: str
+) -> DataFrame:
+    """Text-in/text-out form of a trim for pipeline composition:
+    ``text_col`` becomes ``trimmed``'s ``cleaned`` column and the other
+    columns pass through. The output text is the NORMALIZED reassembly
+    (lowercased, whitespace-collapsed) — exactly what the downstream
+    gate / digest / shingle stages would compute anyway."""
+    cleaned = trimmed.select(F.col("doc_id").alias(id_col), F.col("cleaned"))
     return (
         docs.drop(text_col)
         .join(cleaned, id_col)
@@ -252,57 +377,24 @@ NGRAM = 4
 MIN_COUNT = 2
 
 
-def _sliding_shingles(toks):
-    """All sliding NGRAM-token shingles with their 0-based start
-    position, as array<string> (empty when the doc is shorter than
-    NGRAM — guarded because Spark's sequence(0, negative) DESCENDS
-    rather than returning empty)."""
-    n = F.size(toks)
-    return F.when(
-        n >= NGRAM,
-        F.transform(
-            F.sequence(F.lit(0), n - NGRAM),
-            lambda i: F.array_join(F.slice(toks, i + 1, NGRAM), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def repeated_ngram_coverage(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(id, text) -> (doc_id, n_toks, covered_toks, coverage_ppm):
     fraction of each doc's token positions lying inside an NGRAM-token
     shingle that occurs >= MIN_COUNT times corpus-wide. Two corpus
-    passes (count shingles, then mark coverage) — the irreducible
-    global-dedup shape; the repeated-shingle set joins by shuffle (it
-    is corpus-sized in the worst case, NOT broadcast), position
-    expansion is array-side, and the distinct-position count is a
-    partial-aggregating groupBy."""
+    passes (count shingle digests, then mark coverage) — the
+    irreducible global-dedup shape; the repeated-digest set joins by
+    shuffle (it is corpus-sized in the worst case, NOT broadcast) and
+    position expansion is array-side."""
     # base feeds shingles + totals, sh feeds the repeat count + the
-    # coverage join — staged once each (r13 optimization; "a
-    # production pipeline materializes this side" made executable,
-    # exactly as in exact_substring_trim).
+    # coverage join — staged once each, as in exact_substring_trim.
     base = tok_base(docs, id_col, text_col)
-    sh = base.select(
-        "doc_id",
-        F.posexplode(_sliding_shingles(F.col("t"))).alias("pos", "shingle"),
-    ).localCheckpoint(eager=False)
-    rep = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= MIN_COUNT)
-        .select("shingle")
-    )
+    sh = shingle_digests(base, NGRAM).localCheckpoint(eager=False)
     covered = (
-        sh.join(rep, "shingle")
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + NGRAM - 1)
-            ).alias("cp"),
-        )
+        covered_positions(sh.join(repeated_digests(sh, MIN_COUNT), "h"), NGRAM)
         .groupBy("doc_id")
-        .agg(F.countDistinct("cp").alias("covered_toks"))
+        .agg(F.count(F.lit(1)).alias("covered_toks"))
     )
     totals = base.select(
         "doc_id", F.size(F.col("t")).cast("long").alias("n_toks")
@@ -380,19 +472,6 @@ EXSUB_SHINGLE = 8
 EXSUB_MIN_RUN = 16
 
 
-def _sliding_k_shingles(toks, k: int):
-    """All sliding k-token shingles in document order (empty when the
-    doc is shorter than k — sequence(0, negative) would DESCEND)."""
-    n = F.size(toks)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.array_join(F.slice(toks, i + 1, k), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def exact_substring_trim(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -403,99 +482,26 @@ def exact_substring_trim(
     """(id, text) -> (doc_id, n_toks, removed_toks, cleaned).
 
     Shape (the 100 TB story):
-    1. shingle-hash pass: sliding k-grams md5'd to 16 bytes BEFORE the
-       shuffle (digests travel, k-token strings don't) -> occurrence
-       counts (partial-aggregated map-side), repeated set = count>=2.
-       The repeated set joins back by SHUFFLE (corpus-sized worst
-       case, like repeated_ngram_coverage — never assumed broadcast).
-    2. covered positions -> maximal runs: gaps-and-islands with a
-       PER-DOC window (Window.partitionBy(doc_id) — partition-bounded,
-       never the engine-banned unpartitioned kind).
-    3. trim: the per-doc run list (a handful of (s,e) structs) joins
-       back onto the docs and the removal is ARRAY-SIDE
-       (filter(t, (tok,i) -> no run contains i)) — the corpus text is
-       never exploded for reassembly, unlike the boilerplate operator
-       (whose strip set is global, not per-doc).
-    Two corpus passes — the irreducible global-dedup shape; a
-    production pipeline materializes the shingle side between them.
+    1. shingle-hash pass: ``shingle_digests`` -> occurrence counts
+       (partial-aggregated map-side), repeated set = count>=2. The
+       repeated set joins back by SHUFFLE (corpus-sized worst case,
+       like repeated_ngram_coverage — never assumed broadcast).
+    2. ``covered_positions`` -> ``covered_runs``.
+    3. ``trim_runs``: the per-doc run list (a handful of (s,e) structs)
+       joins back onto the docs and the removal is ARRAY-SIDE — unlike
+       the boilerplate operator, whose strip set is global, not
+       per-doc.
+    Two corpus passes — the irreducible global-dedup shape; the
+    shingle side is materialized between them.
     """
-    # Stage the tokenized corpus and the shingle-digest frame ONCE
-    # (r13 optimization — the materialization the docstring's "a
-    # production pipeline materializes the shingle side between them"
-    # always described): ``base`` feeds the shingle explode AND the
-    # final trim join, ``sh`` feeds the repeat count AND the coverage
-    # join — without the checkpoints each consumer re-ran the full
-    # tokenize (+ shingle explode + md5) from the source scan.
+    # base feeds the shingle explode AND the final trim join, sh feeds
+    # the repeat count AND the coverage join: without the checkpoints
+    # each consumer re-ran the full tokenize (+ shingle explode + md5)
+    # from the source scan.
     base = tok_base(docs, id_col, text_col)
-    sh = (
-        base.select(
-            "doc_id",
-            F.posexplode(_sliding_k_shingles(F.col("t"), k)).alias(
-                "pos", "shingle"
-            ),
-        )
-        .select("doc_id", "pos", F.md5(F.col("shingle")).alias("h"))
-        .localCheckpoint(eager=False)
-    )
-    rep = (
-        sh.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("h")
-    )
-    cov = (
-        sh.join(rep, "h")
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + k - 1)
-            ).alias("cp"),
-        )
-        .distinct()
-    )
-    return _trim_covered_runs(base, cov, min_run)
-
-
-def _trim_covered_runs(
-    base: DataFrame, cov: DataFrame, min_run: int
-) -> DataFrame:
-    """Shared trim core: (doc_id, t) + covered positions (doc_id, cp)
-    -> (doc_id, n_toks, removed_toks, cleaned). Maximal covered runs
-    via gaps-and-islands under a PER-DOC window; runs >= min_run are
-    deleted by the array-side filter against the doc's own (s,e) run
-    list (the corpus text is never exploded for reassembly)."""
-    w = Window.partitionBy("doc_id").orderBy("cp")
-    isl = cov.withColumn("g", F.col("cp") - F.row_number().over(w))
-    runs = (
-        isl.groupBy("doc_id", "g")
-        .agg(
-            F.min("cp").alias("s"),
-            F.max("cp").alias("e"),
-            F.count(F.lit(1)).alias("len"),
-        )
-        .filter(F.col("len") >= min_run)
-        .groupBy("doc_id")
-        .agg(
-            F.collect_list(F.struct("s", "e")).alias("runs"),
-            F.sum("len").cast("long").alias("removed_toks"),
-        )
-    )
-    keep = F.filter(
-        F.col("t"),
-        lambda tok, i: ~F.exists(
-            F.col("runs"), lambda r: (r["s"] <= i) & (i <= r["e"])
-        ),
-    )
-    return base.join(runs, "doc_id", "left").select(
-        "doc_id",
-        F.size("t").cast("long").alias("n_toks"),
-        F.coalesce(F.col("removed_toks"), F.lit(0))
-        .cast("long")
-        .alias("removed_toks"),
-        F.when(F.col("runs").isNull(), F.array_join(F.col("t"), " "))
-        .otherwise(F.array_join(keep, " "))
-        .alias("cleaned"),
-    )
+    sh = shingle_digests(base, k).localCheckpoint(eager=False)
+    cov = covered_positions(sh.join(repeated_digests(sh), "h"), k)
+    return trim_runs(base, covered_runs(cov, min_run))
 
 
 # Eval-set decontamination: the ExactSubstr machinery pointed at a
@@ -525,38 +531,17 @@ def decontaminate_trim(
     benchmark release); the train side joins against it by digest —
     semi-join semantics, eval side grouped first so AQE may broadcast
     a small benchmark but a corpus-sized one still shuffles safely.
-    Run assembly + trim are the shared per-doc core."""
+    Coverage, runs and trim are the shared stages."""
     if min_run is None:
         min_run = k
     # base feeds the shingle explode AND the trim join — staged once
-    # (r13 optimization; sh has a single consumer here, so only the
-    # tokenize pass was duplicated).
+    # (the digest frame has a single consumer here).
     base = tok_base(train_docs, id_col, text_col)
-    sh = base.select(
-        "doc_id",
-        F.posexplode(_sliding_k_shingles(F.col("t"), k)).alias(
-            "pos", "shingle"
-        ),
-    ).select("doc_id", "pos", F.md5(F.col("shingle")).alias("h"))
-    eval_idx = (
-        eval_docs.select(ws_tokens(F.col(text_col)).alias("t"))
-        .select(
-            F.explode(_sliding_k_shingles(F.col("t"), k)).alias("shingle")
-        )
-        .select(F.md5(F.col("shingle")).alias("h"))
-        .distinct()
+    eval_idx = _digest_index(
+        eval_docs.select(ws_tokens(F.col(text_col)).alias("t")), k
     )
-    cov = (
-        sh.join(eval_idx, "h", "left_semi")
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + k - 1)
-            ).alias("cp"),
-        )
-        .distinct()
-    )
-    return _trim_covered_runs(base, cov, min_run)
+    hits = shingle_digests(base, k).join(eval_idx, "h", "left_semi")
+    return trim_runs(base, covered_runs(covered_positions(hits, k), min_run))
 
 
 def exact_substring_index(
@@ -568,26 +553,20 @@ def exact_substring_index(
     """The frozen ExactSubstr digest index over an EXISTING corpus:
     every distinct sliding k-shingle digest (16-byte md5), one column
     ``h``. Materialized ONCE per corpus (the same move as
-    ``decontaminate_trim``'s eval index — VERDICT r9 ask #3): a shingle
-    arriving later that already occurs >= 1 time in the corpus is by
-    definition repeated corpus-wide, so ingest never re-counts the
-    corpus. Digest-only (16 bytes per distinct shingle, never k-token
-    strings); at scale this is stored BUCKETED by ``h`` so the
-    per-batch semi-join co-locates against it — only the batch side
-    shuffles, batch-proportionally."""
-    # fanned out before tokenize (r13 session 4, the tok_base device):
-    # the corpus-scale tokenize + shingle + md5 of the index build ran
-    # on the scan's partition count — one task on a small fixture
-    return (
+    ``decontaminate_trim``'s eval index): a shingle arriving later that
+    already occurs >= 1 time in the corpus is by definition repeated
+    corpus-wide, so ingest never re-counts the corpus. Digest-only (16
+    bytes per distinct shingle, never k-token strings); at scale this
+    is stored BUCKETED by ``h`` so the per-batch semi-join co-locates
+    against it — only the batch side shuffles, batch-proportionally."""
+    # fanned out before tokenize (the tok_base device): the
+    # corpus-scale tokenize + shingle + md5 of the index build ran on
+    # the scan's partition count — one task on a small fixture
+    return _digest_index(
         ensure_min_parallelism(
             corpus_docs.select(F.col(text_col).alias("__text"))
-        )
-        .select(ws_tokens(F.col("__text")).alias("t"))
-        .select(
-            F.explode(_sliding_k_shingles(F.col("t"), k)).alias("shingle")
-        )
-        .select(F.md5(F.col("shingle")).alias("h"))
-        .distinct()
+        ).select(ws_tokens(F.col("__text")).alias("t")),
+        k,
     )
 
 
@@ -598,12 +577,11 @@ def exact_substring_ingest_trim(
     text_col: str = "text",
     k: int = EXSUB_SHINGLE,
     min_run: int = EXSUB_MIN_RUN,
-    count_batch_repeats: bool = True,
 ) -> DataFrame:
-    """Incremental ExactSubstr (VERDICT r9 ask #3): trim an ARRIVING
-    batch against a frozen corpus digest index, batch-proportional —
-    the nightly-ingest rendering of ``exact_substring_trim`` (every
-    other dedup layer already had one: digest / MinHash / SemDeDup).
+    """Incremental ExactSubstr: trim an ARRIVING batch against a frozen
+    corpus digest index, batch-proportional — the nightly-ingest
+    rendering of ``exact_substring_trim`` (every other dedup layer
+    already had one: digest / MinHash / SemDeDup).
 
     A batch position is duplicated iff its shingle digest is in the
     corpus index (corpus >= 1 + batch >= 1 = repeated) OR occurs >= 2
@@ -616,48 +594,25 @@ def exact_substring_ingest_trim(
 
     Cost shape: shingle/count/join work is |batch|-proportional; the
     index side is scanned, not reshuffled, when stored bucketed by
-    ``h`` (see exact_substring_index). Runs + trim reuse the per-doc
-    core (_trim_covered_runs). ``count_batch_repeats=False`` gives the
-    index-only rule the STREAMING twin uses (intra-batch repetition
-    stays in the batch operator — the same carve-out
-    streaming_semdedup_ingest documents)."""
-    # Same staging as exact_substring_trim (r13 optimization): base
-    # feeds shingles + the trim join, sh feeds the dup rule + the
-    # coverage join — one tokenize and one shingle pass per batch
+    ``h`` (see exact_substring_index). The streaming twin
+    (``streaming_exact_substring_ingest``) applies the index-only rule
+    with the same stages: intra-batch repetition stays in this batch
+    operator."""
+    # base feeds shingles + the trim join, sh feeds the dup rule + the
+    # coverage join: one tokenize and one shingle pass per batch
     # instead of two of each.
     base = tok_base(batch_docs, id_col, text_col)
-    sh = (
-        base.select(
-            "doc_id",
-            F.posexplode(_sliding_k_shingles(F.col("t"), k)).alias(
-                "pos", "shingle"
-            ),
-        )
-        .select("doc_id", "pos", F.md5(F.col("shingle")).alias("h"))
-        .localCheckpoint(eager=False)
+    sh = shingle_digests(base, k).localCheckpoint(eager=False)
+    idx = index.select("h").withColumn("__in_corpus", F.lit(True))
+    dup = (
+        sh.groupBy("h")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .join(idx, "h", "left")
+        .filter((F.col("c") >= 2) | F.col("__in_corpus").isNotNull())
+        .select("h")
     )
-    if count_batch_repeats:
-        idx = index.select("h").withColumn("__in_corpus", F.lit(True))
-        dup = (
-            sh.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .join(idx, "h", "left")
-            .filter((F.col("c") >= 2) | F.col("__in_corpus").isNotNull())
-            .select("h")
-        )
-    else:
-        dup = sh.select("h").join(index.select("h"), "h", "left_semi")
-    cov = (
-        sh.join(dup, "h", "left_semi")
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + k - 1)
-            ).alias("cp"),
-        )
-        .distinct()
-    )
-    return _trim_covered_runs(base, cov, min_run)
+    cov = covered_positions(sh.join(dup, "h", "left_semi"), k)
+    return trim_runs(base, covered_runs(cov, min_run))
 
 
 def decontaminate_text(
@@ -667,19 +622,14 @@ def decontaminate_text(
     text_col: str = "text",
     k: int = DECON_SHINGLE,
 ) -> DataFrame:
-    """Text-in/text-out form for pipeline composition (the
-    strip_boilerplate_text pattern): replace ``text_col`` with the
-    decontaminated reassembly; other columns pass through. As with the
-    boilerplate wrapper, the output text is the NORMALIZED reassembly
-    (lowercased, whitespace-collapsed) — what the downstream gate /
-    digest / shingle stages compute anyway."""
-    cleaned = decontaminate_trim(
-        docs, eval_docs, id_col=id_col, text_col=text_col, k=k
-    ).select(F.col("doc_id").alias(id_col), F.col("cleaned"))
-    return (
-        docs.drop(text_col)
-        .join(cleaned, id_col)
-        .withColumnRenamed("cleaned", text_col)
+    """Text-in/text-out decontamination (see ``_replace_text``)."""
+    return _replace_text(
+        docs,
+        decontaminate_trim(
+            docs, eval_docs, id_col=id_col, text_col=text_col, k=k
+        ),
+        id_col,
+        text_col,
     )
 
 
@@ -764,16 +714,19 @@ def docs_exact_substring_trim(
 # one odd, so BOTH staged micro-batches of the streaming twin carry
 # hits), guaranteeing the cross-corpus removal path executes at every
 # sf regardless of the fixture's natural duplication.
-_PLANT = (
+PLANT = (
     "xqalpha xqbravo xqcedar xqdelta xqember xqfalcon xqgrove xqhollow "
     "xqindigo xqjasper xqkestrel xqlumen xqmarrow xqnimbus xqonyx "
     "xqpetal xqquartz xqrustle xqsable xqtundra xqumber xqvortex "
     "xqwillow xqzephyr"
 )
-_PLANT_PRED = "(doc_id % 40 = 0 OR doc_id % 20 = 8 OR doc_id % 20 = 19)"
+PLANT_PRED = "(doc_id % 40 = 0 OR doc_id % 20 = 8 OR doc_id % 20 = 19)"
 
 
-def _planted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def planted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents fixture with PLANT appended where PLANT_PRED
+    holds: the shared input of the ExactSubstr ingest, verified,
+    streaming and corpus-intake entries."""
     pred = (
         (F.col("doc_id") % 40 == 0)
         | (F.col("doc_id") % 20 == 8)
@@ -782,7 +735,7 @@ def _planted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _docs(spark, sf_dir).select(
         "doc_id",
         "source",
-        F.when(pred, F.concat(F.col("text"), F.lit(" " + _PLANT)))
+        F.when(pred, F.concat(F.col("text"), F.lit(" " + PLANT)))
         .otherwise(F.col("text"))
         .alias("text"),
     )
@@ -791,7 +744,7 @@ def _planted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EXSUB_INGEST_ORACLE = f"""
 WITH raw AS (
   SELECT doc_id,
-         CASE WHEN {_PLANT_PRED} THEN text || ' {_PLANT}'
+         CASE WHEN {PLANT_PRED} THEN text || ' {PLANT}'
               ELSE text END AS text
   FROM documents),
 tok AS (
@@ -853,7 +806,7 @@ LEFT JOIN reasm USING (doc_id)
 @register(
     "docs_exact_substring_ingest",
     _EXSUB_INGEST_ORACLE,
-    doc="Incremental ExactSubstr ingest (VERDICT r9 ask #3): an "
+    doc="Incremental ExactSubstr ingest: an "
     "arriving batch (doc_id%10>=8, with a planted 24-token suffix "
     "shared with corpus docs so cross-batch duplicated runs provably "
     "exist) is trimmed against the FROZEN digest index of the "
@@ -865,12 +818,13 @@ LEFT JOIN reasm USING (doc_id)
     "so the cheap path is bit-identical to a full re-run's verdict on "
     "the new docs; cleaned_md5 pins exact per-doc reassembly. Index = "
     "distinct 16-byte digests, stored bucketed by digest at scale so "
-    "per-batch joins co-locate; runs + trim reuse _trim_covered_runs.",
+    "per-batch joins co-locate; coverage, runs and trim are the shared "
+    "stages covered_positions -> covered_runs -> trim_runs.",
 )
 def docs_exact_substring_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    d = _planted_docs(spark, sf_dir)
+    d = planted_docs(spark, sf_dir)
     corpus = d.filter(F.col("doc_id") % 10 < 8)
     batch = d.filter(F.col("doc_id") % 10 >= 8)
     idx = exact_substring_index(corpus)
@@ -948,7 +902,8 @@ LEFT JOIN reasm USING (doc_id)
     "DISTINCT) is what production materializes once per benchmark "
     "release; the train side semi-joins it by digest (small benchmark "
     "-> AQE broadcast, corpus-sized -> safe shuffle); run assembly + "
-    "trim share the ExactSubstr per-doc core (_trim_covered_runs).",
+    "trim are the shared ExactSubstr stages (covered_positions -> "
+    "covered_runs -> trim_runs).",
 )
 def docs_decontaminate_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)

@@ -758,7 +758,7 @@ def streaming_pc1_drift_monitor(
 def _stage_exsub_ingest_dir(spark: SparkSession, sf_dir: str) -> str:
     """A 2-file queue of ARRIVING documents for the streaming
     ExactSubstr entry: the planted batch slice (doc_id%10>=8 of
-    queries/spans._planted_docs — the shared 24-token suffix lands on
+    queries/spans.planted_docs — the shared 24-token suffix lands on
     doc_id%20==8 rows in batch 1 and doc_id%20==19 rows in batch 2, so
     BOTH micro-batches provably carry cross-corpus duplicated runs).
     Shared staging protocol (staging.py)."""
@@ -766,10 +766,10 @@ def _stage_exsub_ingest_dir(spark: SparkSession, sf_dir: str) -> str:
 
     def build(staged: str) -> None:
         from dataengineer_job_scraper_etl_spark.queries.spans import (
-            _planted_docs,
+            planted_docs,
         )
 
-        d = _planted_docs(spark, sf_dir).filter(F.col("doc_id") % 10 >= 8)
+        d = planted_docs(spark, sf_dir).filter(F.col("doc_id") % 10 >= 8)
         write_ordered_batches(
             staged,
             [d.filter(F.col("doc_id") % 2 == 0),
@@ -779,6 +779,23 @@ def _stage_exsub_ingest_dir(spark: SparkSession, sf_dir: str) -> str:
     return stage_once(src, "exsub", build)
 
 
+def exsub_index_hits(docs: DataFrame, index: DataFrame, k: int) -> DataFrame:
+    """(doc_id, text) -> (doc_id, pos, h) of every k-shingle whose
+    digest is in ``index``: the INDEX-ONLY match rule the streaming
+    ExactSubstr twin applies per micro-batch. Stateless, so a stream
+    and a batch frame plan the same. The tokens get their own select
+    before ``ngrams``: Catalyst does no CSE inside lambdas, so a
+    tokenizer inlined into the window lambda re-runs once per window."""
+    from dataengineer_job_scraper_etl_spark.queries.spans import (
+        shingle_digests,
+    )
+
+    toks = docs.select("doc_id", ws_tokens(F.col("text")).alias("t"))
+    return shingle_digests(toks, k).join(
+        F.broadcast(index), "h", "left_semi"
+    )
+
+
 def _exsub_stream_oracle() -> str:
     """Batch replay of the streamed trim under the INDEX-ONLY rule
     (intra-batch repetition stays in the batch operator — the same
@@ -786,15 +803,15 @@ def _exsub_stream_oracle() -> str:
     from dataengineer_job_scraper_etl_spark.queries.spans import (
         EXSUB_MIN_RUN,
         EXSUB_SHINGLE,
-        _PLANT,
-        _PLANT_PRED,
+        PLANT,
+        PLANT_PRED,
     )
 
     k = EXSUB_SHINGLE
     return f"""
 WITH raw AS (
   SELECT doc_id,
-         CASE WHEN {_PLANT_PRED} THEN text || ' {_PLANT}'
+         CASE WHEN {PLANT_PRED} THEN text || ' {PLANT}'
               ELSE text END AS text
   FROM documents),
 tok AS (
@@ -858,12 +875,13 @@ LEFT JOIN reasm USING (doc_id)
     "the INDEX-ONLY rule (a position is duplicated iff its digest is "
     "in the corpus index; intra-batch repetition stays in the batch "
     "operator, the streaming_semdedup_ingest carve-out). The streamed "
-    "plan is STATELESS append: shingle -> md5 -> stream-static "
-    "left-semi join (digests only travel; broadcast here, a bucketed "
-    "digest table at scale) -> array-side position expansion into the "
-    "memory sink, so the micro-batch planner and the per-batch static "
-    "join sit inside the verified path; run assembly + trim reuse the "
-    "per-doc core post-drain. cleaned_md5 pins exact reassembly of "
+    "plan is STATELESS append (exsub_index_hits): tokenize -> "
+    "shingle_digests -> stream-static left-semi join (digests only "
+    "travel; broadcast here, a bucketed digest table at scale) -> the "
+    "matched (doc_id, pos, h) rows into the memory sink, so the "
+    "micro-batch planner and the per-batch static join sit inside the "
+    "verified path; covered_positions -> covered_runs -> trim_runs run "
+    "post-drain. cleaned_md5 pins exact reassembly of "
     "every arriving doc; both staged micro-batches carry planted "
     "cross-corpus duplicated runs.",
 )
@@ -873,13 +891,14 @@ def streaming_exact_substring_ingest(
     from dataengineer_job_scraper_etl_spark.queries.spans import (
         EXSUB_MIN_RUN,
         EXSUB_SHINGLE,
-        _planted_docs,
-        _sliding_k_shingles,
-        _trim_covered_runs,
+        covered_positions,
+        covered_runs,
         exact_substring_index,
+        planted_docs,
+        trim_runs,
     )
 
-    corpus = _planted_docs(spark, sf_dir).filter(F.col("doc_id") % 10 < 8)
+    corpus = planted_docs(spark, sf_dir).filter(F.col("doc_id") % 10 < 8)
     idx = exact_substring_index(corpus)
     d = _stage_exsub_ingest_dir(spark, sf_dir)
     stream = (
@@ -887,23 +906,13 @@ def streaming_exact_substring_ingest(
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
     )
-    sh = stream.select(
-        "doc_id",
-        F.posexplode(
-            _sliding_k_shingles(ws_tokens(F.col("text")), EXSUB_SHINGLE)
-        ).alias("pos", "shingle"),
-    ).select("doc_id", "pos", F.md5(F.col("shingle")).alias("h"))
-    cov = sh.join(F.broadcast(idx), "h", "left_semi").select(
-        "doc_id",
-        F.explode(
-            F.sequence(F.col("pos"), F.col("pos") + EXSUB_SHINGLE - 1)
-        ).alias("cp"),
-    )
-    rows = _drain(cov, spark, output_mode="append")
+    hits = exsub_index_hits(stream, idx, EXSUB_SHINGLE)
+    rows = _drain(hits, spark, output_mode="append")
     base = read_parquet(spark, d).select(
         "doc_id", ws_tokens(F.col("text")).alias("t")
     )
-    out = _trim_covered_runs(base, rows.distinct(), EXSUB_MIN_RUN)
+    cov = covered_positions(rows, EXSUB_SHINGLE)
+    out = trim_runs(base, covered_runs(cov, EXSUB_MIN_RUN))
     return out.select(
         "doc_id",
         "n_toks",

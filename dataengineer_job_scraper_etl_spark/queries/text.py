@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.catalog import register
 from dataengineer_job_scraper_etl_spark.functions.strings import (
+    ngrams,
     normalize_ws_lower,
     ws_collapse_sql,
     ws_norm_sql,
@@ -571,25 +572,6 @@ def docs_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _trigrams(toks):
-    """Space-joined 3-grams of a token array (empty if < 3 tokens).
-
-    Guarded: Spark's sequence(1, n) DESCENDS when n < 1, so the
-    under-3-tokens case must short-circuit to an empty array."""
-    return F.when(
-        F.size(toks) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 2),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks, i),
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 @register(
     "docs_contamination_ngram",
     f"""
@@ -625,13 +607,12 @@ GROUP BY g.doc_id
 )
 def docs_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
-    # Tokenize into an ALIASED column first: element_at(toks, i) inside
-    # the trigram lambda otherwise inlines the whole regexp+split and
-    # Spark does no CSE inside lambda functions — the text would be
-    # re-tokenized ~3x per gram per row.
+    # Tokenize into an ALIASED column first (the ngrams contract): the
+    # window lambda would otherwise inline the whole regexp+split and
+    # Spark does no CSE inside lambda functions.
     tokd = d.select("doc_id", ws_tokens(F.col("text")).alias("__toks"))
     grams = tokd.select(
-        "doc_id", F.explode(_trigrams(F.col("__toks"))).alias("gram")
+        "doc_id", F.explode(ngrams(F.col("__toks"), 3)).alias("gram")
     ).dropDuplicates(["doc_id", "gram"])
     bench = (
         grams.filter(F.col("doc_id") < 5).select("gram").distinct()
@@ -695,22 +676,13 @@ def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Two hard-won evaluation-order rules (both measured, not
     # theoretical):
     # 1. Tokenize into an ALIASED column before building bigrams —
-    #    element_at(toks, i) inside the transform lambda inlines the
-    #    whole regexp+split per element (no CSE inside lambdas).
+    #    a tokenizer inside the ngrams lambda re-runs the whole
+    #    regexp+split per window (no CSE inside lambdas).
     # 2. Project the O(n^2) array_distinct below the explode — an
     #    expression in the same select as a generator is evaluated per
     #    GENERATED row (113s -> ~1s at sf0.01 for this split).
     tokd = d.select("doc_id", ws_tokens(F.col("text")).alias("__toks"))
-    tcol = F.col("__toks")
-    bigrams = F.when(
-        F.size(tcol) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(tcol) - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(tcol, i), F.element_at(tcol, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    bigrams = ngrams(F.col("__toks"), 2)
     pre = tokd.select(
         "doc_id",
         "__toks",

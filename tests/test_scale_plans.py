@@ -117,12 +117,12 @@ def test_catalog_docstring_plan_claims_hold(spark, sf_dir):
         # ONE window = the grouped_topk quota; its one topic exchange
         # carries only what the Partial WindowGroupLimit kept
         "docs_topic_balanced_sample": (1, 1, 0),
-        # round-13 additions (same convention). The fingerprint
+        # Same convention below. The fingerprint
         # contract is a PURE PROJECTION — zero exchanges is the
         # signature; the verified-pairs entry is banding shuffle +
         # candidate-bounded verify joins (AQE broadcasts them at
         # sf0.01; headroom for their SMJ rendering at scale); the
-        # verified ExactSubstr shows ONE visible window since the r13
+        # verified ExactSubstr shows ONE visible window since its
         # staging: the phase-1 gaps-and-islands window runs once
         # behind the candidate-run localCheckpoint (pre-fix it was
         # re-executed by both phase-1 consumers and appeared 4x with
@@ -267,10 +267,7 @@ def test_grouped_topk_prunes_below_the_exchange(
 _ROW_NUMBER_ALLOWED = {
     ("operators/similarity.py", "semdedup_centroid_survivors"): "flags "
     "each component's survivor (rn == 1 -> kept) but keeps every row",
-    ("queries/exsubverify.py", "exact_substring_trim_verified"): "gaps-"
-    "and-islands: cp - row_number() labels covered runs",
-    ("queries/spans.py", "_trim_covered_runs"): "gaps-and-islands run "
-    "labels",
+    ("queries/spans.py", "covered_runs"): "gaps-and-islands run labels",
     ("queries/prf.py", "retrieval_prf_expansion"): "numbers a global "
     "list already cut by limit()",
     ("queries/retrieval.py", "_ranked_topk"): "numbers a global list "
@@ -354,7 +351,7 @@ def test_python_stays_out_of_the_hot_path_catalog_wide(spark, sf_dir):
 
 
 def test_shared_frames_are_materialized_not_recomputed(spark, sf_dir):
-    """Multi-consumer recompute lint (round-13 session 2): a frame
+    """Multi-consumer recompute lint: a frame
     that feeds several consumers without materialization re-runs its
     whole upstream chain per consumer — invisible at fixture scale,
     a full extra corpus pass each at 100 TB. The visible-plan

@@ -4,6 +4,8 @@ ordering and counts must be exact."""
 
 from __future__ import annotations
 
+import ast
+
 from dataengineer_job_scraper_etl_spark.queries.spans import (
     remove_boilerplate_spans,
     span_array,
@@ -103,7 +105,7 @@ def test_repeated_ngram_coverage_overlapping_shingles_union(spark):
     assert out[1]["covered_toks"] == 5
 
 
-# --- ExactSubstr trim (Lee et al. 2022 removal half, round 9) ---
+# --- ExactSubstr trim (Lee et al. 2022 removal half) ---
 
 
 def _exsub(spark, rows, k=4, min_run=8):
@@ -347,12 +349,19 @@ def test_ingest_equals_full_recount_restricted_to_batch(spark, docs):
 
 
 def test_ingest_index_only_rule_skips_batch_internal_repeats(spark):
-    """count_batch_repeats=False (the streaming twin's rule): a run
+    """The streaming twin's stage composition, on a batch frame: index
+    hits -> covered_positions -> covered_runs -> trim_runs. A run
     repeated only WITHIN the batch survives; a run hitting the corpus
     index is still trimmed."""
     from dataengineer_job_scraper_etl_spark.queries.spans import (
+        covered_positions,
+        covered_runs,
         exact_substring_index,
-        exact_substring_ingest_trim,
+        tok_base,
+        trim_runs,
+    )
+    from dataengineer_job_scraper_etl_spark.queries.streaming_queries import (
+        exsub_index_hits,
     )
 
     shared = " ".join(f"s{i}" for i in range(6))   # in corpus AND batch
@@ -365,11 +374,11 @@ def test_ingest_index_only_rule_skips_batch_internal_repeats(spark):
         "doc_id long, text string",
     )
     idx = exact_substring_index(corpus, k=3)
+    cov = covered_positions(exsub_index_hits(batch, idx, 3), 3)
+    base = tok_base(batch, "doc_id", "text")
     out = {
         r["doc_id"]: r
-        for r in exact_substring_ingest_trim(
-            batch, idx, k=3, min_run=3, count_batch_repeats=False
-        ).collect()
+        for r in trim_runs(base, covered_runs(cov, 3)).collect()
     }
     # doc 1: the shared prefix (6 toks) trimmed, batch_only kept
     assert out[1]["removed_toks"] == 6
@@ -379,8 +388,21 @@ def test_ingest_index_only_rule_skips_batch_internal_repeats(spark):
     assert out[2]["cleaned"] == f"{batch_only} y1"
 
 
+def test_covered_runs_splits_on_gaps_and_drops_short_runs(spark):
+    """Gaps-and-islands: a one-position gap splits two runs; a run of
+    min_run - 1 positions is dropped and one of exactly min_run kept."""
+    from dataengineer_job_scraper_etl_spark.queries.spans import covered_runs
+
+    cov = [(0, p) for p in (0, 1, 2, 3, 5, 6, 7, 8, 9)] + [
+        (1, p) for p in (0, 1, 2, 10, 11, 12, 13)
+    ]
+    df = spark.createDataFrame(cov, "doc_id long, cp long")
+    got = {tuple(r) for r in covered_runs(df, 4).collect()}
+    assert got == {(0, 0, 3, 4), (0, 5, 9, 5), (1, 10, 13, 4)}
+
+
 def test_verified_trim_keeps_composite_borrow_removes_true_dup(spark):
-    """VERDICT r12 ask #5's over-trim fixture, hand-built: doc 1
+    """The over-trim fixture, hand-built: doc 1
     borrows 8 tokens from doc 2 immediately followed by 8 tokens from
     doc 3 — the shingle-cover approximation sees one 16-position
     covered run and trims it, but NO 16-token substring of doc 1
@@ -424,3 +446,117 @@ def test_verified_trim_keeps_composite_borrow_removes_true_dup(spark):
         assert got[d]["removed_approx"] == 24
         assert got[d]["removed_exact"] == 24
         assert "d0" not in got[d]["cleaned"]
+
+
+# --- one shingle contract: guards
+
+
+def _calls(node, attr):
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == attr
+    )
+
+
+def _is_gram_window(n):
+    """``F.transform(F.sequence(...), lambda: ...)`` whose body joins
+    slice/element_at picks: a hand-built n-gram window."""
+    if not (_calls(n, "transform") and len(n.args) == 2):
+        return False
+    seq, fn = n.args
+    if not (_calls(seq, "sequence") and isinstance(fn, ast.Lambda)):
+        return False
+    body = list(ast.walk(fn.body))
+    return any(
+        _calls(c, "slice") or _calls(c, "element_at") for c in body
+    ) and any(_calls(c, "array_join") or _calls(c, "concat_ws") for c in body)
+
+
+# gram windows outside functions/strings.ngrams: (module, enclosing
+# function) -> why the site is not a sliding word n-gram
+_GRAM_WINDOW_ALLOWED = {
+    ("operators/dedup.py", "banded_sketch"): "slices a MinHash signature "
+    "into LSH bands of hash values, not tokens",
+    ("queries/spans.py", "span_array"): "non-overlapping spans (stride = "
+    "width, last span short), not a sliding window",
+}
+
+
+def test_word_ngrams_are_built_only_by_ngrams(package_sites):
+    found = package_sites(_is_gram_window)
+    assert found - {("functions/strings.py", "ngrams")} == set(
+        _GRAM_WINDOW_ALLOWED
+    )
+
+
+def test_no_module_imports_private_spans_names(package_sites):
+    """The ExactSubstr stages and the planted fixture other modules
+    compose are public; spans' underscore names stay its own."""
+    assert package_sites(
+        lambda n: isinstance(n, ast.ImportFrom)
+        and (n.module or "").endswith("queries.spans")
+        and any(a.name.startswith("_") for a in n.names)
+    ) == set()
+
+
+def _lambdas(plan: str):
+    """The text of every ``lambdafunction(...)`` in a plan string."""
+    out, i = [], plan.find("lambdafunction(")
+    while i >= 0:
+        depth, j = 0, i + len("lambdafunction")
+        for j in range(j, len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            if depth == 0:
+                break
+        out.append(plan[i : j + 1])
+        i = plan.find("lambdafunction(", j)
+    return out
+
+
+def test_no_tokenizer_runs_inside_an_ngram_lambda(spark, sf_dir):
+    """Catalyst does no CSE inside lambdas: a tokenizer inlined into a
+    window lambda re-runs once per window. No optimized plan of an
+    ``ngrams`` caller carries regexp_replace inside a lambdafunction;
+    the streaming ExactSubstr twin is checked through the same
+    exsub_index_hits select on a batch read."""
+    import os
+
+    from dataengineer_job_scraper_etl_spark.catalog import all_queries
+    from dataengineer_job_scraper_etl_spark.io import read_parquet
+    from dataengineer_job_scraper_etl_spark.queries.spans import (
+        EXSUB_SHINGLE,
+        exact_substring_index,
+    )
+    from dataengineer_job_scraper_etl_spark.queries.streaming_queries import (
+        exsub_index_hits,
+    )
+
+    qs = all_queries()
+    frames = {
+        name: qs[name].spark_fn(spark, sf_dir)
+        for name in (
+            "jobs_skills",
+            "docs_contamination_ngram",
+            "text_repetition_signals",
+            "docs_shingle_containment",
+            "docs_repeated_ngram_coverage",
+            "docs_exact_substring_trim",
+            "docs_decontaminate_trim",
+            "docs_exact_substring_ingest",
+            "docs_exact_substring_verified",
+        )
+    }
+    docs = read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+    frames["streaming_exact_substring_ingest"] = exsub_index_hits(
+        docs, exact_substring_index(docs), EXSUB_SHINGLE
+    )
+    bad = {
+        name: lam
+        for name, df in frames.items()
+        for lam in _lambdas(
+            df._jdf.queryExecution().optimizedPlan().toString()
+        )
+        if "regexp_replace" in lam
+    }
+    assert not bad, bad

@@ -6,11 +6,13 @@ import ast
 import re
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from dataengineer_job_scraper_etl_spark.functions.strings import (
     ddmmyyyy,
     jobid_from_urn,
+    ngrams,
     normalize_ws_lower,
     not_containing,
     ws_collapse,
@@ -183,3 +185,27 @@ def test_generate_barrier_is_spelled_only_in_its_helper(package_sites):
         )
 
     assert package_sites(is_barrier) == {("session.py", "evaluate_once")}
+
+
+def _ngrams_py(toks, n):
+    """Python reference: every sliding n-token window, space-joined."""
+    toks = toks or []
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+@pytest.mark.parametrize("n", [2, 3, 8])
+def test_ngrams_matches_python_reference(spark, n):
+    """NULL, [''] and arrays of n-1, n and n+1 tokens: ``ngrams`` gives
+    the Python windows, empty below n tokens (never the descending
+    ``sequence`` phantoms)."""
+    cases = [None, [""]] + [
+        [f"w{j}" for j in range(m)] for m in (n - 1, n, n + 1)
+    ]
+    df = spark.createDataFrame(
+        list(enumerate(cases)), "i int, t array<string>"
+    )
+    got = {
+        r["i"]: r["g"]
+        for r in df.select("i", ngrams(F.col("t"), n).alias("g")).collect()
+    }
+    assert got == {i: _ngrams_py(t, n) for i, t in enumerate(cases)}

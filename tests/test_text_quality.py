@@ -23,17 +23,16 @@ class TestTrigrams:
         # sequence(1, n) DESCENDS for n < 1 — the guard must catch
         # 0-, 1- and 2-token docs.
         from dataengineer_job_scraper_etl_spark.functions.strings import (
+            ngrams,
             ws_tokens,
         )
-        from dataengineer_job_scraper_etl_spark.queries.text import _trigrams
 
         df = _docs_df(spark, ["", "one", "one two", "one two three four"])
         got = {
             r["doc_id"]: r["g"]
-            for r in df.select(
-                "doc_id",
-                _trigrams(ws_tokens(F.col("text"))).alias("g"),
-            ).collect()
+            for r in df.select("doc_id", ws_tokens(F.col("text")).alias("t"))
+            .select("doc_id", ngrams(F.col("t"), 3).alias("g"))
+            .collect()
         }
         assert got[1] == []
         assert got[2] == []

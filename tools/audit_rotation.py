@@ -23,7 +23,7 @@ repo root and prints a ready-to-paste 50-entry schedule:
    DEFINING module + any operators/ modules the function imports
    differs from tools/audit_source_hashes.json (ADVICE r9 #2: the
    defining-module text catches edits to shared module-level helpers
-   like _trim_covered_runs that the fn-source hash misses),
+   like spans.trim_runs that the fn-source hash misses),
 4. everything else by last-audit round, oldest first.
 
 The ledger is (re)written on every run: each scheduled entry's hash is
@@ -79,7 +79,7 @@ _OPS_DIR = os.path.join(REPO, "dataengineer_job_scraper_etl_spark", "operators")
 # as the round's FIRST commit, before any engine edit.
 #   v1 (r9): fn source + oracle SQL + imported operators/ modules.
 #   v2 (r10): + the entry's DEFINING module text (ADVICE r9 #2 —
-#        module-level helpers like _trim_covered_runs / oracle
+#        module-level helpers like spans.trim_runs / oracle
 #        builders are shared by entries whose own fn body never
 #        moves).
 #   v3 (r12): all Python texts normalized to their token stream with
